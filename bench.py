@@ -224,7 +224,6 @@ def _build_path_benches(spark, sf_dir: str) -> tuple[dict[str, float], int]:
     from pyspark.sql import functions as F
 
     from cs_tutorial_reporting_spark.operators.similarity import (
-        append_to_ivfpq_layout,
         build_ivf_centroids,
         build_residual_pq_codebooks,
         write_ivfpq_partitioned,
@@ -262,7 +261,7 @@ def _build_path_benches(spark, sf_dir: str) -> tuple[dict[str, float], int]:
         clean_w = clean_w or _rep_clean(st0, _steal_jiffies(), tw)
         st0 = _steal_jiffies()
         t0 = time.perf_counter()
-        append_to_ivfpq_layout(batch, path, cents, books)
+        write_ivfpq_partitioned(batch, path, cents, books, mode="append")
         ta = time.perf_counter() - t0
         best_a = min(best_a, ta)
         clean_a = clean_a or _rep_clean(st0, _steal_jiffies(), ta)

@@ -1145,7 +1145,7 @@ def _semdedup_pairs_arrow(v: DataFrame, dim: int, threshold: float) -> DataFrame
     join semantics; the bitwise-equality pytest carries null-label
     rows to hold it.
     """
-    from .similarity import _cos_grid, _row_block
+    from .similarity import _cos_grid, _row_block, _seq_norms
 
     out_schema = "id_a long, id_b long, __raw double"
 
@@ -1157,10 +1157,7 @@ def _semdedup_pairs_arrow(v: DataFrame, dim: int, threshold: float) -> DataFrame
             )
         ids = pdf["__id"].to_numpy(dtype="int64")
         mat = np.stack([np.asarray(x, dtype="float64") for x in pdf["__v"]])
-        nrm = np.zeros(n)
-        for d in range(dim):  # sequential: mirrors dot_flat(v, v)
-            nrm += mat[:, d] * mat[:, d]
-        nrm = np.sqrt(nrm)
+        nrm = _seq_norms(mat, dim)  # mirrors dot_flat(v, v)
         parts = []
         block = _row_block(n)
         for lo in range(0, n, block):
@@ -1530,7 +1527,7 @@ def lsh_band_funnel(
 # ---------------------------------------------------------------------------
 # Persisted MinHash band index (VERDICT r6 next-round #3): the dedup
 # twin of the ANN partitioned layout (similarity.py::
-# write_ivfpq_partitioned / append_to_ivfpq_layout / ivfpq_topk_pruned).
+# write_ivfpq_partitioned and ivfpq_topk(encoded=...)).
 # minhash_lsh_pairs_incremental has the right PROBE SHAPE (|new| ×
 # bucket) but recomputes the corpus signatures every run; these three
 # functions persist them so a crawl batch pays O(batch), never
@@ -1759,20 +1756,20 @@ def write_band_index(
 
     Layout: FLAT by default; pass ``buckets=N`` for the
     PARTITION-PRUNED layout (the IVF-probe pattern,
-    similarity.py::ivfpq_topk_pruned) — bands/counts partitioned by a
-    band-hash bucket, shingles by an id-hash bucket, so a probe's
-    bounded bucket-list collect lets PartitionFilters prune index
-    FILES before any scan (plan-pinned in test_plans.py). Choose by
-    the measured trade at BAND_INDEX_BUCKETS: pruning wins only at
+    similarity.py::ivfpq_topk(encoded=...)) — bands/counts
+    partitioned by a band-hash bucket, shingles by an id-hash bucket,
+    so a probe's bounded bucket-list collect lets PartitionFilters
+    prune index FILES before any scan (plan-pinned in test_plans.py).
+    Choose by the measured trade at BAND_INDEX_BUCKETS: pruning wins only at
     production bucket counts where a batch's keys cover a small
     fraction of buckets. Parameters (num_hashes, band_size,
     shingle_n, and the bucket count — persisted in _index_meta.json)
     are the frozen index contract — appends must match and probes
     auto-detect (cf. the frozen-quantizer contract of
-    append_to_ivfpq_layout). The meta/fence sidecars use driver-local
-    file IO: the harness indexes live on local disk; an object-store
-    deployment replaces them with a conditional put (same contract as
-    sources/versioned.py's pointer files)."""
+    write_ivfpq_partitioned(mode="append")). The meta/fence sidecars
+    use driver-local file IO: the harness indexes live on local disk;
+    an object-store deployment replaces them with a conditional put
+    (same contract as sources/versioned.py's pointer files)."""
     sh_df, bands = _shingle_band_frames(
         df, text_col, id_col, num_hashes, band_size, shingle_n
     )

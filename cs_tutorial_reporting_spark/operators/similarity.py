@@ -1,21 +1,32 @@
 """[EXT] Similarity search over embedding columns (``array<float>``).
 
-Two paths:
+Every top-k operator here has one probe → score → rank shape:
 
-- **Brute-force cosine top-k** — exact baseline: query-set × corpus
-  join, cosine via zip_with/aggregate (JVM, codegen), window top-k.
-  The corpus scan shuffles once for the window; the query side is
-  broadcast. Right answer at any scale where #queries is modest.
-- **Random-hyperplane LSH buckets** — the scale path: each vector maps
-  to a bucket id from the signs of k fixed hyperplane projections;
-  candidate pairs share buckets (multi-probe = also adjacent buckets).
-  Hyperplanes are generated from a seeded hash of (plane, dim) so they
-  are deterministic, reproducible cluster-wide, and need no driver-side
-  randomness or broadcast variable.
+- **probe** turns the corpus into candidate (query, vector) pairs: a
+  broadcast cross join (``brute_force_topk``, ``pq_topk``), an
+  equi-join on a hyperplane-LSH bucket (``lsh_topk``) or on an IVF cell
+  (``ivf_topk``, ``ivfpq_topk``), a candidate list (``rerank_topk``),
+  or the Arrow all-pairs generator (``self_knn_topk_arrow``,
+  ``allpairs_threshold_arrow``);
+- **score** is one expression per pair — a flat dot/cosine fold over
+  float vectors, or an ADC lookup sum over PQ codes — rounded to 6
+  places;
+- **rank** is :func:`_rank_topk`: ``row_number`` per query over
+  (score desc, id asc), so every operator breaks ties the same way.
 
-At 100 TB: brute force is O(Q·N·d) — bounded by broadcasting Q;
-IVF/LSH prunes N to the probed buckets. Both paths avoid Python row
-loops entirely.
+The indexed operators take their corpus from one of three sources:
+inline (derived from ``emb`` on every call), a pre-built frame
+(``bucketed=``, ``encoded=``, ``assigned=``; typically persisted at
+ingest), or a partitioned layout read back with ``spark.read.parquet``
+(written by ``write_ivf_partitioned`` / ``write_ivfpq_partitioned``),
+where the cell join key is a partition column and a probe becomes
+partition pruning. The three sources give identical results.
+
+At 100 TB: brute force is O(Q·N·d), bounded by broadcasting Q; LSH and
+IVF prune N to the probed buckets, PQ compresses what is scanned.
+Python work is confined to Arrow batch UDFs (corpus encoders, query
+probes and LUTs) and the Arrow all-pairs scorers — no Python row loop
+over the corpus.
 """
 
 from __future__ import annotations
@@ -25,6 +36,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine, cosine_flat, dot, dot_flat
 
@@ -132,6 +144,31 @@ def _assert_nonzero_norms(nrm: np.ndarray, ids: np.ndarray) -> None:
         )
 
 
+def _seq_norms(mat: np.ndarray, dim: int) -> np.ndarray:
+    """Row L2 norms accumulated like the JVM fold's Σa² term: float64,
+    SEQUENTIAL over ascending ``d`` (NumPy's pairwise-summed ``.sum()``
+    would differ in the last ulp), then one ``sqrt``."""
+    nrm = np.zeros(mat.shape[0])
+    for d in range(dim):
+        nrm += mat[:, d] * mat[:, d]
+    return np.sqrt(nrm)
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, score_col: str, query_id_col: str, id_col: str
+) -> DataFrame:
+    """The rank step every top-k operator ends in: ``rank`` =
+    ``row_number`` per query over (score desc, id asc), kept while
+    ``rank <= k`` — one window shuffle, and one tie-break shared by
+    construction across every operator and its DuckDB oracle."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col(score_col).desc(), F.col(id_col).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -154,8 +191,6 @@ def brute_force_topk(
     caller should; omitting it keeps the dimension-agnostic nested
     JVM fold.
     """
-    from pyspark.sql.window import Window
-
     if dim is not None:
         sim = (dot_flat if assume_normalized else cosine_flat)(
             vec_col, query_vec_col, dim
@@ -163,19 +198,73 @@ def brute_force_topk(
     else:
         sim_fn = dot if assume_normalized else cosine
         sim = sim_fn(F.col(vec_col), F.col(query_vec_col))
-    pairs = emb.crossJoin(F.broadcast(queries))
-    scored = pairs.select(
+    scored = emb.crossJoin(F.broadcast(queries)).select(
         F.col(query_id_col),
         F.col(id_col),
         F.round(sim, 6).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k, "cos", query_id_col, id_col)
+
+
+def _arrow_candidates(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    keep,
+    row_col: str,
+    query_col: str,
+) -> DataFrame:
+    """Candidate generator shared by the Arrow all-pairs scorers: every
+    vector of ``emb`` is both a corpus row and a query.
+
+    The query matrix is collected driver-side (n·dim doubles — the
+    exact all-pairs form is the vector-thousands baseline; the 100 TB
+    paths are the LSH/IVF operators), its norms are folded by
+    :func:`_seq_norms` and checked non-zero, and it ships to workers
+    via ``SparkContext.broadcast`` (one torrent transfer per executor,
+    not one pickled closure copy per task). The corpus streams through
+    mapInPandas in blocks of ``_row_block(n)`` rows, so the transient
+    (rows × n) score grid stays within ``_ROW_BLOCK_DOUBLES`` doubles
+    whatever the Arrow batch size; shuffle carries only kept cells,
+    never the n² grid. Each block is scored by :func:`_cos_grid` and
+    emits the cells where ``keep(cos, row_ids, query_ids)`` holds as
+    (``row_col``, ``query_col``, ``__raw``) rows; an empty ``emb``
+    yields an empty frame of that schema."""
+    schema = f"{row_col} long, {query_col} long, __raw double"
+    rows = emb.select(id_col, vec_col).collect()
+    if not rows:
+        return emb.sparkSession.createDataFrame([], schema)
+    q_ids = np.array([r[0] for r in rows], dtype="int64")
+    q_mat = np.stack(
+        [np.asarray(r[1], dtype="float32") for r in rows]
+    ).astype("float64")
+    q_nrm = _seq_norms(q_mat, dim)
+    _assert_nonzero_norms(q_nrm, q_ids)
+    n_q = q_mat.shape[0]
+    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_nrm))
+    block = _row_block(n_q)
+
+    def score_batches(batches):
+        b_ids, b_mat, b_nrm = bc.value
+        for pdf in batches:
+            for lo in range(0, len(pdf), block):
+                chunk = pdf.iloc[lo : lo + block]
+                if not len(chunk):
+                    continue
+                ids = chunk[id_col].to_numpy(dtype="int64")
+                mat = np.stack(
+                    [np.asarray(v, dtype="float32") for v in chunk[vec_col]]
+                ).astype("float64")
+                cos = _cos_grid(mat, _seq_norms(mat, dim), b_mat, b_nrm, dim)
+                bi, qi = np.nonzero(keep(cos, ids, b_ids))
+                yield pd.DataFrame(
+                    {row_col: ids[bi], query_col: b_ids[qi], "__raw": cos[bi, qi]}
+                )
+
+    return _fan_out_corpus(
+        emb.select(id_col, vec_col), id_col, n_q
+    ).mapInPandas(score_batches, schema)
 
 
 def self_knn_topk_arrow(
@@ -189,7 +278,8 @@ def self_knn_topk_arrow(
     matmul instead of a 25M-row crossJoin — BIT-IDENTICAL output to
     ``brute_force_topk(emb, emb-as-queries, k, dim=dim)``
     (pytest-pinned), ~20× faster at harness sf0.1 because the per-pair
-    work moves from a per-ROW Catalyst fold into NumPy batch loops.
+    work moves from a per-ROW Catalyst fold into NumPy batch loops
+    (:func:`_arrow_candidates`).
 
     Exact-arithmetic contract: cosine must match the JVM
     ``cosine_flat`` fold bitwise, so every accumulation is replicated
@@ -199,103 +289,36 @@ def self_knn_topk_arrow(
     and flip ``round(cos, 6)`` on knife-edge values), then
     ``dot / (sqrt(na) * sqrt(nb))`` with the same two roundings.
 
-    Exact-selection contract: each Arrow batch forwards, per query,
-    every row whose raw cos is within 2e-6 of the batch's k-th best
+    Exact-selection contract: each row block forwards, per query,
+    every row whose raw cos is within 2e-6 of the block's k-th best
     (raw ordering). A dropped row r has cos_r < kth − 2e-6, so
     round(cos_r) ≤ cos_r + 5e-7 < kth − 5e-7 ≤ round(kth): at least k
-    forwarded batch rows strictly beat r on the ROUNDED key, hence r
-    can never reach the global rounded top-k regardless of id
-    tie-breaks. The final round + window ranking is the same Spark
-    code path as brute_force_topk, so ordering semantics (HALF_UP
+    forwarded rows of the SAME block strictly beat r on the ROUNDED
+    key, hence r can never reach the global rounded top-k regardless
+    of id tie-breaks. The final round + :func:`_rank_topk` is the same
+    Spark code path as brute_force_topk, so ordering semantics (HALF_UP
     round, id tie-break) are shared by construction, not re-derived.
 
-    Scale contract: the query matrix is collected driver-side
-    (n·dim doubles — the all-pairs exact baseline is only run at
-    vector-thousands scale; the 100 TB path feeds LSH/IVF candidates
-    into the SAME downstream, tests/test_ext_operators.py); the
-    corpus streams through mapInPandas, shuffle carries only
-    batch-top-k candidate rows (#batches × n_q × ~k), never the n²
-    pair grid. The query matrix ships to workers via
-    ``SparkContext.broadcast`` (one torrent transfer per executor,
-    not one pickled closure copy per task), and per-batch temporaries
-    are chunked to ≤ ``_ROW_BLOCK_DOUBLES`` doubles so the transient
-    (rows × n_q) score grid stays ~64 MB regardless of Arrow batch
-    size (ADVICE r8).
-
-    Input contract (ADVICE r8): every vector must have non-zero norm
-    — zero norms make cosine NaN, and NaN ordering DIVERGES between
-    this path (NumPy comparisons drop NaN) and the JVM crossJoin fold
-    (Spark sorts NaN greatest), silently breaking bit-identity. Raises
-    ``ValueError`` up front instead.
+    Input contract: every vector must have non-zero norm — zero norms
+    make cosine NaN, and NaN ordering DIVERGES between this path
+    (NumPy comparisons drop NaN) and the JVM crossJoin fold (Spark
+    sorts NaN greatest), silently breaking bit-identity. Raises
+    ``ValueError`` up front instead. An empty ``emb`` returns an empty
+    (query_id, id, cos, rank) frame.
     """
-    from pyspark.sql.window import Window
 
-    rows = emb.select(id_col, vec_col).collect()
-    if not rows:
-        return emb.sparkSession.createDataFrame(
-            [], f"query_id long, {id_col} long, cos double, rank int"
-        )
-    q_ids = np.array([r[0] for r in rows], dtype="int64")
-    q_mat = np.stack(
-        [np.asarray(r[1], dtype="float32") for r in rows]
-    ).astype("float64")
-    n_q = q_mat.shape[0]
-    # query norms: same sequential fold as cosine_flat's Σa² term
-    q_nrm = np.zeros(n_q)
-    for d in range(dim):
-        q_nrm += q_mat[:, d] * q_mat[:, d]
-    q_nrm = np.sqrt(q_nrm)
-    _assert_nonzero_norms(q_nrm, q_ids)
-    kth = min(k, n_q) - 1
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_nrm))
-    block = _row_block(n_q)
+    def keep(cos, ids, q_ids):
+        kth = min(k, cos.shape[1]) - 1
+        if cos.shape[0] <= kth + 1:
+            return np.ones_like(cos, dtype=bool)
+        thresh = -np.partition(-cos, kth, axis=0)[kth, :] - 2e-6
+        return cos >= thresh[None, :]
 
-    def score_batches(batches):
-        b_ids, b_mat, b_nrm = bc.value
-        for pdf in batches:
-            for lo in range(0, len(pdf), block):
-                chunk = pdf.iloc[lo : lo + block]
-                if not len(chunk):
-                    continue
-                ids = chunk[id_col].to_numpy(dtype="int64")
-                mat = np.stack(
-                    [np.asarray(v, dtype="float32") for v in chunk[vec_col]]
-                ).astype("float64")
-                b = mat.shape[0]
-                nrm = np.zeros(b)
-                for d in range(dim):  # sequential: mirrors the JVM fold
-                    nrm += mat[:, d] * mat[:, d]
-                cos = _cos_grid(mat, np.sqrt(nrm), b_mat, b_nrm, dim)
-                # per query (column): forward rows within 2e-6 of the
-                # chunk k-th best raw cos (docstring exactness proof —
-                # the ≥k strictly-better witnesses live in the SAME
-                # chunk, so per-chunk thresholds stay sound)
-                if b > kth + 1:
-                    thresh = -np.partition(-cos, kth, axis=0)[kth, :] - 2e-6
-                    keep = cos >= thresh[None, :]
-                else:
-                    keep = np.ones_like(cos, dtype=bool)
-                bi, qi = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "query_id": b_ids[qi],
-                        id_col: ids[bi],
-                        "__raw": cos[bi, qi],
-                    }
-                )
-
-    cand = _fan_out_corpus(
-        emb.select(id_col, vec_col), id_col, n_q
-    ).mapInPandas(score_batches, f"query_id long, {id_col} long, __raw double")
+    cand = _arrow_candidates(emb, id_col, vec_col, dim, keep, id_col, "query_id")
     scored = cand.select(
         "query_id", id_col, F.round(F.col("__raw"), 6).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, k, "cos", "query_id", id_col)
 
 
 def allpairs_threshold_arrow(
@@ -309,76 +332,25 @@ def allpairs_threshold_arrow(
     threshold) as an Arrow matmul — BIT-IDENTICAL to
     ``embedding_near_dup_pairs(..., n_planes=0)``'s crossJoin + JVM
     fold (pytest-pinned) without materializing the n² pair rows.
-    Same exact-arithmetic recipe as :func:`self_knn_topk_arrow`
-    (sequential per-dimension IEEE accumulation mirroring
-    cosine_flat); candidate forwarding keeps every pair with raw
-    cos ≥ threshold − 1e-6 (if round(cos) ≥ threshold then
+    Same generator and exact-arithmetic recipe as
+    :func:`self_knn_topk_arrow`; candidate forwarding keeps every pair
+    with raw cos ≥ threshold − 1e-6 (if round(cos) ≥ threshold then
     cos ≥ threshold − 5e-7, so no qualifying pair can be dropped),
     and the authoritative ``F.round(...) ≥ threshold`` filter runs
     Spark-side exactly as the crossJoin path's. Each unordered pair
-    is emitted once: every vector streams through as a batch row
-    exactly once and emits only against larger corpus ids.
+    is emitted once: every vector streams through as a block row
+    exactly once and emits only against larger query ids.
 
     Scale contract: the exact all-pairs form is the declared
     vector-thousands baseline (the 100 TB path is the LSH-bucketed
-    ``embedding_near_dup_pairs(n_planes>0)``); within that contract
-    this path moves the O(n²) work from per-row Catalyst eval into
-    NumPy batches and ships only above-threshold pairs.
-
-    Same ADVICE-r8 hardening as :func:`self_knn_topk_arrow`: empty
-    input returns an empty frame, zero-norm vectors raise up front
-    (NaN ordering diverges between NumPy and the JVM fold), the query
-    matrix is a ``SparkContext.broadcast``, and score grids are
-    chunked to a bounded row block."""
-    rows = emb.select(id_col, vec_col).collect()
-    if not rows:
-        return emb.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cos double"
-        )
-    q_ids = np.array([r[0] for r in rows], dtype="int64")
-    q_mat = np.stack(
-        [np.asarray(r[1], dtype="float32") for r in rows]
-    ).astype("float64")
-    n_q = q_mat.shape[0]
-    q_nrm = np.zeros(n_q)
-    for d in range(dim):
-        q_nrm += q_mat[:, d] * q_mat[:, d]
-    q_nrm = np.sqrt(q_nrm)
-    _assert_nonzero_norms(q_nrm, q_ids)
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_nrm))
-    block = _row_block(n_q)
-
-    def score_batches(batches):
-        b_ids, b_mat, b_nrm = bc.value
-        for pdf in batches:
-            for lo in range(0, len(pdf), block):
-                chunk = pdf.iloc[lo : lo + block]
-                if not len(chunk):
-                    continue
-                ids = chunk[id_col].to_numpy(dtype="int64")
-                mat = np.stack(
-                    [np.asarray(v, dtype="float32") for v in chunk[vec_col]]
-                ).astype("float64")
-                b = mat.shape[0]
-                nrm = np.zeros(b)
-                for d in range(dim):  # sequential: mirrors the JVM fold
-                    nrm += mat[:, d] * mat[:, d]
-                cos = _cos_grid(mat, np.sqrt(nrm), b_mat, b_nrm, dim)
-                keep = (cos >= threshold - 1e-6) & (
-                    ids[:, None] < b_ids[None, :]
-                )
-                bi, qi = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "id_a": ids[bi],
-                        "id_b": b_ids[qi],
-                        "__raw": cos[bi, qi],
-                    }
-                )
-
-    cand = _fan_out_corpus(
-        emb.select(id_col, vec_col), id_col, n_q
-    ).mapInPandas(score_batches, "id_a long, id_b long, __raw double")
+    ``embedding_near_dup_pairs(n_planes>0)``). Empty input returns an
+    empty frame; zero-norm vectors raise up front."""
+    cand = _arrow_candidates(
+        emb, id_col, vec_col, dim,
+        lambda cos, ids, q_ids: (cos >= threshold - 1e-6)
+        & (ids[:, None] < q_ids[None, :]),
+        "id_a", "id_b",
+    )
     return (
         cand.withColumn("cos", F.round(F.col("__raw"), 6))
         .filter(F.col("cos") >= threshold)
@@ -484,8 +456,6 @@ def lsh_topk(
     with the SAME (n_planes, dim). Like the IVF layout and the
     near-dup index, an LSH index is built once at ingest and probed
     many times; passing it skips re-projecting the corpus per query."""
-    from pyspark.sql.window import Window
-
     if n_probes is None:
         n_probes = n_planes + 1
     e = (
@@ -507,12 +477,7 @@ def lsh_topk(
         F.col(id_col),
         F.round(dot_flat(vec_col, query_vec_col, dim), 6).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, k, "cos", query_id_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -524,10 +489,8 @@ def _nearest_cell_udf(centroids: list[list[float]]):
     """Arrow-vectorized nearest-centroid assignment: one batch matmul
     ``(n×d) @ (d×k)`` + argmax (first max on ties — the same rule as
     ``array_position(dots, array_max(dots))`` and the oracle's
-    ``ORDER BY d DESC, c``). Returns a 1-based cell id column factory.
-    Corpus-side twin of the query-side ``_probe_cells`` SQL: the corpus
-    is millions of rows (vectorize through Arrow), the probe side is a
-    handful of queries (keep relational so partition pruning sees it)."""
+    ``ORDER BY d DESC, c``). Returns a 1-based cell id column factory —
+    the corpus-side twin of the query-side :func:`_probe_cells_udf`."""
     C = np.array(centroids, dtype="float64").T  # d×k
 
     @F.pandas_udf("long")
@@ -541,26 +504,30 @@ def _nearest_cell_udf(centroids: list[list[float]]):
 
 
 def _probe_cells_udf(centroids: list[list[float]], n_probes: int):
-    """array<bigint> of the ``n_probes`` nearest-centroid cell ids
-    (1-based), by descending ⟨vec, cᵢ⟩ with index tie-break
-    (``np.lexsort`` keys (idx, −dot) — the oracle's ``ORDER BY d DESC,
-    c``). Arrow-vectorized like ``_nearest_cell_udf``; the query side
-    is a handful of rows, but keeping the column UDF-built (rather than
-    a k×d unrolled SQL expression) matters for DRIVER time — Catalyst
-    analysis of the unrolled tree measured ~1.7 s per query build
-    (BASELINE.md round-5 note), dwarfing execution."""
+    """array<struct<c:bigint, d:double>>: each query's ``n_probes``
+    nearest-centroid cells ``c`` (1-based), by descending ⟨q, cᵢ⟩ with
+    index tie-break (``np.lexsort`` keys (idx, −dot) — the oracle's
+    ``ORDER BY d DESC, c``), each carrying its dot ``d`` = ⟨q, c⟩.
+    IVF-Flat reads only ``c``; residual IVF-PQ adds ``d`` back to the
+    ADC sum. Arrow-vectorized like ``_nearest_cell_udf``; the query
+    side is a handful of rows, but keeping the column UDF-built (rather
+    than a k×d unrolled SQL expression) matters for DRIVER time —
+    Catalyst analysis of the unrolled tree measured ~1.7 s per query
+    build (BASELINE.md round-5 note), dwarfing execution."""
     C = np.array(centroids, dtype="float64").T  # d×k
 
-    @F.pandas_udf("array<long>")
+    @F.pandas_udf("array<struct<c:long, d:double>>")
     def _probes(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype="object")
         dots = np.stack(v.to_numpy()).astype("float64") @ C
-        out = []
         idx = np.arange(dots.shape[1], dtype="int64")
+        out = []
         for row in dots:
             order = np.lexsort((idx, -row))[:n_probes]
-            out.append((order + 1).astype("int64"))
+            out.append(
+                [{"c": int(c) + 1, "d": float(row[c])} for c in order]
+            )
         return pd.Series(out)
 
     return _probes
@@ -618,53 +585,19 @@ def write_ivf_partitioned(
     vec_col: str = "embedding",
 ) -> None:
     """Ingest-time IVF layout: assign each vector to its nearest
-    centroid and write the corpus parquet PARTITIONED BY cell. This is
-    the 100 TB story the inline ``ivf_topk`` documents: once the data
-    lives partitioned by cell, a probe is *partition pruning* — the
-    scan reads ``n_probes/n_centroids`` of the files and never touches
-    the rest (asserted via PartitionFilters in tests/test_plans.py)."""
+    centroid and write the corpus parquet PARTITIONED BY cell. Read it
+    back as ``ivf_topk(..., assigned=spark.read.parquet(path))``: the
+    cell join key is then a partition column, so a probe is *partition
+    pruning* — the scan reads ``n_probes/n_centroids`` of the files and
+    never touches the rest (asserted via PartitionFilters in
+    tests/test_plans.py)."""
     emb.select(
         id_col, vec_col, _nearest_cell_udf(centroids)(F.col(vec_col)).alias("__cell")
     ).write.mode("overwrite").partitionBy("__cell").parquet(path)
 
 
-def ivf_topk_pruned(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    n_probes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Query side of the partitioned IVF index: the probe-cell join key
-    is a PARTITION column, so Catalyst turns the bucket equi-join into
-    dynamic partition pruning / partition filters — only the probed
-    cells' files are read. Results are identical to ``ivf_topk`` with
-    the same codebook (pinned in tests)."""
-    from pyspark.sql.window import Window
-
-    e = spark.read.parquet(path)
-    dim = len(centroids[0])
-    q = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(_probe_cells_udf(centroids, n_probes)(F.col(query_vec_col))).alias("__cell"),
-    )
-    scored = e.join(F.broadcast(q), "__cell").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(dot_flat(vec_col, query_vec_col, dim), 6).alias("cos"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def ivf_topk(
-    emb: DataFrame,
+    emb: DataFrame | None,
     queries: DataFrame,
     k: int = 10,
     n_centroids: int = 16,
@@ -674,38 +607,39 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
+    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF coarse quantizer: corpus vectors are
     bucketed by nearest centroid; each query scores only the ``n_probes``
     closest cells. Exactness oracle is ``brute_force_topk``.
 
-    At 100 TB the assignment column is computed once at ingest and the
-    corpus is written partitioned/bucketed by ``__cell``, so a query
-    reads ``n_probes/n_centroids`` of the data with partition pruning —
-    this function re-derives the assignment inline for self-containment.
-    """
-    from pyspark.sql.window import Window
-
+    ``assigned``: the corpus already carrying its ``__cell`` column
+    (id, vector, ``__cell``), built with the same ``centroids`` —
+    typically ``spark.read.parquet`` of a :func:`write_ivf_partitioned`
+    layout, where the probe join becomes dynamic partition pruning and
+    only the probed cells' files are read. ``emb`` is then unused.
+    Without it the assignment is derived from ``emb`` inline; both
+    sources give identical results (pinned in tests)."""
     if centroids is None:
         centroids = build_ivf_centroids(emb, n_centroids, id_col, vec_col)
     dim = len(centroids[0])
-    e = emb.select(
-        id_col, vec_col, _nearest_cell_udf(centroids)(F.col(vec_col)).alias("__cell")
+    e = (
+        assigned
+        if assigned is not None
+        else emb.select(
+            id_col, vec_col, _nearest_cell_udf(centroids)(F.col(vec_col)).alias("__cell")
+        )
     )
-    # probe cells = indices of the n_probes largest centroid dots
-    # (lambda-free struct sort — see _probe_cells)
+    probes = _probe_cells_udf(centroids, n_probes)(F.col(query_vec_col))
     q = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(_probe_cells_udf(centroids, n_probes)(F.col(query_vec_col))).alias("__cell"),
+        query_id_col, query_vec_col, F.explode(probes.getField("c")).alias("__cell")
     )
     scored = e.join(F.broadcast(q), "__cell").select(
         F.col(query_id_col),
         F.col(id_col),
         F.round(dot_flat(vec_col, query_vec_col, dim), 6).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k, "cos", query_id_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -852,8 +786,6 @@ def pq_topk(
     Pass ``encoded`` (a ``pq_encode`` result, materialized at ingest)
     to search the compressed table directly — the 100 TB shape, where
     encoding happens once per corpus, not once per query."""
-    from pyspark.sql.window import Window
-
     if codebooks is None:
         codebooks = build_pq_codebooks(emb, m, ks, id_col, vec_col)
     e = encoded if encoded is not None else pq_encode(emb, codebooks, id_col, vec_col)
@@ -864,12 +796,7 @@ def pq_topk(
     scored = e.crossJoin(F.broadcast(q)).select(
         F.col(query_id_col), F.col(id_col), F.round(score, 6).alias("score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, k, "score", query_id_col, id_col)
 
 
 def write_ivfpq_partitioned(
@@ -879,91 +806,29 @@ def write_ivfpq_partitioned(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    mode: str = "overwrite",
 ) -> None:
     """Ingest-time residual IVF-PQ layout: the corpus is written as
     (id, codes) parquet PARTITIONED BY cell — the compressed
-    billion-vector layout on disk. A probe then reads
-    ``n_probes/n_centroids`` of the FILES (partition pruning) and each
-    file holds m-byte codes instead of d×4-byte floats, so the scan
-    cost drops multiplicatively: pruning × compression. Float vectors
-    stay in cold storage for optional exact re-ranking
-    (:func:`rerank_topk`)."""
-    enc = _residual_encode_udf(centroids, codebooks)(F.col(vec_col))
-    emb.select(
-        F.col(id_col),
-        enc.getField("cell").alias("__cell"),
-        enc.getField("codes").alias("codes"),
-    ).write.mode("overwrite").partitionBy("__cell").parquet(path)
+    billion-vector layout on disk. Read it back as
+    ``ivfpq_topk(..., residual=True, encoded=spark.read.parquet(path))``:
+    a probe then reads ``n_probes/n_centroids`` of the FILES (partition
+    pruning) and each file holds m-byte codes instead of d×4-byte
+    floats, so the scan cost drops multiplicatively: pruning ×
+    compression. Float vectors stay in cold storage for optional exact
+    re-ranking (:func:`rerank_topk`).
 
-
-def append_to_ivfpq_layout(
-    new_vecs: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental index maintenance: encode a NEW batch with the
-    existing (frozen) quantizers and APPEND into the partitioned
-    layout — existing cell files are untouched (append creates new
-    files inside each affected leaf), so a day's arrivals cost a
-    day's encode, never a rebuild. This is the ANN twin of the
-    engine's incremental-load contract (watermark → delta → append);
-    codebook drift over many appends is a re-train decision, not an
-    operational one — the layout stays queryable throughout."""
-    enc = _residual_encode_udf(centroids, codebooks)(F.col(vec_col))
-    new_vecs.select(
-        F.col(id_col),
-        enc.getField("cell").alias("__cell"),
-        enc.getField("codes").alias("codes"),
-    ).write.mode("append").partitionBy("__cell").parquet(path)
-
-
-def ivfpq_topk_pruned(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    n_probes: int = 4,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Query side of the partitioned residual IVF-PQ layout: the probe
-    join key is a PARTITION column, so only the probed cells' code
-    files are read (PartitionFilters pinned in tests), and scoring is
-    pure ADC over the compressed rows — no float vector is touched
-    anywhere on the query path. Results are identical to
-    ``ivfpq_topk(residual=True)`` with the same quantizers."""
-    from pyspark.sql.window import Window
-
-    e = spark.read.parquet(path)
-    probe = F.explode(
-        _probe_cells_dots_udf(centroids, n_probes)(F.col(query_vec_col))
-    ).alias("p")
-    q = queries.select(
-        F.col(query_id_col),
-        _pq_lut_udf(codebooks)(F.col(query_vec_col)).alias("lut"),
-        probe,
-    ).select(
-        query_id_col,
-        "lut",
-        F.col("p.c").alias("__cell"),
-        F.col("p.d").alias("__cell_dot"),
-    )
-    score = F.col("__cell_dot") + _adc_score("codes", "lut", len(codebooks))
-    scored = e.join(F.broadcast(q), "__cell").select(
-        F.col(query_id_col), F.col(id_col), F.round(score, 6).alias("score")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    ``mode="append"`` is incremental index maintenance: a NEW batch is
+    encoded with the existing (frozen) quantizers and appended — existing
+    cell files are untouched (append creates new files inside each
+    affected leaf), so a day's arrivals cost a day's encode, never a
+    rebuild. This is the ANN twin of the engine's incremental-load
+    contract (watermark → delta → append); codebook drift over many
+    appends is a re-train decision, not an operational one — the layout
+    stays queryable throughout."""
+    _residual_encode(emb, centroids, codebooks, id_col, vec_col).write.mode(
+        mode
+    ).partitionBy("__cell").parquet(path)
 
 
 def rerank_topk(
@@ -986,8 +851,6 @@ def rerank_topk(
     contains at least as many true neighbors (pytest-pinned).
     ``approx`` is any (query_id, vec_id) frame — typically
     ``ivfpq_topk(..., k=N)`` with N of 3-10× the final k."""
-    from pyspark.sql.window import Window
-
     cand = approx.select(query_id_col, id_col)
     withv = cand.join(emb.select(id_col, vec_col), id_col).join(
         F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col
@@ -997,12 +860,7 @@ def rerank_topk(
         F.col(id_col),
         F.round(dot_flat(vec_col, query_vec_col, dim), 6).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, k, "cos", query_id_col, id_col)
 
 
 def refine_pq_codebooks(
@@ -1093,16 +951,19 @@ def build_residual_pq_codebooks(
     ]
 
 
-def _residual_encode_udf(
-    centroids: list[list[float]], codebooks: list[list[list[float]]]
-):
-    """Arrow-vectorized residual IVF-PQ encoder: per batch, one matmul
-    assigns cells (argmax ⟨v,cᵢ⟩, first max on ties), the assigned
-    centroid is subtracted, and the RESIDUAL is PQ-encoded per
-    subspace (argmin ‖r_sub − cb‖², first min on ties). Returns a
-    struct<cell:long, codes:array<long>> column factory — the (cell,
-    codes) pair is exactly what lives on disk at ingest in the
-    billion-vector layout."""
+def _residual_encode(
+    emb: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The residual IVF-PQ corpus (id, ``__cell``, codes) — exactly
+    what :func:`write_ivfpq_partitioned` puts on disk. One Arrow UDF
+    pass per batch: one matmul assigns cells (argmax ⟨v,cᵢ⟩, first max
+    on ties), the assigned centroid is subtracted, and the RESIDUAL is
+    PQ-encoded per subspace (argmin ‖r_sub − cb‖², first min on
+    ties)."""
     C = np.array(centroids, dtype="float64")  # k×d
     sub = len(codebooks[0][0])
     m = len(codebooks)
@@ -1127,35 +988,16 @@ def _residual_encode_udf(
             {"cell": (cells + 1).astype("int64"), "codes": list(codes)}
         )
 
-    return _enc
-
-
-def _probe_cells_dots_udf(centroids: list[list[float]], n_probes: int):
-    """Like ``_probe_cells_udf`` but each probe carries its centroid
-    dot: array<struct<c:bigint, d:double>> of the ``n_probes`` nearest
-    cells with ⟨q, cᵢ⟩ — the residual ADC score needs the per-cell
-    first-order term ⟨q,c⟩ added back to the LUT sum."""
-    C = np.array(centroids, dtype="float64").T  # d×k
-
-    @F.pandas_udf("array<struct<c:long, d:double>>")
-    def _probes(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype="object")
-        dots = np.stack(v.to_numpy()).astype("float64") @ C
-        idx = np.arange(dots.shape[1], dtype="int64")
-        out = []
-        for row in dots:
-            order = np.lexsort((idx, -row))[:n_probes]
-            out.append(
-                [{"c": int(c) + 1, "d": float(row[c])} for c in order]
-            )
-        return pd.Series(out)
-
-    return _probes
+    enc = _enc(F.col(vec_col))
+    return emb.select(
+        F.col(id_col),
+        enc.getField("cell").alias("__cell"),
+        enc.getField("codes").alias("codes"),
+    )
 
 
 def ivfpq_topk(
-    emb: DataFrame,
+    emb: DataFrame | None,
     queries: DataFrame,
     k: int = 10,
     n_probes: int = 4,
@@ -1166,6 +1008,7 @@ def ivfpq_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     residual: bool = False,
+    encoded: DataFrame | None = None,
 ) -> DataFrame:
     """The composed IVF-PQ layout — the standard billion-vector ANN
     shape: the IVF coarse quantizer prunes the corpus to the probed
@@ -1184,9 +1027,16 @@ def ivfpq_topk(
     ``build_residual_pq_codebooks``). Recall ordering
     (residual ≥ flat) is pytest-pinned; both variants are seeded and
     SQL-expressible, so both are hash-checkable relationally.
-    Exactness oracle: brute_force_topk."""
-    from pyspark.sql.window import Window
+    Exactness oracle: brute_force_topk.
 
+    ``encoded``: the corpus already in (id, ``__cell``, codes) form,
+    built with the same quantizers — typically ``spark.read.parquet``
+    of a :func:`write_ivfpq_partitioned` layout (with
+    ``residual=True``), where only the probed cells' code files are
+    read (PartitionFilters pinned in tests) and no float vector is
+    touched on the query path. ``emb`` is then unused. Without it the
+    codes are derived from ``emb`` inline; both sources give identical
+    results."""
     if centroids is None:
         centroids = build_ivf_centroids(emb, 16, id_col, vec_col, lloyd_iters=0)
     if codebooks is None:
@@ -1195,47 +1045,33 @@ def ivfpq_topk(
             if residual
             else build_pq_codebooks(emb, 8, 16, id_col, vec_col)
         )
-    if residual:
-        enc = _residual_encode_udf(centroids, codebooks)(F.col(vec_col))
-        e = emb.select(
-            F.col(id_col),
-            enc.getField("cell").alias("__cell"),
-            enc.getField("codes").alias("codes"),
-        )
-        probe = F.explode(
-            _probe_cells_dots_udf(centroids, n_probes)(F.col(query_vec_col))
-        ).alias("p")
-        q = queries.select(
-            F.col(query_id_col),
-            _pq_lut_udf(codebooks)(F.col(query_vec_col)).alias("lut"),
-            probe,
-        ).select(
-            query_id_col,
-            "lut",
-            F.col("p.c").alias("__cell"),
-            F.col("p.d").alias("__cell_dot"),
-        )
-        score = F.col("__cell_dot") + _adc_score("codes", "lut", len(codebooks))
+    if encoded is not None:
+        e = encoded
+    elif residual:
+        e = _residual_encode(emb, centroids, codebooks, id_col, vec_col)
     else:
         e = emb.select(
             F.col(id_col),
             _nearest_cell_udf(centroids)(F.col(vec_col)).alias("__cell"),
             _pq_codes_udf(codebooks)(F.col(vec_col)).alias("codes"),
         )
-        q = queries.select(
-            F.col(query_id_col),
-            _pq_lut_udf(codebooks)(F.col(query_vec_col)).alias("lut"),
-            F.explode(
-                _probe_cells_udf(centroids, n_probes)(F.col(query_vec_col))
-            ).alias("__cell"),
-        )
-        score = _adc_score("codes", "lut", len(codebooks))
+    probe = F.explode(
+        _probe_cells_udf(centroids, n_probes)(F.col(query_vec_col))
+    ).alias("p")
+    q = queries.select(
+        F.col(query_id_col),
+        _pq_lut_udf(codebooks)(F.col(query_vec_col)).alias("lut"),
+        probe,
+    ).select(
+        query_id_col,
+        "lut",
+        F.col("p.c").alias("__cell"),
+        F.col("p.d").alias("__cell_dot"),
+    )
+    score = _adc_score("codes", "lut", len(codebooks))
+    if residual:
+        score = F.col("__cell_dot") + score
     scored = e.join(F.broadcast(q), "__cell").select(
         F.col(query_id_col), F.col(id_col), F.round(score, 6).alias("score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(scored, k, "score", query_id_col, id_col)

@@ -744,6 +744,14 @@ def dedup_transitive_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _query_vecs(e: DataFrame) -> DataFrame:
+    """The ANN queries' probe set: the first 5 vectors (vec_id < 5) as
+    (query_id, query_vec) — the ``n_queries=5`` of every oracle below."""
+    return e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
 @register(
     "similarity_topk_bruteforce",
     oracle="""
@@ -767,9 +775,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import brute_force_topk
 
     e = t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = _query_vecs(e)
     out = brute_force_topk(e, q, k=10, dim=64)
     return out.select(
         "query_id", "vec_id", "cos", F.col("rank").cast("bigint").alias("rank")
@@ -838,9 +844,7 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__bkt", hyperplane_bucket("embedding", 6, 64)
         ).persist(StorageLevel.MEMORY_AND_DISK),
     )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = _query_vecs(e)
     out = lsh_topk(e, q, k=10, n_planes=6, bucketed=bucketed)
     return out.select(
         "query_id", "vec_id", "cos", F.col("rank").cast("bigint").alias("rank")
@@ -852,6 +856,18 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: charge index-build cost to every search (the build is itself
 #: deterministic, so caching changes nothing but wall time)
 _IVF_CODEBOOKS: dict[str, list[list[float]]] = {}
+
+
+def _ivf_centroids(sf_dir: str, e: DataFrame) -> list[list[float]]:
+    """The dataset's seed IVF codebook (16 cells, no Lloyd step — the
+    SQL-expressible build every IVF oracle replicates), built once."""
+    from .operators.similarity import build_ivf_centroids
+
+    if sf_dir not in _IVF_CODEBOOKS:
+        _IVF_CODEBOOKS[sf_dir] = build_ivf_centroids(
+            e, n_centroids=16, dim=64, lloyd_iters=0
+        )
+    return _IVF_CODEBOOKS[sf_dir]
 
 
 def _ivf_topk_oracle(n_centroids: int, n_probes: int, k: int, n_queries: int) -> str:
@@ -918,19 +934,12 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The seed codebook (smallest-md5 sample, no Lloyd step) is SQL-
     expressible, so the whole pipeline is hash-checked by the oracle;
     the Lloyd-refined variant's recall is pinned in pytest."""
-    from .operators.similarity import build_ivf_centroids, ivf_topk
+    from .operators.similarity import ivf_topk
 
     e = t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CODEBOOKS:
-        _IVF_CODEBOOKS[sf_dir] = build_ivf_centroids(
-            e, n_centroids=16, dim=64, lloyd_iters=0
-        )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     out = ivf_topk(
-        e, q, k=10, n_centroids=16, n_probes=4,
-        centroids=_IVF_CODEBOOKS[sf_dir],
+        e, _query_vecs(e), k=10, n_centroids=16, n_probes=4,
+        centroids=_ivf_centroids(sf_dir, e),
     )
     return out.select(
         "query_id", "vec_id", "cos", F.col("rank").cast("bigint").alias("rank")
@@ -946,35 +955,26 @@ _IVF_LAYOUTS: dict[str, str] = {}
 @register("similarity_topk_ivf_pruned", oracle=_ivf_topk_oracle(16, 4, 10, 5))
 def similarity_topk_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bucketed-at-ingest IVF story made real: the corpus is written
-    ONCE partitioned by nearest-centroid cell (write_ivf_partitioned),
-    and each query's probe cells become PartitionFilters — the scan
+    ONCE partitioned by nearest-centroid cell (write_ivf_partitioned)
+    and read back as ivf_topk's ``assigned`` corpus, so each query's
+    probe cells become PartitionFilters — the scan
     reads n_probes/n_centroids of the files and never touches the rest
     (pinned in tests/test_plans.py). Same seed codebook and therefore
     same oracle as similarity_topk_ivf; identical results, different
     (better) physical story at 100 TB."""
     import tempfile
 
-    from .operators.similarity import (
-        build_ivf_centroids,
-        ivf_topk_pruned,
-        write_ivf_partitioned,
-    )
+    from .operators.similarity import ivf_topk, write_ivf_partitioned
 
     e = t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CODEBOOKS:
-        _IVF_CODEBOOKS[sf_dir] = build_ivf_centroids(
-            e, n_centroids=16, dim=64, lloyd_iters=0
-        )
-    cents = _IVF_CODEBOOKS[sf_dir]
+    cents = _ivf_centroids(sf_dir, e)
     if sf_dir not in _IVF_LAYOUTS:
         path = tempfile.mkdtemp(prefix="ivf_layout_")
         write_ivf_partitioned(e, path, cents)
         _IVF_LAYOUTS[sf_dir] = path
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ivf_topk_pruned(
-        spark, _IVF_LAYOUTS[sf_dir], q, cents, k=10, n_probes=4
+    out = ivf_topk(
+        None, _query_vecs(e), k=10, n_probes=4, centroids=cents,
+        assigned=spark.read.parquet(_IVF_LAYOUTS[sf_dir]),
     )
     return out.select(
         "query_id", "vec_id", "cos", F.col("rank").cast("bigint").alias("rank")
@@ -2805,9 +2805,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     if sf_dir not in _PQ_CODEBOOKS:
         _PQ_CODEBOOKS[sf_dir] = build_pq_codebooks(e, m=8, ks=16, dim=64)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = _query_vecs(e)
     out = pq_topk(
         e, q, k=10,
         codebooks=_PQ_CODEBOOKS[sf_dir],
@@ -3028,29 +3026,13 @@ def similarity_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFram
     seeds are the md5-ranked rows AFTER the IVF seeds, so both builds
     stay seeded and SQL-expressible — the full residual pipeline is
     hash-checked relationally."""
-    from .operators.similarity import (
-        build_ivf_centroids,
-        build_residual_pq_codebooks,
-        ivfpq_topk,
-    )
+    from .operators.similarity import ivfpq_topk
 
     e = t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CODEBOOKS:
-        _IVF_CODEBOOKS[sf_dir] = build_ivf_centroids(
-            e, n_centroids=16, dim=64, lloyd_iters=0
-        )
-    rkey = sf_dir + "::residual"
-    if rkey not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[rkey] = build_residual_pq_codebooks(
-            e, _IVF_CODEBOOKS[sf_dir], m=8, ks=16, dim=64
-        )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    cents, cbs = _residual_quantizers(sf_dir, e)
     out = ivfpq_topk(
-        e, q, k=10, n_probes=4,
-        centroids=_IVF_CODEBOOKS[sf_dir], codebooks=_PQ_CODEBOOKS[rkey],
-        residual=True,
+        e, _query_vecs(e), k=10, n_probes=4,
+        centroids=cents, codebooks=cbs, residual=True,
     )
     return out.select(
         "query_id", "vec_id", "score", F.col("rank").cast("bigint").alias("rank")
@@ -3064,22 +3046,17 @@ def similarity_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFram
 _IVFPQ_LAYOUTS: dict[str, tuple[SparkSession, str]] = {}
 
 
-def _residual_quantizers(spark: SparkSession, sf_dir: str, e: DataFrame):
-    from .operators.similarity import (
-        build_ivf_centroids,
-        build_residual_pq_codebooks,
-    )
+def _residual_quantizers(sf_dir: str, e: DataFrame):
+    """The dataset's (IVF centroids, residual PQ codebooks), built once."""
+    from .operators.similarity import build_residual_pq_codebooks
 
-    if sf_dir not in _IVF_CODEBOOKS:
-        _IVF_CODEBOOKS[sf_dir] = build_ivf_centroids(
-            e, n_centroids=16, dim=64, lloyd_iters=0
-        )
+    cents = _ivf_centroids(sf_dir, e)
     rkey = sf_dir + "::residual"
     if rkey not in _PQ_CODEBOOKS:
         _PQ_CODEBOOKS[rkey] = build_residual_pq_codebooks(
-            e, _IVF_CODEBOOKS[sf_dir], m=8, ks=16, dim=64
+            e, cents, m=8, ks=16, dim=64
         )
-    return _IVF_CODEBOOKS[sf_dir], _PQ_CODEBOOKS[rkey]
+    return cents, _PQ_CODEBOOKS[rkey]
 
 
 @register(
@@ -3088,8 +3065,9 @@ def _residual_quantizers(spark: SparkSession, sf_dir: str, e: DataFrame):
 )
 def similarity_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The residual IVF-PQ layout written to DISK partitioned by cell
-    (operators/similarity.py write_ivfpq_partitioned) and probed via
-    partition pruning — the full billion-vector story on one query
+    (operators/similarity.py write_ivfpq_partitioned), read back as
+    ivfpq_topk's ``encoded`` corpus and probed via partition pruning —
+    the full billion-vector story on one query
     path: a probe reads n_probes/n_centroids of the FILES and each
     file holds m-byte codes, so scan cost drops pruning × compression;
     no float vector is touched at query time. Same quantizers and
@@ -3099,10 +3077,10 @@ def similarity_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .operators.similarity import ivfpq_topk_pruned, write_ivfpq_partitioned
+    from .operators.similarity import ivfpq_topk, write_ivfpq_partitioned
 
     e = t(spark, sf_dir, "embeddings")
-    cents, cbs = _residual_quantizers(spark, sf_dir, e)
+    cents, cbs = _residual_quantizers(sf_dir, e)
 
     def build() -> str:
         # replacing a dead session's entry also deletes its tempdir —
@@ -3116,11 +3094,9 @@ def similarity_topk_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path
 
     layout = _session_cached(_IVFPQ_LAYOUTS, spark, sf_dir, build)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = ivfpq_topk_pruned(
-        spark, layout, q, cents, cbs, k=10, n_probes=4
+    out = ivfpq_topk(
+        None, _query_vecs(e), k=10, n_probes=4, centroids=cents,
+        codebooks=cbs, residual=True, encoded=spark.read.parquet(layout),
     )
     return out.select(
         "query_id", "vec_id", "score", F.col("rank").cast("bigint").alias("rank")
@@ -3171,10 +3147,8 @@ def similarity_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import ivfpq_topk, rerank_topk
 
     e = t(spark, sf_dir, "embeddings")
-    cents, cbs = _residual_quantizers(spark, sf_dir, e)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    cents, cbs = _residual_quantizers(sf_dir, e)
+    q = _query_vecs(e)
     approx = ivfpq_topk(
         e, q, k=50, n_probes=4, centroids=cents, codebooks=cbs, residual=True
     )
@@ -3196,25 +3170,15 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (m lookups each; float vectors never touched at query time). One
     seed set feeds both quantizers, so the full compose is replicated
     relationally in the oracle."""
-    from .operators.similarity import (
-        build_ivf_centroids,
-        build_pq_codebooks,
-        ivfpq_topk,
-    )
+    from .operators.similarity import build_pq_codebooks, ivfpq_topk
 
     e = t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_CODEBOOKS:
-        _IVF_CODEBOOKS[sf_dir] = build_ivf_centroids(
-            e, n_centroids=16, dim=64, lloyd_iters=0
-        )
+    cents = _ivf_centroids(sf_dir, e)
     if sf_dir not in _PQ_CODEBOOKS:
         _PQ_CODEBOOKS[sf_dir] = build_pq_codebooks(e, m=8, ks=16, dim=64)
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     out = ivfpq_topk(
-        e, q, k=10, n_probes=4,
-        centroids=_IVF_CODEBOOKS[sf_dir], codebooks=_PQ_CODEBOOKS[sf_dir],
+        e, _query_vecs(e), k=10, n_probes=4,
+        centroids=cents, codebooks=_PQ_CODEBOOKS[sf_dir],
     )
     return out.select(
         "query_id", "vec_id", "score", F.col("rank").cast("bigint").alias("rank")

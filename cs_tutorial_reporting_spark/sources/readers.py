@@ -9,8 +9,8 @@ reads:
 - GCS JSON-array objects (``gcs_to_postgres.py:159-161``) are
   ``multiLine`` JSON reads with an explicit schema.
 - Postgres key/scalar scans (``reporting_dag.py:24-45``) become reads of
-  the existing target table (JDBC on a live deploy; parquet in the
-  harness) feeding a max-aggregate or anti-join.
+  the existing target table (parquet) feeding a max-aggregate or
+  anti-join.
 
 Every reader takes an explicit ``StructType`` — no inference (SURVEY
 §1.2: the reference declares all schemas up front).
@@ -146,45 +146,6 @@ def read_csv_staging(
         .option("nullValue", "")
         .csv(path)
     )
-
-
-def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound=None,
-    upper_bound=None,
-    fetchsize: int = 10_000,
-    properties: dict | None = None,
-) -> DataFrame:
-    """S6/S7 on a live warehouse: JDBC scan with partitioned reads.
-
-    Catalyst pushes ``filter``/``select`` into the generated SQL (the
-    watermark predicate F1 becomes a WHERE on the server, like the
-    reference's ``start_date_gte`` API param). ``partition_column`` +
-    bounds split the scan into ``num_partitions`` parallel range
-    queries — without it JDBC reads are single-task, which is the #1
-    JDBC-at-scale mistake. Untested here (no database in the harness);
-    parquet reads stand in via ``load_table``.
-    """
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("fetchsize", str(fetchsize))
-    )
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def read_orc_table(spark: SparkSession, path: str) -> DataFrame:

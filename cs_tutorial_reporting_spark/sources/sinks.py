@@ -4,9 +4,9 @@
   gzip (``airflow_to_gcs.py:153-159``; prefixes ``reporting_dag.py:57``).
   Batch-numbered files (``dagRuns{cnt}.json``) become ``repartition(n)``.
 - K2 CSV staging: eliminated in the engine (Spark writes targets
-  directly); a writer is provided for format parity.
+  directly).
 - K3 warehouse bulk append: ``COPY FROM STDIN`` → ``mode("append")``
-  parquet/table writes (JDBC ``batchsize`` on a live Postgres deploy).
+  parquet/table writes.
 - K4 DDL: Spark SQL ``CREATE DATABASE/TABLE IF NOT EXISTS``; PK/UNIQUE
   constraints are engine-enforced dedup invariants (Spark does not
   enforce constraints) — see ``operators.incremental.dedup_against``.
@@ -43,14 +43,6 @@ def write_json_landing(
     return path
 
 
-def write_csv_staging(df: DataFrame, path: str) -> str:
-    """K2 — CSV with header, NULL⇄'' (gcs_to_postgres.py:167-179 parity)."""
-    df.write.mode("overwrite").option("header", True).option(
-        "emptyValue", ""
-    ).csv(path)
-    return path
-
-
 def write_table_append(df: DataFrame, path: str) -> str:
     """K3 — bulk append into the warehouse table (parquet in the harness;
     swap for ``df.write.jdbc(url, table, mode="append")`` on Postgres).
@@ -65,31 +57,6 @@ def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> str:
     """
     df.write.mode("append").partitionBy(*partition_cols).parquet(path)
     return path
-
-
-def write_jdbc_append(
-    df: DataFrame,
-    url: str,
-    table: str,
-    batchsize: int = 10_000,
-    properties: dict | None = None,
-) -> None:
-    """K3 on a live warehouse: batched JDBC append — the engine's
-    equivalent of the reference's bulk ``COPY FROM STDIN``
-    (gcs_to_postgres.py:178-181). ``batchsize`` batches the INSERTs;
-    for true COPY-speed loads on Postgres, stage to files and COPY, or
-    use a connector that does. Untested here (no database in the
-    harness)."""
-    writer = (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-        .mode("append")
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.save()
 
 
 def write_orc(df: DataFrame, path: str, *partition_cols: str) -> str:

@@ -56,16 +56,13 @@ ADJUDICATED: dict[tuple[str, str], int] = {
     # gated: hint only on explicit caller opt-in; default stats-driven
     ("operators/incremental.py", "dedup_against"): 1,
     # k-bound: broadcast query matrix (|Q| bounded; corpus never ships)
-    ("operators/similarity.py", "allpairs_threshold_arrow"): 1,
+    ("operators/similarity.py", "_arrow_candidates"): 1,
     ("operators/similarity.py", "brute_force_topk"): 1,
     ("operators/similarity.py", "ivf_topk"): 1,
-    ("operators/similarity.py", "ivf_topk_pruned"): 1,
     ("operators/similarity.py", "ivfpq_topk"): 1,
-    ("operators/similarity.py", "ivfpq_topk_pruned"): 1,
     ("operators/similarity.py", "lsh_topk"): 1,
     ("operators/similarity.py", "pq_topk"): 1,
     ("operators/similarity.py", "rerank_topk"): 1,
-    ("operators/similarity.py", "self_knn_topk_arrow"): 1,
     # 1-row: corpus totals (N, avgdl fold)
     ("operators/tfidf.py", "tfidf_top_terms"): 1,
     # k-bound: top-V vocab + alphabet piece tables

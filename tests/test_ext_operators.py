@@ -3386,6 +3386,104 @@ def test_arrow_scorers_hardened_edges(spark):
     assert tiny_pairs == base_pairs and base_pairs
 
 
+@pytest.mark.parametrize("case", ["identical", "empty"])
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "brute_force",
+        "lsh",
+        "ivf_inline",
+        "ivf_layout",
+        "pq",
+        "ivfpq_flat",
+        "ivfpq_residual",
+        "ivfpq_layout",
+        "arrow_self_knn",
+        "rerank",
+    ],
+)
+def test_topk_entry_points_edge_inputs(spark, tmp_path, entry, case):
+    """Every top-k entry point ends in the shared rank step. (a) On an
+    all-identical corpus every score ties, so each query must get ranks
+    1..k over the k LOWEST ids — the shared id tie-break. (b) On an
+    empty query frame (an empty corpus for the Arrow self-kNN, whose
+    queries ARE the corpus) each must return zero rows with its
+    documented columns."""
+    from cs_tutorial_reporting_spark.operators import similarity as sim
+
+    k, n = 5, 12
+    vec = [0.125] * 64  # unit norm: every dot and cosine is exactly 1.0
+    emb = spark.createDataFrame(
+        [(i, vec) for i in range(n)], "vec_id long, embedding array<float>"
+    )
+    q = spark.createDataFrame(
+        [(100, vec), (101, vec)], "query_id long, query_vec array<float>"
+    )
+    if case == "empty":
+        q = q.filter(F.lit(False))
+
+    def cents():
+        return sim.build_ivf_centroids(emb, n_centroids=2, dim=64, lloyd_iters=0)
+
+    def residual_cbs(c):
+        return sim.build_residual_pq_codebooks(emb, c, m=8, ks=4, dim=64)
+
+    score, qids = "cos", [100, 101]
+    if entry == "brute_force":
+        out = sim.brute_force_topk(emb, q, k=k, dim=64)
+    elif entry == "lsh":
+        out = sim.lsh_topk(emb, q, k=k, n_planes=4, dim=64)
+    elif entry == "ivf_inline":
+        out = sim.ivf_topk(emb, q, k=k, n_probes=2, centroids=cents())
+    elif entry == "ivf_layout":
+        c, path = cents(), str(tmp_path / "ivf")
+        sim.write_ivf_partitioned(emb, path, c)
+        out = sim.ivf_topk(
+            None, q, k=k, n_probes=2, centroids=c,
+            assigned=spark.read.parquet(path),
+        )
+    elif entry == "pq":
+        score = "score"
+        out = sim.pq_topk(emb, q, k=k, m=8, ks=4)
+    elif entry == "ivfpq_flat":
+        score = "score"
+        out = sim.ivfpq_topk(
+            emb, q, k=k, n_probes=2, centroids=cents(),
+            codebooks=sim.build_pq_codebooks(emb, m=8, ks=4, dim=64),
+        )
+    elif entry == "ivfpq_residual":
+        score, c = "score", cents()
+        out = sim.ivfpq_topk(
+            emb, q, k=k, n_probes=2, centroids=c, codebooks=residual_cbs(c),
+            residual=True,
+        )
+    elif entry == "ivfpq_layout":
+        score, c, path = "score", cents(), str(tmp_path / "ivfpq")
+        cbs = residual_cbs(c)
+        sim.write_ivfpq_partitioned(emb, path, c, cbs)
+        out = sim.ivfpq_topk(
+            None, q, k=k, n_probes=2, centroids=c, codebooks=cbs,
+            residual=True, encoded=spark.read.parquet(path),
+        )
+    elif entry == "arrow_self_knn":
+        qids = list(range(n))
+        corpus = emb.filter(F.lit(False)) if case == "empty" else emb
+        out = sim.self_knn_topk_arrow(corpus, k=k, dim=64)
+    else:
+        approx = q.select("query_id").crossJoin(emb.select("vec_id"))
+        out = sim.rerank_topk(approx, emb, q, k=k, dim=64)
+
+    assert out.columns == ["query_id", "vec_id", score, "rank"]
+    rows = out.collect()
+    if case == "empty":
+        assert rows == []
+        return
+    got = sorted((r.query_id, r.rank, r.vec_id) for r in rows)
+    assert got == [(qid, i + 1, i) for qid in qids for i in range(k)]
+    for qid in qids:
+        assert len({r[score] for r in rows if r.query_id == qid}) == 1
+
+
 def test_dbscan_census_identical_on_lsh_candidates(spark):
     """Same claim for DBSCAN: dbscan_census_from_pairs fed
     LSH-bucketed candidate edges (embedding_near_dup_pairs

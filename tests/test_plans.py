@@ -289,7 +289,6 @@ def test_ivf_partitioned_layout_prunes_and_matches_inline(spark, tmp_path):
     from cs_tutorial_reporting_spark.operators.similarity import (
         build_ivf_centroids,
         ivf_topk,
-        ivf_topk_pruned,
         write_ivf_partitioned,
     )
 
@@ -300,7 +299,10 @@ def test_ivf_partitioned_layout_prunes_and_matches_inline(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    pruned = ivf_topk_pruned(spark, path, q, cents, k=5, n_probes=2)
+    pruned = ivf_topk(
+        None, q, k=5, n_probes=2, centroids=cents,
+        assigned=spark.read.parquet(path),
+    )
     inline = ivf_topk(emb, q, k=5, n_probes=2, centroids=cents)
     assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, inline.collect()))
     p = plan_text(pruned, "formatted")
@@ -402,12 +404,10 @@ def test_ivfpq_partitioned_layout_prunes_appends_and_reranks(spark, tmp_path):
     import os
 
     from cs_tutorial_reporting_spark.operators.similarity import (
-        append_to_ivfpq_layout,
         brute_force_topk,
         build_ivf_centroids,
         build_residual_pq_codebooks,
         ivfpq_topk,
-        ivfpq_topk_pruned,
         rerank_topk,
         write_ivfpq_partitioned,
     )
@@ -422,7 +422,14 @@ def test_ivfpq_partitioned_layout_prunes_appends_and_reranks(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = ivfpq_topk_pruned(spark, path, q, cents, cbs, k=5, n_probes=2)
+
+    def from_layout():
+        return ivfpq_topk(
+            None, q, k=5, n_probes=2, centroids=cents, codebooks=cbs,
+            residual=True, encoded=spark.read.parquet(path),
+        )
+
+    out = from_layout()
     p = plan_text(out, "formatted")
     assert "PartitionFilters" in p
     pf = p.split("PartitionFilters")[1].split("\n")[0]
@@ -438,7 +445,7 @@ def test_ivfpq_partitioned_layout_prunes_appends_and_reranks(spark, tmp_path):
         [(99999, [float(x) for x in probe_vec])],
         "vec_id bigint, embedding array<float>",
     )
-    append_to_ivfpq_layout(new, path, cents, cbs)
+    write_ivfpq_partitioned(new, path, cents, cbs, mode="append")
     after = {
         f: os.path.getmtime(f)
         for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
@@ -446,7 +453,7 @@ def test_ivfpq_partitioned_layout_prunes_appends_and_reranks(spark, tmp_path):
     assert set(before) <= set(after) and all(after[f] == m for f, m in before.items())
     got = {
         (r.query_id, r.vec_id)
-        for r in ivfpq_topk_pruned(spark, path, q, cents, cbs, k=5, n_probes=2).collect()
+        for r in from_layout().collect()
     }
     # the clone of vector 3 shares its cell and codes -> identical ADC
     # score; it must now rank inside query 3's top-5
