@@ -5,7 +5,9 @@ the §0 bugs — dedup never fires, pagination truncated):
 
 - **watermark** — ``SELECT Max(start_date) FROM rpt.dag_run``
   (reporting_dag.py:31-45): global max over the already-loaded table;
-  NULL when empty ("None" string path, airflow_to_gcs.py:162,214).
+  NULL when empty ("None" string path, airflow_to_gcs.py:162,214). On a
+  table ``read_parquet_table`` returned, it is the max of the files'
+  row-group max statistics — no scan, no Spark job.
 - **incremental_filter** — keep rows strictly after the watermark. The
   reference sends ``start_date_gte = wm + 1µs`` into the source
   (airflow_to_gcs.py:165-172); at Spark's µs timestamp precision
@@ -16,12 +18,13 @@ the §0 bugs — dedup never fires, pagination truncated):
   rpt.sql:18, composite ``(dag_run_id, dag_id)`` rpt.sql:32). The Python
   ``not in`` list-probe becomes a left-anti join; the existing-keys side
   is projected to the PK columns only so Catalyst broadcasts it.
+- **dedup_within** — one row per PK within the batch; given the target,
+  it also rejects existing keys, in the same single shuffle.
 
-Scale notes (100 TB): the watermark is the only driver-side collect in
-the whole pipeline — one scalar. The anti-join build side is
-``SELECT pk FROM target`` which stays small relative to the fact data;
-if the target's key set itself outgrows broadcast range, AQE falls back
-to a shuffled hash join automatically — semantics identical.
+Scale notes (100 TB): the watermark is the only driver-side value in the
+whole pipeline — one scalar, read from parquet footers when it can be,
+else collected from a max-aggregate. The key side is
+``SELECT pk FROM target``, which stays small relative to the fact data.
 """
 
 from __future__ import annotations
@@ -31,14 +34,23 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import footer_max
+
 
 def watermark(existing: DataFrame, col: str) -> Any | None:
     """A1 — global max of ``col`` over the already-loaded table.
 
     Returns a Python scalar (or None when the table is empty — the
-    reference's ``"None"`` sentinel path). This is the one permitted
-    driver-side collect.
+    reference's ``"None"`` sentinel path). When ``existing`` is exactly a
+    frame ``read_parquet_table`` returned and every file carries row-group
+    statistics on ``col`` as a TIMESTAMP_MICROS/MILLIS column, the value
+    comes from the footers (all-NULL row groups skipped). Anything else —
+    a derived frame, INT96 or foreign files, other column types — takes
+    the one permitted driver-side collect.
     """
+    answered, wm = footer_max(existing, col)
+    if answered:
+        return wm
     return existing.agg(F.max(col).alias("wm")).first()["wm"]
 
 
@@ -86,20 +98,39 @@ def dedup_against(
     return incoming.join(keys, on=pk_cols, how="left_anti")
 
 
-def dedup_within(incoming: DataFrame, pk_cols: list[str]) -> DataFrame:
+def dedup_within(
+    incoming: DataFrame, pk_cols: list[str], existing: DataFrame | None = None
+) -> DataFrame:
     """Intra-batch PK dedup — keep one arbitrary-but-deterministic row per
     key (needed because a PK'd warehouse table rejects duplicates *within*
     a batch too; the reference relied on Postgres constraint errors).
-    Deterministic choice: min over all non-key columns ordered by the
-    row's own sort — implemented as row_number over pk ordered by all
-    columns for stability.
+    Deterministic choice: row_number over pk ordered by all non-key
+    columns, keeping rank 1.
+
+    Given ``existing``, its PK values join the same window as tagged rows
+    that sort first, so a key already in the target ranks an existing row
+    first and loses every incoming row: ``dedup_against`` semantics in the
+    one shuffle. Existing keys with a NULL component are dropped first
+    (a left-anti join never matches NULL), and are cast to the incoming
+    key types.
     """
     from pyspark.sql.window import Window
 
     order_cols = [c for c in incoming.columns if c not in pk_cols] or pk_cols
-    w = Window.partitionBy(*pk_cols).orderBy(*[F.col(c).asc_nulls_last() for c in order_cols])
+    rows = incoming.withColumn("__old", F.lit(False))
+    if existing is not None:
+        schema = incoming.schema
+        keys = existing.select(
+            *[F.col(c).cast(schema[c].dataType).alias(c) for c in pk_cols]
+        ).dropna()
+        rows = rows.unionByName(
+            keys.withColumn("__old", F.lit(True)), allowMissingColumns=True
+        )
+    w = Window.partitionBy(*pk_cols).orderBy(
+        F.col("__old").desc(), *[F.col(c).asc_nulls_last() for c in order_cols]
+    )
     return (
-        incoming.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        rows.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) & ~F.col("__old"))
+        .drop("__rn", "__old")
     )

@@ -9,12 +9,20 @@ Reference shape (per TaskGroup, reporting_dag.py:50-180):
 Engine shape (every ``>>`` process boundary deleted):
 
     read(source) → project_cast → incremental_filter(> watermark)
-    → dedup_against(existing PKs) → write append
+    → dedup_within(batch + existing PKs) → write append
 
 XCom disappears (the watermark is a plain Python scalar from
-``watermark()``); the landing zone is an optional ``write_json_landing``
-tap; the CSV hop is gone. Catalyst does parse→analyze→optimize→physical;
-the only process boundaries left are Spark's own task dispatch/shuffle.
+``watermark()``, read from parquet footers when the target came from
+``read_parquet_table``); the landing zone is an optional
+``write_json_landing`` tap; the CSV hop is gone. Catalyst does
+parse→analyze→optimize→physical; the only process boundaries left are
+Spark's own task dispatch/shuffle.
+
+Jobs per incremental load of a parquet target: reading it and its
+watermark start none (footer-served schema and statistics); the within-
+batch and against-target PK dedup share one shuffle, so the append runs
+two (that shuffle's map stage, then the write), and one for a table with
+no PK.
 """
 
 from __future__ import annotations
@@ -24,12 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..operators.incremental import (
-    dedup_against,
-    dedup_within,
-    incremental_filter,
-    watermark,
-)
+from ..operators.incremental import dedup_within, incremental_filter, watermark
 from ..operators.project import project_cast
 
 
@@ -67,9 +70,7 @@ def incremental_load(
         wm = watermark(existing, watermark_col)
         df = incremental_filter(df, watermark_col, wm)
     if pk_cols:
-        df = dedup_within(df, pk_cols)
-        if existing is not None:
-            df = dedup_against(df, existing, pk_cols)
+        df = dedup_within(df, pk_cols, existing)
     return LoadResult(loaded=df, watermark_used=wm)
 
 

@@ -52,6 +52,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet ns timestamps (events.ts) truncate to Spark's µs.
         .config("spark.sql.legacy.parquet.nanosAsLong", "false")
+        # Timestamps are written as INT64 µs, which carry row-group min/max
+        # statistics (legacy INT96 carries none), so the incremental
+        # watermark is answered from footers. Lossless at Spark's µs; set
+        # once here, never flipped mid-session.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Adaptive execution: runtime shuffle-partition coalescing, skew
         # join splitting, broadcast-join demotion/promotion.
         .config("spark.sql.adaptive.enabled", "true")

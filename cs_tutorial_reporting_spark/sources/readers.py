@@ -10,29 +10,194 @@ reads:
   ``multiLine`` JSON reads with an explicit schema.
 - Postgres key/scalar scans (``reporting_dag.py:24-45``) become reads of
   the existing target table (parquet) feeding a max-aggregate or
-  anti-join.
+  anti-join. The target's schema and the max of its timestamp columns
+  come from a per-file parquet footer cache (metadata only, as a
+  metastore serves them), so neither costs a Spark job.
 
 Every reader takes an explicit ``StructType`` — no inference (SURVEY
-§1.2: the reference declares all schemas up front).
+§1.2: the reference declares all schemas up front); parquet reads take
+it from the files' own Spark row metadata where they carry it.
 """
 
 from __future__ import annotations
+
+import functools
+import glob
+import json
+import os
+import weakref
+from dataclasses import dataclass
+from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas import STAR_TABLES
 
+#: the Spark schema Spark stores in the key-value metadata of each file it writes
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: marks a file written in Spark's LEGACY datetime rebase mode; it is read rebased
+_LEGACY_DATETIME_KEY = b"org.apache.spark.legacyDateTime"
+#: a footer pyarrow cannot read or parse (its errors subclass these); Spark decides
+_UNREADABLE = (OSError, ValueError, KeyError, NotImplementedError)
+#: parquet timestamp unit → multiplier to Spark's µs
+_TO_MICROS = {"milliseconds": 1000, "microseconds": 1}
+#: ``_column_max`` of a column some row group keeps no statistics for
+_NO_STATS = object()
+
+#: frames ``read_parquet_table`` read from footer schemas; ``footer_max``
+#: answers only these, never a frame derived from one
+_FOOTER_FRAMES: weakref.WeakSet = weakref.WeakSet()
+
+
+@dataclass(frozen=True)
+class _Footer:
+    """What one parquet file's footer says, without reading its rows."""
+
+    schema: T.StructType | None  # Spark's row metadata; None for foreign files
+    ns_cols: tuple[str, ...]  # columns stored as INT64 TIMESTAMP(NANOS)
+    # µs max per TimestampType column stored as TIMESTAMP_MICROS/MILLIS
+    # whose every row group has statistics; None when all NULL
+    ts_max: dict[str, int | None]
+
+
+def _footer(path: str) -> _Footer:
+    st = os.stat(path)
+    return _read_footer(path, st.st_size, st.st_mtime_ns)
+
+
+@functools.lru_cache(maxsize=4096)
+def _read_footer(path: str, _size: int, _mtime_ns: int) -> _Footer:
+    """Cached per (path, size, mtime): parquet files are immutable, and a
+    rewritten file gets a new key."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    kv = md.metadata or {}
+    ts_units = {}  # column index → (name, unit, adjusted to UTC)
+    for i in range(md.num_columns):
+        c = md.schema.column(i)
+        if c.path == c.name and c.physical_type == "INT64":  # top-level INT64
+            lt = json.loads(c.logical_type.to_json())
+            if lt.get("Type") == "Timestamp":
+                ts_units[i] = (c.name, lt["timeUnit"], lt["isAdjustedToUTC"])
+    ns_cols = tuple(n for n, unit, _ in ts_units.values() if unit == "nanoseconds")
+    raw = kv.get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return _Footer(None, ns_cols, {})
+    schema = T.StructType.fromJson(json.loads(raw))
+    ts_max = {}
+    if _LEGACY_DATETIME_KEY not in kv:
+        for i, (name, unit, utc) in ts_units.items():
+            if (
+                utc
+                and unit in _TO_MICROS
+                and name in schema.names
+                and schema[name].dataType == T.TimestampType()
+            ):
+                best = _column_max(md, i)
+                if best is not _NO_STATS:
+                    ts_max[name] = None if best is None else best * _TO_MICROS[unit]
+    return _Footer(schema, ns_cols, ts_max)
+
+
+def _column_max(md, i: int):
+    """Max of column ``i``'s row-group max statistics, skipping all-NULL
+    row groups; ``_NO_STATS`` if some row group lacks statistics."""
+    best = None
+    for g in range(md.num_row_groups):
+        chunk = md.row_group(g).column(i)
+        st = chunk.statistics
+        if st is not None and st.has_min_max:
+            best = st.max_raw if best is None else max(best, st.max_raw)
+        elif st is None or not st.has_null_count or st.null_count != chunk.num_values:
+            return _NO_STATS
+    return best
+
+
+def _data_files(path: str) -> list[str] | None:
+    """The files Spark reads for ``path``: the file itself, or the visible
+    files of a flat directory. None for anything else (globs, remote
+    URIs, partitioned or nested layouts, in-flight copies)."""
+    if os.path.isfile(path):
+        return [path]
+    try:
+        entries = list(os.scandir(path))
+    except OSError:
+        return None
+    files = []
+    for e in entries:
+        if e.name.startswith(("_", ".")):
+            continue
+        if not e.is_file() or e.name.endswith("._COPYING_"):
+            return None
+        files.append(e.path)
+    return files or None
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The schema Spark would infer for ``path``, from cached footers: set
+    when every file carries the same Spark row metadata and no ns column."""
+    files = _data_files(path)
+    if files is None:
+        return None
+    schema = None
+    for f in files:
+        try:
+            ft = _footer(f)
+        except _UNREADABLE:
+            return None
+        if ft.schema is None or ft.ns_cols or (schema is not None and ft.schema != schema):
+            return None
+        schema = ft.schema
+    return schema
+
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """Columnar scan with Catalyst filter/column pushdown (the default).
 
-    ns-timestamp-aware like every engine read path: detected
-    TIMESTAMP(NANOS) columns are read as int64 and floored to µs (the
-    ``nanosAsLong`` session flag stays set once flipped — uniform policy;
-    the footer peek decides per file which columns need conversion).
+    Files Spark wrote are read through ``spark.read.schema(<footer
+    schema>)``: the schema comes from the cached footers, so no inference
+    job runs, and ``watermark`` may answer the returned frame from the
+    footers' statistics. Foreign files (no Spark row metadata), ns
+    timestamps, files that disagree on schema and non-flat layouts take
+    the ns-aware inferring read: detected TIMESTAMP(NANOS) columns are
+    read as int64 and floored to µs (the ``nanosAsLong`` session flag
+    stays set once flipped — uniform policy; the footer peek decides per
+    file which columns need conversion).
     """
-    return _read_parquet_ns_aware(spark, path)
+    schema = _footer_schema(path)
+    if schema is None:
+        return _read_parquet_ns_aware(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    _FOOTER_FRAMES.add(df)
+    return df
+
+
+def footer_max(df: DataFrame, col: str) -> tuple[bool, Any]:
+    """``(True, max(col))`` from the parquet statistics of the files
+    behind ``df``, converted as Spark's collect converts it, when ``df``
+    is a frame ``read_parquet_table`` read from footers and every file has
+    row-group statistics on ``col`` as a TIMESTAMP_MICROS/MILLIS column;
+    otherwise ``(False, None)``. Metadata only: no Spark job runs."""
+    if df not in _FOOTER_FRAMES:
+        return False, None
+    best = None
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme not in ("", "file") or u.netloc:
+            return False, None
+        try:
+            ts_max = _footer(unquote(u.path)).ts_max
+        except _UNREADABLE:
+            return False, None
+        if col not in ts_max:
+            return False, None
+        v = ts_max[col]
+        if v is not None and (best is None or v > best):
+            best = v
+    return True, None if best is None else T.TimestampType().fromInternal(best)
 
 
 def _read_parquet_ns_aware(spark: SparkSession, path: str) -> DataFrame:
@@ -52,43 +217,18 @@ def _read_parquet_ns_aware(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-import functools
-import os as _os
-
-
 def _ns_timestamp_cols(path: str) -> list[str]:
     """Columns physically stored as parquet TIMESTAMP(NANOS) — Spark 4
-    refuses them unless read as raw int64 ns (legacy nanosAsLong).
-    Cached per (path, mtime): the footer peek costs a pyarrow read per
-    call and every registry query hits the same handful of tables; the
-    mtime key keeps a rewritten file from being served stale schema."""
-    try:
-        mtime = _os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    return _ns_timestamp_cols_cached(path, mtime)
-
-
-@functools.lru_cache(maxsize=256)
-def _ns_timestamp_cols_cached(path: str, _mtime: int) -> list[str]:
-    import glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    refuses them unless read as raw int64 ns (legacy nanosAsLong). A
+    directory is judged by its first ``*.parquet`` file. Served from the
+    per-file footer cache, so a rewritten file gets a fresh answer."""
     f = path
     if os.path.isdir(path):
         inside = sorted(glob.glob(os.path.join(path, "*.parquet")))
         if not inside:
             return []
         f = inside[0]
-    schema = pq.read_schema(f)
-    return [
-        fld.name
-        for fld in schema
-        if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns"
-    ]
+    return list(_footer(f).ns_cols)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -81,6 +81,87 @@ def test_dedup_within_keeps_one_row_per_key(spark):
     assert sorted((r.k, r.v) for r in out) == [("a", 1), ("b", 5)]
 
 
+def test_dedup_within_against_existing_keeps_ties_once_and_rejects(spark):
+    """The one-shuffle form: within-batch ties still collapse to the
+    lowest row, and a key already in ``existing`` loses all its rows."""
+    df = spark.createDataFrame(
+        [("a", 2), ("a", 1), ("a", 1), ("b", 5), ("b", 4), ("c", 7)],
+        "k string, v int",
+    )
+    existing = spark.createDataFrame([(9, "b"), (8, "b")], "x int, k string")
+    out = dedup_within(df, ["k"], existing).collect()
+    assert sorted((r.k, r.v) for r in out) == [("a", 1), ("c", 7)]
+    assert dedup_within(df, ["k"], existing).columns == ["k", "v"]
+
+
+def test_dedup_within_null_key_component_lands_once(spark):
+    """A NULL PK component never matches an existing key (left-anti
+    semantics), so the row lands — once, since within-batch dedup groups
+    NULLs — even when ``existing`` holds the very same NULL key."""
+    pk = ["dag_id", "dag_run_id"]
+    incoming = spark.createDataFrame(
+        [(None, "r1", 2), (None, "r1", 1), ("d1", "r2", 3), ("d2", "r3", 4)],
+        "dag_id string, dag_run_id string, v int",
+    )
+    existing = spark.createDataFrame(
+        [(None, "r1"), ("d2", "r3")], "dag_id string, dag_run_id string"
+    )
+    key = lambda r: (r.dag_id or "", r.dag_run_id, r.v)  # noqa: E731
+    one_shuffle = sorted(map(key, dedup_within(incoming, pk, existing).collect()))
+    two_step = dedup_against(dedup_within(incoming, pk), existing, pk)
+    assert one_shuffle == [("", "r1", 1), ("d1", "r2", 3)]
+    assert one_shuffle == sorted(map(key, two_step.collect()))
+
+
+def test_watermark_from_footers_equals_scan(spark, tmp_path, jobs_started):
+    """Footer statistics and ``existing.agg(max)`` agree across appends,
+    an all-NULL file and a file appended after a first watermark; derived
+    frames, INT96 files and empty tables are answered like the scan."""
+    from pyspark.sql import functions as F
+
+    from cs_tutorial_reporting_spark.sources.readers import footer_max, read_parquet_table
+
+    target = str(tmp_path / "rpt_dag_run")
+
+    def append(session, rows):
+        df = session.createDataFrame(rows, "dag_id string, start_date timestamp")
+        df.coalesce(1).write.mode("append").parquet(target)
+
+    def scan(df):
+        return df.agg(F.max("start_date")).first()[0]
+
+    append(spark, [("a", TS("2024-01-01T00:00:00.000001")), ("b", None)])
+    append(spark, [("c", None), ("d", None)])  # start_date all NULL
+    first = read_parquet_table(spark, target)
+    wm, jobs = jobs_started(lambda: watermark(first, "start_date"))
+    assert footer_max(first, "start_date") == (True, wm)
+    assert jobs == 0 and wm == scan(first) == TS("2024-01-01T00:00:00.000001")
+
+    append(spark, [("e", TS("2024-03-01T12:00:00.123456")), ("f", None)])
+    later = read_parquet_table(spark, target)
+    wm = watermark(later, "start_date")
+    assert footer_max(later, "start_date") == (True, wm)
+    assert wm == scan(later) == TS("2024-03-01T12:00:00.123456")
+
+    derived = later.filter(F.col("dag_id") != "e")
+    assert footer_max(derived, "start_date") == (False, None)
+    assert watermark(derived, "start_date") == scan(derived) == TS("2024-01-01T00:00:00.000001")
+
+    legacy = spark.newSession()
+    legacy.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    append(legacy, [("g", TS("2024-05-05T05:05:05.050505"))])
+    mixed = read_parquet_table(spark, target)
+    assert footer_max(mixed, "start_date") == (False, None)
+    assert watermark(mixed, "start_date") == scan(mixed) == TS("2024-05-05T05:05:05.050505")
+
+    empty_target = str(tmp_path / "empty")
+    spark.createDataFrame([], "dag_id string, start_date timestamp").write.parquet(
+        empty_target
+    )
+    empty = read_parquet_table(spark, empty_target)
+    assert watermark(empty, "start_date") is None and scan(empty) is None
+
+
 def test_project_cast_strict_missing_column_raises(spark):
     df = spark.createDataFrame([("x",)], "dag_id string")
     with pytest.raises(ValueError, match="missing"):

@@ -97,3 +97,32 @@ def test_split_load_equals_whole_load(spark):
     # watermark-invisible rows. Assert the shared invariant: no dup PKs.
     assert len(set(two)) == len(two)
     assert set(two) <= set(one)
+
+
+def test_incremental_parquet_load_runs_only_data_jobs(spark, tmp_path, jobs_started):
+    """One incremental load into a parquet target: reading the target and
+    its watermark start no Spark job (footer schema and statistics), and
+    the load plus its append start at most two (the one dedup shuffle's
+    map stage, then the write)."""
+    from cs_tutorial_reporting_spark.operators.incremental import watermark
+    from cs_tutorial_reporting_spark.sources.readers import read_parquet_table
+    from cs_tutorial_reporting_spark.sources.sinks import write_table_append
+
+    target = str(tmp_path / "rpt_dag_run")
+    initial, increment = fx.dag_run_batches(spark)
+    write_table_append(load_report_table(initial, None, "rpt_dag_run").loaded, target)
+
+    existing, read_jobs = jobs_started(lambda: read_parquet_table(spark, target))
+    wm, wm_jobs = jobs_started(lambda: watermark(existing, "start_date"))
+    res, load_jobs = jobs_started(
+        lambda: write_table_append(
+            load_report_table(increment, existing, "rpt_dag_run").loaded, target
+        )
+    )
+    assert (read_jobs, wm_jobs) == (0, 0)
+    assert load_jobs <= 2
+    assert wm == fx.ts(2)
+    got = read_parquet_table(spark, target).collect()
+    assert sorted((r.dag_id, r.dag_run_id) for r in got) == [
+        ("etl_a", "run1"), ("etl_a", "run2"), ("etl_a", "run3"), ("etl_b", "run1"),
+    ]

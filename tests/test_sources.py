@@ -61,6 +61,41 @@ def test_append_sink_accumulates(spark, tmp_path):
     assert spark.read.parquet(target).count() == 2
 
 
+def test_rewritten_parquet_file_gets_a_fresh_footer(spark, tmp_path):
+    """The footer cache is keyed per file by (path, size, mtime): a file
+    rewritten in place is re-read, for the Spark schema
+    ``read_parquet_table`` reads through and for the ns-column peek."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cs_tutorial_reporting_spark.sources.readers import (
+        _ns_timestamp_cols,
+        read_parquet_table,
+    )
+
+    f = str(tmp_path / "t.parquet")
+
+    def rewrite(src: str) -> None:
+        mtime = os.stat(f).st_mtime_ns if os.path.exists(f) else 0
+        shutil.copyfile(src, f)
+        os.utime(f, ns=(mtime + 10**9, mtime + 10**9))
+
+    for name, ddl, cols in [("a", "k string", ["k"]), ("b", "k string, v bigint", ["k", "v"])]:
+        spark.createDataFrame([], ddl).coalesce(1).write.parquet(str(tmp_path / name))
+        (part,) = [p for p in os.listdir(tmp_path / name) if p.endswith(".parquet")]
+        rewrite(str(tmp_path / name / part))
+        assert read_parquet_table(spark, f).columns == cols
+
+    for unit, want in [("us", []), ("ns", ["ts"])]:
+        src = str(tmp_path / f"{unit}.parquet")
+        pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp(unit))}), src)
+        rewrite(src)
+        assert _ns_timestamp_cols(f) == want
+
+
 def test_airflow_rest_datasource_paginates(spark, tmp_path):
     """Custom Python Data Source (S1-S3): one input partition per page,
     full pagination (the reference's taskInstances first-page-only bug
