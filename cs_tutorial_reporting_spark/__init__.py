@@ -11,7 +11,7 @@ Layout
 - ``session``    SparkSession factory (UTC, AQE, Arrow).
 - ``schemas``    explicit StructType catalog (reference rpt.* tables +
                  the driver star schema).
-- ``sources``    readers/sinks: parquet, multiLine-JSON-array, CSV with
+- ``sources``    readers/sinks: parquet, line-mode JSON arrays, CSV with
                  ''→NULL, partitioned/compressed writes.
 - ``operators``  the reference's operator semantics as DataFrame
                  combinators (watermark / incremental / anti-join dedup /

@@ -50,8 +50,6 @@ def get_spark(
         )
         # Deterministic instant semantics for oracle parity (SURVEY §7.4).
         .config("spark.sql.session.timeZone", "UTC")
-        # Parquet ns timestamps (events.ts) truncate to Spark's µs.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "false")
         # Timestamps are written as INT64 µs, which carry row-group min/max
         # statistics (legacy INT96 carries none), so the incremental
         # watermark is answered from footers. Lossless at Spark's µs; set

@@ -6,8 +6,8 @@ reads:
 
 - REST pagination (``airflow_to_gcs.py:260-293``) is subsumed by Spark's
   partitioned file reads — no client-side offset loops.
-- GCS JSON-array objects (``gcs_to_postgres.py:159-161``) are
-  ``multiLine`` JSON reads with an explicit schema.
+- GCS JSON-array objects (``gcs_to_postgres.py:159-161``) are line-mode
+  JSON reads with an explicit schema: one array, or one object, per line.
 - Postgres key/scalar scans (``reporting_dag.py:24-45``) become reads of
   the existing target table (parquet) feeding a max-aggregate or
   anti-join. The target's schema and the max of its timestamp columns
@@ -15,22 +15,23 @@ reads:
   metastore serves them), so neither costs a Spark job.
 
 Every reader takes an explicit ``StructType`` — no inference (SURVEY
-§1.2: the reference declares all schemas up front); parquet reads take
-it from the files' own Spark row metadata where they carry it.
+§1.2: the reference declares all schemas up front). Parquet reads take it
+from the footer cache: the files' own Spark row metadata, or, for foreign
+files, their Arrow schema mapped as Spark's parquet inference maps it.
 """
 
 from __future__ import annotations
 
 import functools
-import glob
 import json
 import os
 import weakref
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import STAR_TABLES
@@ -45,6 +46,10 @@ _UNREADABLE = (OSError, ValueError, KeyError, NotImplementedError)
 _TO_MICROS = {"milliseconds": 1000, "microseconds": 1}
 #: ``_column_max`` of a column some row group keeps no statistics for
 _NO_STATS = object()
+#: leaf types Spark's parquet schema inference yields for a foreign file
+_INFERRED_LEAVES = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+                    T.DateType, T.TimestampType, T.TimestampNTZType)
 
 #: frames ``read_parquet_table`` read from footer schemas; ``footer_max``
 #: answers only these, never a frame derived from one
@@ -55,11 +60,15 @@ _FOOTER_FRAMES: weakref.WeakSet = weakref.WeakSet()
 class _Footer:
     """What one parquet file's footer says, without reading its rows."""
 
-    schema: T.StructType | None  # Spark's row metadata; None for foreign files
-    ns_cols: tuple[str, ...]  # columns stored as INT64 TIMESTAMP(NANOS)
+    # the schema to read the file with: Spark's row metadata, else the Arrow
+    # schema mapped as Spark infers it; ns columns as LongType. None when
+    # the mapping would differ from Spark's inference
+    schema: T.StructType | None
+    ns_cols: tuple[str, ...]  # top-level columns stored as INT64 TIMESTAMP(NANOS)
     # µs max per TimestampType column stored as TIMESTAMP_MICROS/MILLIS
-    # whose every row group has statistics; None when all NULL
-    ts_max: dict[str, int | None]
+    # whose every row group has statistics, in files with Spark row
+    # metadata only; None when all NULL. Files agree regardless of it.
+    ts_max: dict[str, int | None] = field(compare=False)
 
 
 def _footer(path: str) -> _Footer:
@@ -76,19 +85,26 @@ def _read_footer(path: str, _size: int, _mtime_ns: int) -> _Footer:
     md = pq.read_metadata(path)
     kv = md.metadata or {}
     ts_units = {}  # column index → (name, unit, adjusted to UTC)
+    int96 = False
     for i in range(md.num_columns):
         c = md.schema.column(i)
+        int96 |= c.physical_type == "INT96"
         if c.path == c.name and c.physical_type == "INT64":  # top-level INT64
             lt = json.loads(c.logical_type.to_json())
             if lt.get("Type") == "Timestamp":
                 ts_units[i] = (c.name, lt["timeUnit"], lt["isAdjustedToUTC"])
     ns_cols = tuple(n for n, unit, _ in ts_units.values() if unit == "nanoseconds")
     raw = kv.get(_SPARK_SCHEMA_KEY)
-    if raw is None:
+    # Arrow maps INT96 to naive ns; Spark infers it as TimestampType
+    fields = json.loads(raw)["fields"] if raw else None if int96 else _inferred_fields(md)
+    if fields is None:
         return _Footer(None, ns_cols, {})
-    schema = T.StructType.fromJson(json.loads(raw))
+    for f in fields:
+        if f["name"] in ns_cols:
+            f["type"] = "long"
+    schema = T.StructType.fromJson({"fields": fields})
     ts_max = {}
-    if _LEGACY_DATETIME_KEY not in kv:
+    if raw and _LEGACY_DATETIME_KEY not in kv:
         for i, (name, unit, utc) in ts_units.items():
             if (
                 utc
@@ -100,6 +116,29 @@ def _read_footer(path: str, _size: int, _mtime_ns: int) -> _Footer:
                 if best is not _NO_STATS:
                     ts_max[name] = None if best is None else best * _TO_MICROS[unit]
     return _Footer(schema, ns_cols, ts_max)
+
+
+def _inferred_fields(md) -> list | None:
+    """A foreign file's schema fields (JSON) as Spark's parquet inference
+    gives them, from its Arrow schema; None where the mapping fails or
+    would differ (unsigned, null, time and interval types)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        schema = from_arrow_schema(md.schema.to_arrow_schema(), prefer_timestamp_ntz=True)
+    except (TypeError, NotImplementedError):
+        return None
+    return schema.jsonValue()["fields"] if _inferable(schema) else None
+
+
+def _inferable(t: T.DataType) -> bool:
+    if isinstance(t, T.StructType):
+        return all(_inferable(f.dataType) for f in t)
+    if isinstance(t, T.ArrayType):
+        return _inferable(t.elementType)
+    if isinstance(t, T.MapType):
+        return _inferable(t.keyType) and _inferable(t.valueType)
+    return isinstance(t, _INFERRED_LEAVES)
 
 
 def _column_max(md, i: int):
@@ -136,41 +175,49 @@ def _data_files(path: str) -> list[str] | None:
     return files or None
 
 
-def _footer_schema(path: str) -> T.StructType | None:
-    """The schema Spark would infer for ``path``, from cached footers: set
-    when every file carries the same Spark row metadata and no ns column."""
+def _declared(path: str) -> _Footer | None:
+    """The footer every file of ``path`` agrees on (schema and ns columns),
+    when it maps to a schema; None sends the read to Spark's inference."""
     files = _data_files(path)
     if files is None:
         return None
-    schema = None
+    agreed = None
     for f in files:
         try:
             ft = _footer(f)
         except _UNREADABLE:
             return None
-        if ft.schema is None or ft.ns_cols or (schema is not None and ft.schema != schema):
+        if ft.schema is None or (agreed is not None and ft != agreed):
             return None
-        schema = ft.schema
-    return schema
+        agreed = ft
+    return agreed
+
+
+def _floor_ns(df: DataFrame, ns_cols) -> DataFrame:
+    """Floor int64 ns columns to Spark µs timestamps by integer division —
+    bit-identical to DuckDB's ns→µs truncation (SURVEY §7.4; double
+    division would lose precision above 2^53 ns)."""
+    if not ns_cols:
+        return df
+    return df.withColumns({c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in ns_cols})
 
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """Columnar scan with Catalyst filter/column pushdown (the default).
 
-    Files Spark wrote are read through ``spark.read.schema(<footer
-    schema>)``: the schema comes from the cached footers, so no inference
+    A file or flat directory whose files agree on their footer schema is
+    read through ``spark.read.schema(<footer schema>)``, so no inference
     job runs, and ``watermark`` may answer the returned frame from the
-    footers' statistics. Foreign files (no Spark row metadata), ns
-    timestamps, files that disagree on schema and non-flat layouts take
-    the ns-aware inferring read: detected TIMESTAMP(NANOS) columns are
-    read as int64 and floored to µs (the ``nanosAsLong`` session flag
-    stays set once flipped — uniform policy; the footer peek decides per
-    file which columns need conversion).
+    footers' statistics. INT64 TIMESTAMP(NANOS) columns are declared
+    bigint and floored to µs by ``_floor_ns``; no session conf changes.
+    Globs, remote URIs, partitioned or nested layouts, files that
+    disagree and footers with no inferable mapping take a plain
+    ``spark.read.parquet(path)``.
     """
-    schema = _footer_schema(path)
-    if schema is None:
-        return _read_parquet_ns_aware(spark, path)
-    df = spark.read.schema(schema).parquet(path)
+    ft = _declared(path)
+    if ft is None:
+        return spark.read.parquet(path)
+    df = _floor_ns(spark.read.schema(ft.schema).parquet(path), ft.ns_cols)
     _FOOTER_FRAMES.add(df)
     return df
 
@@ -200,49 +247,13 @@ def footer_max(df: DataFrame, col: str) -> tuple[bool, Any]:
     return True, None if best is None else T.TimestampType().fromInternal(best)
 
 
-def _read_parquet_ns_aware(spark: SparkSession, path: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    ns_cols = _ns_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        # Spark reads its OWN ns files (4.x writes timestamp[ns] with
-        # spark row metadata) natively as TIMESTAMP — only foreign ns
-        # files arrive as raw int64 under nanosAsLong and need the
-        # explicit floor-to-µs conversion.
-        if isinstance(df.schema[c].dataType, T.LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
-
-
-def _ns_timestamp_cols(path: str) -> list[str]:
-    """Columns physically stored as parquet TIMESTAMP(NANOS) — Spark 4
-    refuses them unless read as raw int64 ns (legacy nanosAsLong). A
-    directory is judged by its first ``*.parquet`` file. Served from the
-    per-file footer cache, so a rewritten file gets a fresh answer."""
-    f = path
-    if os.path.isdir(path):
-        inside = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not inside:
-            return []
-        f = inside[0]
-    return list(_footer(f).ns_cols)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver star-schema table from ``{sf_dir}/{name}.parquet``.
-
-    ns-precision timestamps (events.ts) are read as int64 ns and floored
-    to Spark µs via integer division — bit-identical to DuckDB's ns→µs
-    truncation (SURVEY §7.4; double division would lose precision above
-    2^53 ns). Everything else is cast through the catalog schema.
+    """Load one driver star-schema table from ``{sf_dir}/{name}.parquet``
+    through ``read_parquet_table`` (footer schema, no inference job; ns
+    timestamps such as events.ts floored to µs), cast to the catalog
+    schema in ``STAR_TABLES``.
     """
-    from pyspark.sql import functions as F
-
-    path = f"{sf_dir}/{name}.parquet"
-    df = _read_parquet_ns_aware(spark, path)
+    df = read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
     want = STAR_TABLES.get(name)
     if want is not None and [f.name for f in want.fields] == df.columns:
         # Cast only where physical type differs (int32 vs int64 etc.).
@@ -255,21 +266,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def read_json_array(
     spark: SparkSession, path: str, schema: T.StructType, encoding: str = "UTF-8"
 ) -> DataFrame:
-    """Landing-zone reader for JSON-*array* files (one array of row objects
-    per file — the reference's GCS object format, ``airflow_to_gcs.py:155``,
-    read back at ``gcs_to_postgres.py:159-161``).
-
-    ``multiLine=True`` makes Spark parse whole-file arrays instead of
-    NDJSON. Schema is explicit; extra JSON fields are dropped (projection
-    P2), missing declared fields surface as NULLs at read and are caught
-    by ``operators.project.project_cast(strict=True)``.
+    """Landing-zone reader for JSON files in Spark's line mode: each line
+    is one array of row objects (the reference's GCS object format,
+    ``json.dumps`` at ``airflow_to_gcs.py:155``, read back at
+    ``gcs_to_postgres.py:159-161``) or one row object (the JSON lines
+    ``sinks.write_json_landing`` writes). Line mode lets Spark split large
+    files; pretty-printed arrays spanning several lines are out of
+    contract. Schema is explicit; extra JSON fields are dropped
+    (projection P2), missing declared fields surface as NULLs at read and
+    are caught by ``operators.project.project_cast(strict=True)``.
     """
-    return (
-        spark.read.schema(schema)
-        .option("multiLine", True)
-        .option("encoding", encoding)
-        .json(path)
-    )
+    return spark.read.schema(schema).option("encoding", encoding).json(path)
 
 
 def read_csv_staging(

@@ -21,23 +21,22 @@ from ..schemas import EVENTS
 
 
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over the events layout.
+    """File-source stream over the events layout, declared as ``EVENTS``.
 
-    Timestamp-unit-aware like the batch reader (``sources/readers.py``):
-    the parquet footer is peeked once on the driver — only when ``ts`` is
-    physically TIMESTAMP(NANOS) is it read as int64 and floored to µs;
-    µs/ms-unit files stream straight through as ``TimestampType``.
+    Timestamp-unit-aware through the batch reader's footer cache
+    (``sources/readers.py``): when ``ts`` is physically
+    TIMESTAMP(NANOS) it is declared bigint and floored to µs by the same
+    helper; µs/ms-unit files stream straight through as ``TimestampType``.
+    No session conf changes.
     """
     import os
 
-    from ..sources.readers import _ns_timestamp_cols
+    from ..sources.readers import _declared, _floor_ns
 
-    ts_is_ns = "ts" in _ns_timestamp_cols(path)
-    ts_type = "bigint" if ts_is_ns else "timestamp"
-    if ts_is_ns:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ft = _declared(path)
+    ns_cols = ("ts",) if ft is not None and "ts" in ft.ns_cols else ()
     raw_schema = (
-        f"event_id bigint, ts {ts_type}, user_id bigint, "
+        f"event_id bigint, ts {'bigint' if ns_cols else 'timestamp'}, user_id bigint, "
         "event_type string, value double, props string"
     )
     reader = spark.readStream.schema(raw_schema)
@@ -45,9 +44,7 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
         # file-source streams need a directory; narrow with a glob filter
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    raw = reader.parquet(path)
-    if ts_is_ns:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = _floor_ns(reader.parquet(path), ns_cols)
     return raw.select(*[f.name for f in EVENTS.fields])
 
 

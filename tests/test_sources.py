@@ -17,6 +17,14 @@ from cs_tutorial_reporting_spark.sources.sinks import (
     write_table_append,
 )
 
+from .conftest import SF_SMOKE
+
+#: the driver's star tables, all foreign (pyarrow-written) parquet files
+STAR = [
+    "customer", "documents", "embeddings", "events", "lineitem",
+    "nation", "orders", "part", "region", "supplier",
+]
+
 
 def test_read_json_array_file(spark, tmp_path):
     # one JSON array per file — airflow_to_gcs.py:155 format, with an
@@ -46,11 +54,35 @@ def test_csv_staging_empty_string_is_null(spark, tmp_path):
 
 
 def test_json_landing_run_partitioned_roundtrip(spark, tmp_path):
+    """The engine reads its own landing zone: JSON lines written by
+    ``write_json_landing`` come back whole through ``read_json_array``,
+    and landing → ``load_report_table`` equals a direct load."""
+    from cs_tutorial_reporting_spark.plans.pipeline import load_report_table
+    from cs_tutorial_reporting_spark.schemas import RPT_DAG_RUN
+
     df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
     path = write_json_landing(df, str(tmp_path / "landing"), "20240101T000000", n_files=1)
     assert "20240101T000000" in path
-    back = spark.read.schema("k string, v int").json(path)
+    back = read_json_array(spark, path, T.StructType.fromDDL("k string, v int"))
     assert sorted((r.k, r.v) for r in back.collect()) == [("a", 1), ("b", 2)]
+
+    wire = T.StructType([T.StructField(f.name, T.StringType()) for f in RPT_DAG_RUN.fields])
+    runs = spark.createDataFrame(
+        [
+            (f"d{i % 3}", f"r{i}", None, f"2024-03-{i % 27 + 1:02d}T00:00:00+00:00",
+             str(i % 2 == 0).lower(), f"2024-03-{i % 27 + 1:02d}T00:00:00+00:00",
+             f"2024-03-{i % 27 + 1:02d}T0{i % 10}:00:00+00:00", "success")
+            for i in range(50)
+        ],
+        wire,
+    )
+    landed = read_json_array(
+        spark, write_json_landing(runs, str(tmp_path / "runs"), "c00000", n_files=2), wire
+    )
+    assert landed.count() == 50
+    direct = load_report_table(runs, None, "rpt_dag_run").loaded.collect()
+    via_landing = load_report_table(landed, None, "rpt_dag_run").loaded.collect()
+    assert len(direct) == 50 and sorted(via_landing) == sorted(direct)
 
 
 def test_append_sink_accumulates(spark, tmp_path):
@@ -63,8 +95,8 @@ def test_append_sink_accumulates(spark, tmp_path):
 
 def test_rewritten_parquet_file_gets_a_fresh_footer(spark, tmp_path):
     """The footer cache is keyed per file by (path, size, mtime): a file
-    rewritten in place is re-read, for the Spark schema
-    ``read_parquet_table`` reads through and for the ns-column peek."""
+    rewritten in place is re-read, for the schema ``read_parquet_table``
+    reads through and for the ns columns it floors."""
     import os
     import shutil
 
@@ -72,7 +104,7 @@ def test_rewritten_parquet_file_gets_a_fresh_footer(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from cs_tutorial_reporting_spark.sources.readers import (
-        _ns_timestamp_cols,
+        _footer,
         read_parquet_table,
     )
 
@@ -93,7 +125,110 @@ def test_rewritten_parquet_file_gets_a_fresh_footer(spark, tmp_path):
         src = str(tmp_path / f"{unit}.parquet")
         pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp(unit))}), src)
         rewrite(src)
-        assert _ns_timestamp_cols(f) == want
+        assert list(_footer(f).ns_cols) == want
+
+
+def _arrow_fixture(tmp_path, name, arr, **write_kw):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / f"{name}.parquet")
+    pq.write_table(pa.table({"c": arr}), p, **write_kw)
+    return p
+
+
+def test_footer_schema_equals_spark_inference(spark, tmp_path):
+    """The declared schema the footer cache serves equals Spark's own
+    inference for the star tables and every foreign type the mapping
+    covers; ns columns are declared bigint before the floor; types the
+    mapping would get wrong fall back to inference."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    from cs_tutorial_reporting_spark.sources.readers import _declared, read_parquet_table
+
+    star = [f"{SF_SMOKE}/{t}.parquet" for t in STAR]
+    arrays = {
+        "i32": pa.array([1, None], pa.int32()),
+        "i64": pa.array([1, None], pa.int64()),
+        "f64": pa.array([1.5, None]),
+        "str": pa.array(["a", None]),
+        "bool": pa.array([True, None]),
+        "date": pa.array([datetime.date(2024, 1, 2), None], pa.date32()),
+        "dec": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(10, 2)),
+        "lf": pa.array([[1.0, None], None], pa.list_(pa.float32())),
+    }
+    for unit in ("ms", "us"):
+        for tz in (None, "UTC"):
+            arrays[f"ts_{unit}_{tz}"] = pa.array([1_700_000_000_123, None], pa.timestamp(unit, tz))
+    foreign = [_arrow_fixture(tmp_path, n, a) for n, a in arrays.items()]
+    for p in star + foreign:
+        ft = _declared(p)
+        assert ft is not None and not ft.ns_cols, p
+        assert ft.schema == spark.read.parquet(p).schema, p
+        assert read_parquet_table(spark, p).schema == ft.schema, p
+
+    for tz in (None, "UTC"):
+        ns_ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns", tz))
+        ns = _arrow_fixture(tmp_path, f"ns_{tz}", ns_ts)
+        ft = _declared(ns)
+        assert ft.ns_cols == ("c",) and ft.schema["c"].dataType == T.LongType()
+        (row,) = read_parquet_table(spark, ns).collect()
+        assert row.c == datetime.datetime(2023, 11, 14, 22, 13, 20, 123456)
+
+    unmapped = [
+        _arrow_fixture(tmp_path, "u8", pa.array([1], pa.uint8())),
+        _arrow_fixture(tmp_path, "null", pa.array([None], pa.null())),
+        _arrow_fixture(tmp_path, "dur", pa.array([1], pa.duration("us"))),
+        _arrow_fixture(
+            tmp_path, "i96", pa.array([1], pa.timestamp("ns")), use_deprecated_int96_timestamps=True
+        ),
+    ]
+    for p in unmapped:
+        assert _declared(p) is None, p
+        assert read_parquet_table(spark, p).schema == spark.read.parquet(p).schema, p
+
+
+def test_declared_reads_start_no_jobs_and_leave_conf_alone(spark, tmp_path, jobs_started):
+    """Star-table and foreign-file reads start no Spark job, and no reader
+    changes the session conf: a plain read of an ns file still fails
+    afterwards, so nothing leaked ``nanosAsLong``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from cs_tutorial_reporting_spark.sources.readers import load_table, read_parquet_table
+    from cs_tutorial_reporting_spark.streaming.sessions import read_event_stream
+
+    for name in STAR:
+        assert jobs_started(lambda: load_table(spark, SF_SMOKE, name))[1] == 0, name
+    foreign = _arrow_fixture(tmp_path, "foreign", pa.array([1, 2], pa.int64()))
+    assert jobs_started(lambda: read_parquet_table(spark, foreign))[1] == 0
+
+    d = tmp_path / "ns"
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")),
+                "user_id": pa.array([1], pa.int64()),
+                "event_type": ["a"],
+                "value": [1.0],
+                "props": ["{}"],
+            }
+        ),
+        str(d / "events.parquet"),
+    )
+    conf = spark.conf.getAll
+    load_table(spark, str(d), "events").collect()
+    read_parquet_table(spark, str(d / "events.parquet")).collect()
+    read_event_stream(spark, str(d / "events.parquet"))
+    assert spark.conf.getAll == conf
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        spark.read.parquet(str(d / "events.parquet")).collect()
 
 
 def test_airflow_rest_datasource_paginates(spark, tmp_path):
