@@ -5,20 +5,27 @@ path) using portable hash primitives (md5 — identical in DuckDB) so the
 driver's oracle can value-check them:
 
 - exact:        hash-groupBy on normalized text, keep min doc_id
-- minhash LSH:  word-shingles → k md5 minhashes → bands → bucket
-                self-join → exact-Jaccard verify
+- minhash LSH:  word-shingles → k md5 minhashes → band keys → buckets
+                (one collect_list per band key, pairs expanded in-row)
+                → exact-Jaccard verify; also persisted as a band index
+                (write/append/probe) so a new batch pays O(batch)
 - simhash:      per-token 60-bit hash → bitwise majority vote → 16-bit
                 fingerprint; near-dups = same fingerprint
 - n-gram Jaccard: exact set similarity on shingle sets for candidate
                 pairs
 - embedding near-dup: cosine ≥ threshold over normalized embeddings
 
+Every MinHash-LSH entry point is built from four helpers: ``_sign``
+(shingles + salted signature), ``_band_rows`` (the band-key format),
+``_buckets`` + ``_bucket_pairs`` (bucket cap and in-row pair expansion)
+and ``_jaccard`` (the rounded exact verify).
+
 Scale design (100 TB): every stage is a map or a single hash shuffle.
-MinHash bands replace the quadratic all-pairs comparison with
-``#bands`` hash-partitioned self-joins whose buckets are tiny; the
-exact-verify join only touches candidate pairs. Skewed buckets (boiler-
-plate shingles) are handled by AQE skew-join splitting; a bucket-size
-cap (``max_bucket``) guards the pathological all-identical case.
+MinHash bands replace the quadratic all-pairs comparison with one
+shuffle that groups each band key's ids into a bucket; the
+exact-verify join only touches candidate pairs. A bucket-size cap
+(``max_bucket``) drops degenerate buckets (boilerplate shingles, the
+all-identical corpus) before any quadratic work.
 """
 
 from __future__ import annotations
@@ -39,17 +46,14 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     minimum (deterministic; ``id_col`` is assumed unique, the PK
     contract every caller satisfies).
 
-    Shape (r11): ONE ``min_by(struct(row), id)`` aggregate keyed on
-    the 16-byte md5 — one scan of the input and one PARTIALLY-COMBINED
-    shuffle (hot duplicate groups collapse map-side before the wire,
-    so a text duplicated a billion times ships one row per map task —
-    the skew robustness dedup inputs specifically need). Replaces the
-    r6–r10 groupBy-min + left-semi-join-back dataflow, which evaluated
-    the input TWICE (the same double-evaluation class as the r11
-    gapfill/anomaly finds — on the registered doubled-corpus query
-    that meant 4 scans) and paid a second full-row shuffle on the id:
-    measured 1.15 → 0.55 s at sf0.1, results identical (bitwise twin
-    pinned in test_exact_dedup_minby_equals_semijoin_form)."""
+    One ``min_by(struct(row), id)`` aggregate keyed on the 16-byte md5:
+    one scan of the input and one partially-combined shuffle (hot
+    duplicate groups collapse map-side, so a text duplicated a billion
+    times ships one row per map task — the skew robustness dedup inputs
+    need). A groupBy-min plus semi-join-back form would evaluate the
+    input twice and shuffle full rows a second time (measured 1.15 →
+    0.55 s at sf0.1; results identical, the twin is pinned in
+    test_exact_dedup_minby_equals_semijoin_form)."""
     h = F.md5(normalize_text(F.col(text_col))).alias("__h")
     cols = df.columns
     return (
@@ -89,25 +93,164 @@ def shingles(col, n: int = 3):
     return bind_once(words, _sh)
 
 
-def minhash_signature(shingle_col, num_hashes: int = 8):
-    """k minhash values: min over shingles of md5-60bit(seed || shingle).
-    Seeded by prefixing the shingle — portable to any engine with md5.
+def _fan_out(df: DataFrame, *keys: str, per_core: int = 2) -> DataFrame:
+    """Repartition ``df`` (by ``keys``, else round-robin) to ``per_core``
+    × the session parallelism when it has fewer partitions. Small-file
+    inputs arrive as 1-2 partitions and the stage that follows is
+    compute-bound; at real scale the input is already wide and this is
+    a no-op."""
+    target = df.sparkSession.sparkContext.defaultParallelism * per_core
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, *keys)
+    return df
 
-    SPEC REFERENCE ONLY — the pipeline computes the identical values
-    via explode + min-aggregates (see minhash_lsh_pairs): this
-    transform-over-lambda form was observed mis-evaluating in long
-    many-query sessions (round-4 note in BASELINE.md). Do not put it
-    back on the hot path without re-verifying that note."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingle_col, lambda s, j=j: hash60(F.concat(F.lit(f"{j}|"), s))
-                )
-            ).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ]
+
+def _sign(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    carry: dict[str, str] | None = None,
+    fan_out: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The MinHash sign stage: ``(sh, mh)`` with ``sh`` = (``__id``,
+    *carry, ``__sh``), each doc's distinct word ``shingle_n``-gram set,
+    and ``mh`` = (``__id``, *carry, ``__mh0`` … ``__mh{num_hashes-1}``)
+    where ``__mh{j}`` is the min over the doc's shingles s of
+    ``hash60("{j}|" + s)``. ``carry`` maps an alias to a source column
+    that rides along; each must be a function of the id, so it leaves
+    the signature grouping unchanged. ``fan_out`` spreads a narrow input
+    (:func:`_fan_out`) before the shingle stage.
+
+    ``sh`` is localCheckpointed eagerly. It feeds the signature and both
+    verify joins, and a shingle set costs ~10 ms/doc to build.
+    localCheckpoint, not persist: the blocks are reclaimed by the
+    ContextCleaner once the frame is garbage, while persist() keeps a
+    CacheManager entry nothing unpersists (measured 2.2× slower on the
+    benched query after 4 reps). Eager, because a lazy checkpoint lets
+    the lambda-bearing shingle HOF evaluate once per consumer, and
+    nested HOFs were observed returning context-dependent values in long
+    many-query sessions (BASELINE.md round-4 note): the signature and
+    the verify sets could disagree. For the same reason the signature is
+    an explode + plain min-aggregates (md5/concat/min carry no lambda),
+    not a transform over the shingle array; the cost is one
+    map-combined shuffle of (id, k mins) rows."""
+    carry = carry or {}
+    src = df.select(
+        F.col(id_col).alias("__id"),
+        *[F.col(c).alias(a) for a, c in carry.items()],
+        F.col(text_col).alias("__txt"),
     )
+    if fan_out:
+        src = _fan_out(src, "__id")
+    sh = src.select(
+        "__id", *carry, shingles(F.col("__txt"), shingle_n).alias("__sh")
+    ).localCheckpoint(eager=True)
+    mh = (
+        sh.select("__id", *carry, F.explode("__sh").alias("__s"))
+        .groupBy("__id", *carry)
+        .agg(
+            *[
+                F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(
+                    f"__mh{j}"
+                )
+                for j in range(num_hashes)
+            ]
+        )
+    )
+    return sh, mh
+
+
+def _band_rows(
+    mh: DataFrame,
+    num_hashes: int,
+    band_sizes: int | dict[str, int],
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """One row per (doc, band) of a signature frame. Band b of size r
+    has the key ``"b|mh_{b·r}|…|mh_{b·r+r-1}"`` (signature longs in
+    decimal): the format the persisted band index stores, so it is
+    frozen. Rows carry only the id, ``carry`` and the key; the shingle
+    sets stay out of the band shuffle and join back at verify time.
+
+    ``band_sizes`` is one band size → (``__id``, *carry, ``__band``), or
+    a ``{tag: band_size}`` map of several bandings of the same
+    signature → (``__id``, *carry, ``__tag``, ``__band``) from a single
+    explode, so K bandings share one band shuffle."""
+    legs = band_sizes if isinstance(band_sizes, dict) else {None: band_sizes}
+    keys = [
+        (
+            tag,
+            F.concat_ws(
+                "|",
+                F.lit(str(b)),
+                *[F.col(f"__mh{b * r + i}").cast("string") for i in range(r)],
+            ),
+        )
+        for tag, r in legs.items()
+        for b in range(num_hashes // r)
+    ]
+    if None in legs:
+        return mh.select(
+            "__id", *carry, F.explode(F.array(*[k for _, k in keys])).alias("__band")
+        )
+    tagged = [F.struct(F.lit(t).alias("__tag"), k.alias("__band")) for t, k in keys]
+    return mh.select(
+        "__id", *carry, F.explode(F.array(*tagged)).alias("__tb")
+    ).select("__id", *carry, "__tb.__tag", "__tb.__band")
+
+
+def _buckets(rows: DataFrame, keys: list[str], max_bucket: int, *aggs) -> DataFrame:
+    """Group ``rows`` (``__id`` plus ``keys``) into buckets: (*keys,
+    ``__ids``, *aggs), ``__ids`` the sorted member ids, in one shuffle.
+    Buckets of one member pair with nothing, and buckets above
+    ``max_bucket`` members are dropped before any quadratic work: a
+    degenerate bucket (empty-text boilerplate, an all-identical corpus)
+    would re-create the all-pairs blowup and needs exact dedup
+    instead."""
+    return (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"), *aggs)
+        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, id_a, id_b) for every i < j of each bucket's sorted
+    ``__ids``, expanded inside the row; a pair sharing several buckets
+    appears once per bucket. posexplode gives (position, id_a) and an
+    explode of the suffix slice gives each id_b; a slice past the end is
+    empty and explode drops that row. No lambda is involved (nested
+    transforms are the round-4 hazard class), and the plan stays
+    whole-stage-codegen generate nodes."""
+    return buckets.select(
+        *keep, "__ids", F.posexplode("__ids").alias("__i", "id_a")
+    ).select(
+        *keep,
+        "id_a",
+        F.explode(
+            F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
+        ).alias("id_b"),
+    )
+
+
+def _jaccard(
+    pairs: DataFrame, sh: DataFrame, threshold: float | None = None
+) -> DataFrame:
+    """``pairs``' columns plus ``jaccard``: the exact Jaccard of the
+    id_a and id_b shingle sets in ``sh`` (``__id``, ``__sh``), rounded
+    to 6 places (the oracle's grid). With ``threshold``, only pairs at
+    or above it are kept. The joins touch candidate ids only."""
+
+    def side(s: str) -> DataFrame:
+        return sh.select(F.col("__id").alias(f"id_{s}"), F.col("__sh").alias(f"__sh_{s}"))
+
+    joined = pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
+    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
+    scored = joined.select(*pairs.columns, F.round(inter / union, 6).alias("jaccard"))
+    return scored if threshold is None else scored.filter(F.col("jaccard") >= threshold)
 
 
 def minhash_sign(
@@ -120,52 +263,26 @@ def minhash_sign(
     """Materialize the MinHash sign stage ONCE for reuse across several
     bandings: returns an eagerly localCheckpointed frame
     ``(__id, __sh, __mh0..__mh{n-1})`` — shingle set plus the full
-    signature — built with the exact expressions of
-    :func:`minhash_lsh_pairs` (same salted hash60 min-aggregates, so
-    signatures are bit-identical to the inline path's).
+    signature, bit-identical to the inline path of
+    :func:`minhash_lsh_pairs` (both run :func:`_sign`).
 
-    Why it exists (round 9, lsh_recall_audit): a banding parameter
-    sweep (the S-curve audit an operator runs before committing a
-    100 TB dedup to b×r) calls minhash_lsh_pairs once per banding —
-    each call re-scanning the corpus and re-computing shingles +
-    signatures. At 100 TB the sign stage IS the dominant cost (full
-    corpus scan + explode + map-combined shuffle); sign-once/band-K×
-    makes the sweep's marginal banding cost just the band shuffle.
-    Pass the result as ``presigned=`` to :func:`minhash_lsh_pairs`.
+    A banding parameter sweep (the S-curve audit an operator runs
+    before committing a 100 TB dedup to b×r) would otherwise re-scan
+    the corpus and re-sign it once per banding; the sign stage (full
+    scan + explode + map-combined shuffle) is the dominant cost, so
+    sign-once/band-K× leaves each banding just its band shuffle. Pass
+    the result as ``presigned=`` to :func:`minhash_lsh_pairs` or as
+    ``signed`` to :func:`minhash_lsh_pairs_multiband`.
+
+    The joined frame is checkpointed too, so the per-banding consumers
+    read materialized blocks instead of re-running the signature
+    shuffle. The sign parameters are stamped as schema metadata on
+    ``__sh`` (free to read, survives the checkpoint); the banding calls
+    validate the stamp, so a shingle_n/num_hashes mismatch fails loudly
+    instead of producing wrong pairs.
     """
-    spark = df.sparkSession
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    target = spark.sparkContext.defaultParallelism * 2
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, "__id")
-    # Eager checkpoint BEFORE the signature aggregate (ADVICE r9):
-    # both the min-agg and the join below consume sh_df, so without it
-    # the lambda-bearing shingle HOF evaluates twice inside one job —
-    # the documented round-4 hazard (context-dependent HOF evaluation
-    # in long sessions) could let the signature and the verify shingle
-    # set disagree WITHIN one signed frame. Mirrors the inline path.
-    sh_df = src.select(
-        "__id", shingles(F.col("__txt"), shingle_n).alias("__sh")
-    ).localCheckpoint(eager=True)
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", F.explode("__sh").alias("__s"))
-        .groupBy("__id")
-        .agg(*salted_mins)
-    )
-    # a second eager checkpoint of the JOINED frame: the per-banding
-    # consumers read materialized blocks only — without it every
-    # banding would re-run the signature shuffle, the exact cost
-    # sign-once exists to pay once. sh_df's blocks are reclaimed by
-    # the ContextCleaner once this function returns.
-    signed = sh_df.join(mh, "__id").localCheckpoint(eager=True)
-    # Stamp the sign parameters on the frame (schema metadata — free
-    # to read, survives checkpoint): minhash_lsh_pairs(presigned=)
-    # validates them so a shingle_n/num_hashes mismatch fails loudly
-    # instead of silently producing wrong pairs (ADVICE r9).
+    sh, mh = _sign(df, text_col, id_col, num_hashes, shingle_n, fan_out=True)
+    signed = sh.join(mh, "__id").localCheckpoint(eager=True)
     return signed.withMetadata(
         "__sh", {"shingle_n": shingle_n, "num_hashes": num_hashes}
     )
@@ -186,146 +303,36 @@ def minhash_lsh_pairs(
     with exact Jaccard over shingle sets.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, distinct. The
-    all-pairs O(n²) comparison is replaced by ``num_hashes/band_size``
-    equi-joins on band keys; only same-bucket pairs are verified.
-    ``max_bucket`` drops degenerate buckets (e.g. empty-text boilerplate)
-    that would re-create the quadratic blowup.
+    all-pairs O(n²) comparison is replaced by one shuffle grouping the
+    ``num_hashes/band_size`` band keys per doc into buckets; only
+    same-bucket pairs are verified. ``max_bucket`` drops degenerate
+    buckets (e.g. empty-text boilerplate) that would re-create the
+    quadratic blowup.
 
     ``presigned``: optional output of :func:`minhash_sign` (same
-    ``num_hashes``/``shingle_n``) — skips the shingle+signature stage
-    so a banding sweep signs the corpus once. Output is bit-identical
-    either way (pytest-pinned); when omitted, the inline plan is
-    unchanged from pre-round-9 (it backs attested benched queries).
+    ``num_hashes``/``shingle_n``) — skips the sign stage so a banding
+    sweep signs the corpus once. The banding, cap and verify are the
+    same code either way, so the output is bit-identical.
     """
     if presigned is not None:
         _validate_presigned(presigned, num_hashes, shingle_n)
-        return _lsh_pairs_from_signed(
-            presigned, num_hashes, band_size, jaccard_threshold, max_bucket
-        )
-    n_bands = num_hashes // band_size
-    spark = df.sparkSession
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    # Small-file inputs arrive as 1-2 partitions; the shingle+signature
-    # stage is compute-bound, so fan it out. At real scale the input is
-    # already wide and this is a no-op.
-    target = spark.sparkContext.defaultParallelism * 2
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, "__id")
-    # Shingle sets are reused three times (banding + both verify probes)
-    # and cost ~10 ms/doc to build — materialize once, don't recompute.
-    # localCheckpoint (not persist): same MEMORY_AND_DISK storage, but
-    # the blocks are reclaimed by the ContextCleaner as soon as the RDD
-    # is garbage collected — persist() registers a CacheManager entry
-    # nothing ever unpersists, which accumulates full shingle copies
-    # across repeated calls (bench loops, long sessions) until eviction
-    # thrash sets in (measured 2.2× on the benched query at 4 reps).
-    # eager=True (round-4 hardening): a LAZY localCheckpoint leaves a
-    # window where the ContextCleaner can race the first materialization
-    # in long many-query sessions (observed once in a full-registry
-    # sf0.1 sweep as a benign accumulator-GC error alongside ONE
-    # wrong-by-one-pair result; eager materialization closes the window
-    # and costs nothing - the same job computes the blocks either way).
-    sh_df = src.select(
-        "__id", shingles(F.col("__txt"), shingle_n).alias("__sh")
-    ).localCheckpoint(eager=True)
-    # band key = "band_index|mh_i|mh_i+1..." string — one row per band;
-    # bands carry ONLY (id, band): the shingle arrays stay out of the
-    # band shuffle and join back by id at verify time.
-    #
-    # Signature via explode + plain min-aggregates, NOT the
-    # minhash_signature transform (round-4 wrong-results fix): after
-    # ~70 registry queries in one session, nested higher-order lambda
-    # evaluation was observed returning context-dependent garbage for
-    # that expression — same text, same plan, DIFFERENT signature
-    # values per evaluation, reproduced deterministically by replaying
-    # the registry prefix at sf0.1 (fresh sessions and the DuckDB
-    # oracle agree with each other; the polluted session loses real
-    # pairs). Plain expressions (md5/concat/min) carry no lambda
-    # binding to corrupt. Cost: one extra map-combined shuffle whose
-    # rows are (id, 8 mins) — scale-safe; the signature stays
-    # bit-identical to minhash_signature's spec.
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", F.explode("__sh").alias("__s"))
-        .groupBy("__id")
-        .agg(*salted_mins)
-    )
-    bands = mh.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
-    )
-    # One shuffle groups each bucket; expansion to id pairs happens
-    # inside the row (sorted ids → (i, j>i) combinations), with the
-    # pathological-bucket guard applied before any quadratic work.
-    buckets = (
-        bands.groupBy("__band")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    # Pair expansion with ZERO lambda expressions (round-6: the last
-    # 2-level nested transform on any checked path is gone — BASELINE.md
-    # round-4 nested-lambda hazard class): posexplode each sorted
-    # bucket into (position, id_a), then explode the suffix slice for
-    # id_b > id_a. slice() past the array end yields an empty array and
-    # explode drops that row, so the last element pairs with nothing —
-    # exactly the (i, j>i) combinations the nested transform produced.
-    # Row counts are identical (the cap already bounded the quadratic),
-    # and the plan stays whole-stage-codegen generate nodes.
-    pairs = (
-        buckets.select(
-            F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    verified = pairs.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+        sh = mh = presigned
+    else:
+        sh, mh = _sign(df, text_col, id_col, num_hashes, shingle_n, fan_out=True)
+    buckets = _buckets(_band_rows(mh, num_hashes, band_size), ["__band"], max_bucket)
+    pairs = _bucket_pairs(buckets).dropDuplicates(["id_a", "id_b"])
+    return _jaccard(pairs, sh, jaccard_threshold)
 
 
 def _validate_presigned(
     presigned: DataFrame, num_hashes: int, shingle_n: int
 ) -> None:
     """Fail loudly when a ``presigned`` frame was built with different
-    sign parameters than the banding call assumes (ADVICE r9): a
-    shingle_n mismatch — or a signed frame from another corpus/column
-    shape — previously produced WRONG PAIRS silently; only a
-    num_hashes mismatch that referenced a missing __mh column failed.
-    Checks the minhash_sign metadata stamp (schema-only, no job) and
-    the exact __mh column span."""
+    sign parameters than the banding call assumes: a shingle_n
+    mismatch, or a signed frame of another shape, would otherwise band
+    and verify into wrong pairs without an error. Checks the
+    minhash_sign metadata stamp (schema-only, no job) and the exact
+    __mh column span."""
     cols = set(presigned.columns)
     missing = {"__id", "__sh"} - cols
     if missing:
@@ -347,80 +354,13 @@ def _validate_presigned(
         if key not in meta:
             raise ValueError(
                 "presigned frame has no minhash_sign parameter stamp on"
-                " __sh — re-sign with minhash_sign() (frames signed"
-                " before round 10 must be rebuilt)"
+                " __sh — re-sign with minhash_sign()"
             )
         if int(meta[key]) != expect:
             raise ValueError(
                 f"presigned frame was signed with {key}={int(meta[key])}"
                 f" but the banding call expects {key}={expect}"
             )
-
-
-def _lsh_pairs_from_signed(
-    signed: DataFrame,
-    num_hashes: int,
-    band_size: int,
-    jaccard_threshold: float,
-    max_bucket: int,
-) -> DataFrame:
-    """Banding + bucket pair expansion + exact-Jaccard verify from a
-    :func:`minhash_sign` frame — the same expressions as the inline
-    path of :func:`minhash_lsh_pairs` (band key strings, sorted-bucket
-    posexplode/slice expansion, array_intersect verify), minus the
-    sign stage. Kept textually parallel to the inline path; any edit
-    there must land here too (the bitwise-equality pytest pins it)."""
-    n_bands = num_hashes // band_size
-    sh_df = signed.select("__id", "__sh")
-    bands = signed.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
-    )
-    buckets = (
-        bands.groupBy("__band")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    pairs = (
-        buckets.select(
-            F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    verified = pairs.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
 
 
 def minhash_lsh_pairs_multiband(
@@ -434,82 +374,20 @@ def minhash_lsh_pairs_multiband(
     """Several bandings of ONE :func:`minhash_sign` frame in a single
     banding pass: returns tagged pairs ``(__tag, id_a, id_b, jaccard)``
     where filtering on ``__tag == t`` yields EXACTLY the output of
-    ``minhash_lsh_pairs(presigned=signed, band_size=band_specs[t])``
-    (pytest-pinned).
+    ``minhash_lsh_pairs(presigned=signed, band_size=band_specs[t])``.
 
-    Why (r14, guide §2.4 — the banding-parameter-sweep shape): a sweep
-    over K bandings ran K full banding pipelines off the shared signed
-    frame — K band shuffles, K bucket groupings, K pair-dedup
-    exchanges, K double verify joins. The rows those K pipelines
-    shuffle are disjoint by construction (each carries its banding's
-    band keys), so ONE pipeline over leg-tagged band structs moves the
-    same bytes through ONE shuffle per stage. Per-leg semantics are
-    preserved exactly because ``__tag`` rides in every key: buckets
-    group by (tag, band) — identical per-leg bucket populations, so
-    the ``max_bucket`` degenerate-bucket cap fires per leg exactly as
-    before — pair dedup keys on (tag, id_a, id_b), and the verify
-    expressions are the single-leg ones verbatim. Kept textually
-    parallel to :func:`_lsh_pairs_from_signed`; any edit there must
-    land here too (the equality pytest pins it).
+    The K bandings' band rows are disjoint (each carries its own tag),
+    so one pipeline over tagged rows moves the same bytes through one
+    shuffle per stage instead of K. ``__tag`` rides in every key:
+    buckets group by (tag, band), so the ``max_bucket`` cap sees each
+    leg's own bucket sizes; pair dedup keys on (tag, id_a, id_b).
     """
     _validate_presigned(signed, num_hashes, shingle_n)
-    sh_df = signed.select("__id", "__sh")
-    structs = []
-    for tag, band_size in band_specs.items():
-        n_bands = num_hashes // band_size
-        for b in range(n_bands):
-            structs.append(
-                F.struct(
-                    F.lit(tag).alias("__tag"),
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    ).alias("__band"),
-                )
-            )
-    bands = signed.select(
-        "__id", F.explode(F.array(*structs)).alias("__tb")
-    ).select(
-        "__id",
-        F.col("__tb.__tag").alias("__tag"),
-        F.col("__tb.__band").alias("__band"),
+    buckets = _buckets(
+        _band_rows(signed, num_hashes, band_specs), ["__tag", "__band"], max_bucket
     )
-    buckets = (
-        bands.groupBy("__tag", "__band")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    pairs = (
-        buckets.select(
-            "__tag", F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "__tag",
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-        .dropDuplicates(["__tag", "id_a", "id_b"])
-    )
-    verified = pairs.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("__tag", "id_a", "id_b", "jaccard")
-    )
+    pairs = _bucket_pairs(buckets, "__tag").dropDuplicates(["__tag", "id_a", "id_b"])
+    return _jaccard(pairs, signed, jaccard_threshold)
 
 
 def minhash_lsh_pairs_incremental(
@@ -528,59 +406,34 @@ def minhash_lsh_pairs_incremental(
     production shape for continuous crawls, where intra-corpus pairs
     were already found in earlier runs and must not be re-derived.
 
-    Same signature/band/cap/verify contract as ``minhash_lsh_pairs``
-    (identical hashes, identical max_bucket guard), but pair
+    Same signature/band/cap/verify as ``minhash_lsh_pairs``, but pair
     expansion is anchored on the NEW side — each bucket expands only
     (new doc) × (bucket member) combinations — so the quadratic term
     is |new| × bucket, never |corpus| × bucket. Returns
     (id_a, id_b, jaccard), id_a < id_b, distinct, each pair
-    containing ≥1 new doc.
-
-    r14 shape (guide §2.4): one band shuffle with in-bucket expansion
-    — the sorted id array plus its new-id subset are collected per
-    band and new-anchored pairs expand in-row, exactly like the full
-    path's posexplode+slice form. The previous join form (new-side ×
-    index equi-join on __band) spent two extra joins (recovering the
-    __new flag; re-attaching the ≤max_bucket filter) and an extra
-    eager-checkpoint job barrier for the same pair set.
+    containing ≥1 new doc. One band shuffle collects each bucket's
+    sorted ids plus its new-id subset; the cap counts every member,
+    old and new.
 
     100 TB: the corpus side's (id, band) rows and shingle sets are
-    exactly what a persisted dedup index stores — in production they
-    are READ, not recomputed (the ANN partitioned-codes append
-    analog); the harness recomputes both sides because the parquet
-    tables are its only input. Each run then pays: new-batch
-    signatures + one band join against the index + verify joins that
-    touch only candidate ids.
+    exactly what the persisted band index (:func:`write_band_index`,
+    :func:`probe_band_index`) stores, so in production they are read,
+    not recomputed; this function recomputes both sides from its
+    input.
     """
-    # shared signature pipeline (_shingle_band_frames — the same
-    # expressions build the persisted index, so index probes stay
-    # probe-compatible by construction, not by parallel maintenance;
-    # the bit-identity is additionally pinned by the lifecycle pytest)
-    sh_df, bands = _shingle_band_frames(
-        df,
-        text_col,
-        id_col,
-        num_hashes,
-        band_size,
-        shingle_n,
-        extra_cols={"__new": new_col},
+    sh, mh = _sign(
+        df, text_col, id_col, num_hashes, shingle_n, carry={"__new": new_col}
     )
-    # One band shuffle; the ≤max_bucket cap counts EVERY bucket member
-    # (old and new — identical to the former count-then-join form), and
-    # collect_list skips the nulls of the when(), so __new_ids is the
-    # bucket's new-doc subset.
-    buckets = (
-        bands.groupBy("__band")
-        .agg(
-            F.array_sort(F.collect_list("__id")).alias("__ids"),
-            F.array_sort(
-                F.collect_list(F.when(F.col("__new"), F.col("__id")))
-            ).alias("__new_ids"),
-        )
-        .filter(
-            (F.size("__ids") <= max_bucket) & (F.size("__new_ids") >= 1)
-        )
-    )
+    # collect_list skips the nulls of the when(): __new_ids is the
+    # bucket's new-doc subset
+    buckets = _buckets(
+        _band_rows(mh, num_hashes, band_size, carry=("__new",)),
+        ["__band"],
+        max_bucket,
+        F.array_sort(F.collect_list(F.when(F.col("__new"), F.col("__id")))).alias(
+            "__new_ids"
+        ),
+    ).filter(F.size("__new_ids") >= 1)
     cand = (
         buckets.select(
             F.explode("__new_ids").alias("__id_n"), F.col("__ids")
@@ -593,20 +446,7 @@ def minhash_lsh_pairs_incremental(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    verified = cand.join(
-        sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard(cand, sh, jaccard_threshold)
 
 
 def minhash_dedup(
@@ -685,20 +525,7 @@ def ngram_jaccard_pairs(
     sh = df.select(
         F.col(id_col).alias("__id"), shingles(F.col(text_col), n).alias("__sh")
     )
-    joined = (
-        pairs.join(
-            sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa")),
-            "id_a",
-        ).join(
-            sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb")),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
-    union = (F.size("__sa") + F.size("__sb")).cast("double") - inter
-    return joined.select(
-        "id_a", "id_b", F.round(inter / union, 6).alias("jaccard")
-    )
+    return _jaccard(pairs, sh).select("id_a", "id_b", "jaccard")
 
 
 def bucket_corpus(
@@ -722,11 +549,7 @@ def bucket_corpus(
     corpus size), so every later probe pays zero per-call counting."""
     from .similarity import hyperplane_bucket
 
-    src = emb
-    target = emb.sparkSession.sparkContext.defaultParallelism * 2
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    bucketed = src.select(
+    bucketed = _fan_out(emb).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
         hyperplane_bucket(vec_col, n_planes, dim).alias("__bkt"),
@@ -792,13 +615,9 @@ def embedding_near_dup_pairs(
     else:
         a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
         b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-        # The pair comparison is compute-bound and inherits the (often
-        # single-file) input partitioning — a cross join of 1×1 partitions
-        # runs the whole O(n²) scoring on one core. Fan the probe side out.
-        target = emb.sparkSession.sparkContext.defaultParallelism * 2
-        if a.rdd.getNumPartitions() < target:
-            a = a.repartition(target)
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+        # a cross join of 1×1 partitions would run the whole O(n²)
+        # scoring on one core: fan the probe side out
+        pairs = _fan_out(a).crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn(
             # single-level flat fold — no nested lambda binding
@@ -956,7 +775,7 @@ def winnow_containment_pairs(
     CONTAINED in a large one, but the contained span's fingerprints
     still match exactly.
 
-    Scale shape (mirrors minhash_lsh_pairs): the posting list carries
+    Scale shape (the MinHash bucket core): the posting list carries
     only (id, fp) 16-byte rows; one shuffle groups each fingerprint's
     posting, the ``max_postings`` cap drops stop-gram postings (shared
     boilerplate) BEFORE the in-row quadratic pair expansion, and a
@@ -964,35 +783,16 @@ def winnow_containment_pairs(
     """
     from ..functions.text import winnow_fingerprints
 
-    spark = df.sparkSession
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    target = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, "__id")
+    src = _fan_out(
+        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt")),
+        "__id",
+        per_core=1,
+    )
     flat = src.select(
         "__id", F.explode(winnow_fingerprints(F.col("__txt"))).alias("__fp")
     )
-    postings = (
-        flat.groupBy("__fp")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_postings))
-    )
-    # Pair expansion via posexplode + suffix slice — the same
-    # zero-lambda rewrite as minhash_lsh_pairs above (this was the
-    # LAST 2-level nested transform on a checked path; BASELINE.md
-    # round-4 nested-lambda hazard class). slice() past the array end
-    # is empty and explode drops the row, so each sorted posting list
-    # yields exactly its (i, j>i) combinations.
     return (
-        postings.select(
-            F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
+        _bucket_pairs(_buckets(flat, ["__fp"], max_postings))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -1425,83 +1225,13 @@ def lsh_band_funnel(
     expansion under the same cap, verify joins touching candidates
     only — the audit costs one run of the index it audits.
     """
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
-    sh_df = src.select(
-        "__id", shingles(F.col("__txt"), shingle_n).alias("__sh")
-    ).localCheckpoint(eager=True)
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", F.explode("__sh").alias("__s"))
-        .groupBy("__id")
-        .agg(*salted_mins)
-    )
-    n_bands = num_hashes // band_size
-    bands = mh.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("bi"),
-                        F.concat_ws(
-                            "|",
-                            F.lit(str(b)),
-                            *[
-                                F.col(f"__mh{b * band_size + i}").cast("string")
-                                for i in range(band_size)
-                            ],
-                        ).alias("key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__b"),
-    ).select("__id", F.col("__b.bi").alias("__bi"), F.col("__b.key").alias("__key"))
-    buckets = (
-        bands.groupBy("__bi", "__key")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= max_bucket))
-    )
-    cand = (
-        buckets.select(
-            "__bi", "__ids", F.posexplode("__ids").alias("__i", "id_a")
-        )
-        .select(
-            "__bi",
-            "id_a",
-            F.explode(
-                F.slice("__ids", F.col("__i") + F.lit(2), F.size("__ids"))
-            ).alias("id_b"),
-        )
-    )
-    ver = (
-        cand.join(
-            sh_df.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            sh_df.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sb")),
-            "id_b",
-        )
-        .select(
-            "__bi",
-            (
-                F.round(
-                    F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                    / (
-                        (F.size("__sa") + F.size("__sb")).cast("double")
-                        - F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                    ),
-                    6,
-                )
-                >= jaccard_threshold
-            )
-            .cast("int")
-            .alias("__ok"),
-        )
+    sh, mh = _sign(df, text_col, id_col, num_hashes, shingle_n)
+    # a band key starts with its band index (see _band_rows)
+    buckets = _buckets(
+        _band_rows(mh, num_hashes, band_size), ["__band"], max_bucket
+    ).select(F.substring_index("__band", "|", 1).cast("int").alias("__bi"), "__ids")
+    ver = _jaccard(_bucket_pairs(buckets, "__bi"), sh).select(
+        "__bi", (F.col("jaccard") >= jaccard_threshold).cast("int").alias("__ok")
     )
     nb = buckets.groupBy("__bi").agg(F.count("*").alias("n_buckets"))
     return (
@@ -1525,79 +1255,14 @@ def lsh_band_funnel(
 
 
 # ---------------------------------------------------------------------------
-# Persisted MinHash band index (VERDICT r6 next-round #3): the dedup
-# twin of the ANN partitioned layout (similarity.py::
-# write_ivfpq_partitioned and ivfpq_topk(encoded=...)).
-# minhash_lsh_pairs_incremental has the right PROBE SHAPE (|new| ×
-# bucket) but recomputes the corpus signatures every run; these three
-# functions persist them so a crawl batch pays O(batch), never
-# O(corpus).
+# Persisted MinHash band index: the dedup twin of the ANN partitioned
+# layout (similarity.py::write_ivfpq_partitioned and
+# ivfpq_topk(encoded=...)). minhash_lsh_pairs_incremental has the right
+# PROBE SHAPE (|new| × bucket) but recomputes the corpus signatures
+# every run; these functions persist them, with the same _sign and
+# _band_rows the full paths use, so a crawl batch pays O(batch), never
+# O(corpus), and a probe is bit-identical to the full recompute.
 # ---------------------------------------------------------------------------
-
-
-def _shingle_band_frames(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    band_size: int,
-    shingle_n: int,
-    extra_cols: dict[str, str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared signature pipeline: returns ``(sh_df, bands)`` where
-    ``sh_df`` is (``__id``, ``__sh``) — eagerly checkpointed, it feeds
-    both the band build and the verify joins — and ``bands`` is
-    (``__id``, ``__band``), one row per (doc, band). Hashing is
-    IDENTICAL to minhash_lsh_pairs / minhash_lsh_pairs_incremental
-    (salted md5-prefix min over exploded shingles; plain expressions,
-    no higher-order lambdas — the round-4 hazard class), so an index
-    built here is probe-compatible with the full-recompute paths.
-
-    ``extra_cols`` ride on ``sh_df`` AND on ``bands`` (r14: threaded
-    through the signature aggregate as extra group keys — each is
-    functionally dependent on ``__id``, so the grouping cardinality
-    and the signature values are unchanged; previously consumers had
-    to join ``bands`` back to ``sh_df`` to recover them)."""
-    n_bands = num_hashes // band_size
-    extras = list((extra_cols or {}).keys())
-    carried = [
-        F.col(srccol).alias(alias)
-        for alias, srccol in (extra_cols or {}).items()
-    ]
-    sh_df = df.select(
-        F.col(id_col).alias("__id"),
-        *carried,
-        shingles(F.col(text_col), shingle_n).alias("__sh"),
-    ).localCheckpoint(eager=True)
-    salted_mins = [
-        F.min(hash60(F.concat(F.lit(f"{j}|"), F.col("__s")))).alias(f"__mh{j}")
-        for j in range(num_hashes)
-    ]
-    mh = (
-        sh_df.select("__id", *extras, F.explode("__sh").alias("__s"))
-        .groupBy("__id", *extras)
-        .agg(*salted_mins)
-    )
-    bands = mh.select(
-        "__id",
-        *extras,
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"__mh{b * band_size + i}").cast("string")
-                            for i in range(band_size)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
-    )
-    return sh_df, bands
 
 
 #: partition-bucket fan-out of the OPTIONAL pruned index layout — part
@@ -1659,19 +1324,40 @@ def _empty_pairs(spark, new_df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _write_index_tables(
-    sh_df: DataFrame,
-    bands: DataFrame,
+def _index_bands(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    shingle_n: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(shingle sets, band rows) of ``df`` with the index parameters.
+    The band rows are checkpointed eagerly: every caller consumes them
+    more than once, and the signature shuffle should run once."""
+    sh, mh = _sign(df, text_col, id_col, num_hashes, shingle_n)
+    return sh, _band_rows(mh, num_hashes, band_size).localCheckpoint(eager=True)
+
+
+def _write_index(
+    df: DataFrame,
     path: str,
-    mode: str,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    shingle_n: int,
     buckets: int | None,
+    mode: str,
 ) -> None:
-    """Shared build/append writer for the three index tables, in either
-    layout (flat, or partition-pruned when ``buckets`` is set — see the
-    BAND_INDEX_BUCKETS measured-trade note)."""
+    """Sign ``df`` and write (``mode`` overwrite or append) the three
+    index tables, in either layout (flat, or partition-pruned when
+    ``buckets`` is set — see the BAND_INDEX_BUCKETS measured-trade
+    note)."""
     import json
     import os
 
+    sh_df, bands = _index_bands(df, text_col, id_col, num_hashes, band_size, shingle_n)
     counts = bands.groupBy("__band").agg(F.count("*").alias("__n"))
     os.makedirs(path, exist_ok=True)
     meta = os.path.join(path, "_index_meta.json")
@@ -1724,7 +1410,7 @@ def _write_index_tables(
             w = w.partitionBy(part_col)
         w.parquet(dest)
 
-    # the three tables are independent (bands is checkpointed upstream),
+    # the three tables are independent (bands is checkpointed above),
     # so overlap the jobs: each alone underfills the executor at index
     # scale, and the scheduler interleaves their tasks
     with ThreadPoolExecutor(max_workers=3) as pool:
@@ -1769,14 +1455,14 @@ def write_band_index(
     write_ivfpq_partitioned(mode="append")). The meta/fence sidecars
     use driver-local file IO: the harness indexes live on local disk;
     an object-store deployment replaces them with a conditional put
-    (same contract as sources/versioned.py's pointer files)."""
-    sh_df, bands = _shingle_band_frames(
-        df, text_col, id_col, num_hashes, band_size, shingle_n
+    (same contract as sources/versioned.py's pointer files).
+
+    Band keys are ``"b|mh…|mh…"`` strings (see ``_band_rows``); the
+    ``bands`` table stores them as built, so the format is frozen with
+    the parameters."""
+    _write_index(
+        df, path, text_col, id_col, num_hashes, band_size, shingle_n, buckets, "overwrite"
     )
-    # two consumers (posting-list write + counts rollup): materialize
-    # once or the signature explode+min agg runs twice per build
-    bands = bands.localCheckpoint(eager=True)
-    _write_index_tables(sh_df, bands, path, "overwrite", buckets)
 
 
 def append_to_band_index(
@@ -1796,11 +1482,9 @@ def append_to_band_index(
     rows per band; probes sum them, so no read-modify-write cycle
     exists anywhere in the lifecycle (contrast a key-value index that
     must update bucket sizes in place)."""
-    sh_df, bands = _shingle_band_frames(
-        new_df, text_col, id_col, num_hashes, band_size, shingle_n
+    _write_index(
+        new_df, path, text_col, id_col, num_hashes, band_size, shingle_n, buckets, "append"
     )
-    bands = bands.localCheckpoint(eager=True)  # 2 consumers, as in build
-    _write_index_tables(sh_df, bands, path, "append", buckets)
 
 
 def probe_band_index(
@@ -1849,10 +1533,9 @@ def probe_band_index(
         only candidate ROWS (the join keys bound the probe either
         way — pruning moves the bound from rows to files).
     """
-    new_sh, new_bands = _shingle_band_frames(
+    new_sh, new_bands = _index_bands(
         new_df, text_col, id_col, num_hashes, band_size, shingle_n
     )
-    new_bands = new_bands.localCheckpoint(eager=True)  # 3 consumers
     idx_bands = spark.read.parquet(f"{path}/bands")
     idx_counts = spark.read.parquet(f"{path}/band_counts")
     pruned = "__bp" in idx_bands.columns  # layout auto-detect
@@ -1928,17 +1611,4 @@ def probe_band_index(
             return _empty_pairs(spark, new_df, id_col)
         sh_idx = sh_idx.filter(F.col("__sp").isin(sp_list))
     sh_all = sh_idx.select("__id", "__sh").unionByName(new_sh)
-    verified = cand.join(
-        sh_all.select(F.col("__id").alias("id_a"), F.col("__sh").alias("__sh_a")),
-        "id_a",
-    ).join(
-        sh_all.select(F.col("__id").alias("id_b"), F.col("__sh").alias("__sh_b")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-    union = (F.size("__sh_a") + F.size("__sh_b")).cast("double") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard(cand, sh_all, jaccard_threshold)

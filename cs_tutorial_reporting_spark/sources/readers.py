@@ -121,14 +121,32 @@ def _read_footer(path: str, _size: int, _mtime_ns: int) -> _Footer:
 def _inferred_fields(md) -> list | None:
     """A foreign file's schema fields (JSON) as Spark's parquet inference
     gives them, from its Arrow schema; None where the mapping fails or
-    would differ (unsigned, null, time and interval types)."""
+    would differ (time types, and unsigned, null or duration types below
+    the top level)."""
+    import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
 
     try:
-        schema = from_arrow_schema(md.schema.to_arrow_schema(), prefer_timestamp_ntz=True)
+        arrow = pa.schema([f.with_type(_as_inferred(f.type)) for f in md.schema.to_arrow_schema()])
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
     except (TypeError, NotImplementedError):
         return None
     return schema.jsonValue()["fields"] if _inferable(schema) else None
+
+
+def _as_inferred(t):
+    """The Arrow type Spark's parquet inference reads a column of Arrow
+    type ``t`` as, where Arrow maps ``t`` to no Spark type or another
+    one: unsigned to the next wider signed type (uint64 to
+    decimal(20,0)), null to int32, duration to int64."""
+    import pyarrow as pa
+
+    if pa.types.is_unsigned_integer(t):
+        wider = {8: pa.int16(), 16: pa.int32(), 32: pa.int64()}
+        return wider.get(t.bit_width, pa.decimal128(20, 0))
+    if pa.types.is_null(t):
+        return pa.int32()
+    return pa.int64() if pa.types.is_duration(t) else t
 
 
 def _inferable(t: T.DataType) -> bool:

@@ -546,6 +546,182 @@ def test_minhash_max_bucket_guard(spark):
     assert full.count() == 50 * 49 // 2
 
 
+#: build jobs (started while the DataFrame is constructed, on the calling
+#: thread) per MinHash entry point on the sf0.001 documents. Each is an
+#: eager localCheckpoint, or a bounded collect of the pruned probe; the
+#: index tables' writes run on a pool of their own and are not counted.
+MINHASH_BUILD_JOBS = {
+    "inline": 2,
+    "sign": 5,
+    "presigned": 0,
+    "multiband": 0,
+    "funnel": 1,
+    "incremental": 1,
+    "write_index": 3,
+    "append_index": 3,
+    "probe_index": 6,
+    "probe_pruned_index": 20,
+}
+
+
+def test_minhash_entry_points_build_jobs(spark, tmp_path, jobs_started):
+    """No MinHash entry point starts more Spark jobs while it is built
+    than MINHASH_BUILD_JOBS allows: a refactor that adds an eager
+    checkpoint or collect fails here."""
+    from cs_tutorial_reporting_spark.operators import dedup as d
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
+    old = docs.filter(F.col("doc_id") % 10 != 0)
+    new = docs.filter(F.col("doc_id") % 10 == 0)
+    flat, pruned = str(tmp_path / "flat"), str(tmp_path / "pruned")
+    signed = d.minhash_sign(docs, "text", "doc_id")
+    d.write_band_index(old, pruned, "text", "doc_id", buckets=8)
+    builds = {
+        "inline": lambda: d.minhash_lsh_pairs(docs, "text", "doc_id"),
+        "sign": lambda: d.minhash_sign(docs, "text", "doc_id"),
+        "presigned": lambda: d.minhash_lsh_pairs(
+            docs, "text", "doc_id", presigned=signed
+        ),
+        "multiband": lambda: d.minhash_lsh_pairs_multiband(
+            signed, 8, {"4x2": 2, "2x4": 4}, 0.5
+        ),
+        "funnel": lambda: d.lsh_band_funnel(docs, "text", "doc_id"),
+        "incremental": lambda: d.minhash_lsh_pairs_incremental(
+            docs.withColumn("is_new", F.col("doc_id") % 10 == 0),
+            "text", "doc_id", "is_new",
+        ),
+        "write_index": lambda: d.write_band_index(old, flat, "text", "doc_id"),
+        "append_index": lambda: d.append_to_band_index(
+            new.select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text"),
+            flat, "text", "doc_id",
+        ),
+        "probe_index": lambda: d.probe_band_index(spark, flat, new, "text", "doc_id"),
+        "probe_pruned_index": lambda: d.probe_band_index(
+            spark, pruned, new, "text", "doc_id"
+        ),
+    }
+    jobs = {name: jobs_started(fn)[1] for name, fn in builds.items()}
+    over = {k: (n, MINHASH_BUILD_JOBS[k]) for k, n in jobs.items() if n > MINHASH_BUILD_JOBS[k]}
+    assert not over, (over, jobs)
+
+
+MINHASH_ENTRY_POINTS = [
+    "inline", "presigned", "multiband_4x2", "multiband_2x4",
+    "incremental", "probe_index", "funnel",
+]
+
+
+def _minhash_entry(spark, tmp_path, entry, docs, max_bucket):
+    """Run one MinHash entry point over ``docs`` (doc_id, text) with the
+    default 8 hashes, bands of 2 and threshold 0.5."""
+    from cs_tutorial_reporting_spark.operators import dedup as d
+
+    if entry == "inline":
+        return d.minhash_lsh_pairs(docs, "text", "doc_id", max_bucket=max_bucket)
+    if entry == "presigned":
+        return d.minhash_lsh_pairs(
+            docs, "text", "doc_id", max_bucket=max_bucket,
+            presigned=d.minhash_sign(docs, "text", "doc_id"),
+        )
+    if entry.startswith("multiband"):
+        tag = entry.split("_")[1]
+        out = d.minhash_lsh_pairs_multiband(
+            d.minhash_sign(docs, "text", "doc_id"), 8, {"4x2": 2, "2x4": 4}, 0.5,
+            max_bucket=max_bucket,
+        )
+        return out.filter(F.col("__tag") == tag).drop("__tag")
+    if entry == "incremental":
+        return d.minhash_lsh_pairs_incremental(
+            docs.withColumn("is_new", F.lit(True)), "text", "doc_id", "is_new",
+            max_bucket=max_bucket,
+        )
+    if entry == "probe_index":
+        # the index holds the lowest id, the batch the rest: every pair
+        # touches the batch
+        first = docs.agg(F.min("doc_id")).first()[0]
+        path = str(tmp_path / f"idx_{max_bucket}")
+        d.write_band_index(docs.filter(F.col("doc_id") == first), path, "text", "doc_id")
+        batch = docs.filter(
+            F.lit(True) if first is None else F.col("doc_id") != first
+        )
+        return d.probe_band_index(
+            spark, path, batch, "text", "doc_id", max_bucket=max_bucket
+        )
+    return d.lsh_band_funnel(docs, "text", "doc_id", max_bucket=max_bucket)
+
+
+@pytest.mark.parametrize("entry", MINHASH_ENTRY_POINTS)
+def test_minhash_entry_points_edge_inputs(spark, tmp_path, entry):
+    """Every MinHash entry point runs the shared band/bucket/verify
+    core. (a) 50 identical docs share every band bucket: the cap drops
+    it at max_bucket=10 (0 pairs, 0 funnel candidates) and all
+    50·49/2 = 1225 pairs verify at Jaccard 1.0 with the default cap.
+    (b) An empty corpus gives zero rows with the documented columns,
+    string ids keeping their type."""
+    from pyspark.sql import types as T
+
+    same = spark.createDataFrame(
+        [(i, "the same exact document body repeated verbatim") for i in range(50)],
+        "doc_id bigint, text string",
+    )
+    capped = _minhash_entry(spark, tmp_path, entry, same, 10).collect()
+    full = _minhash_entry(spark, tmp_path, entry, same, 1000).collect()
+    if entry == "funnel":
+        assert capped == []
+        assert sorted(tuple(r) for r in full) == [
+            (b, 1, 1225, 1225, 1_000_000) for b in range(4)
+        ]
+    else:
+        assert capped == []
+        assert sorted((r.id_a, r.id_b, r.jaccard) for r in full) == [
+            (a, b, 1.0) for a in range(50) for b in range(a + 1, 50)
+        ]
+
+    empty = spark.createDataFrame([], "doc_id string, text string")
+    out = _minhash_entry(spark, tmp_path / "empty", entry, empty, 1000)
+    if entry == "funnel":
+        assert out.columns == [
+            "band", "n_buckets", "n_cand_pairs", "n_verified", "precision_ppm"
+        ]
+    else:
+        assert out.columns == ["id_a", "id_b", "jaccard"]
+        assert out.schema["id_a"].dataType == T.StringType()
+        assert out.schema["id_b"].dataType == T.StringType()
+    assert out.collect() == []
+
+
+def test_band_index_keys_follow_documented_format(spark, tmp_path):
+    """The persisted ``bands`` table of a one-doc corpus holds exactly
+    the keys ``"b|mh_{2b}|mh_{2b+1}"``, with mh_j the min over the
+    doc's word 3-grams s of hash60("j|" + s) and hash60 the first 15 hex
+    digits of the md5 as an integer: the frozen index format."""
+    import hashlib
+
+    from cs_tutorial_reporting_spark.operators.dedup import write_band_index
+
+    words = ["alpha", "beta", "gamma", "delta", "epsilon"]
+    doc = spark.createDataFrame(
+        [(7, "  Alpha BETA\tgamma delta\nepsilon ")], "doc_id bigint, text string"
+    )
+    path = str(tmp_path / "idx")
+    write_band_index(doc, path, "text", "doc_id")
+
+    grams = {" ".join(words[i:i + 3]) for i in range(len(words) - 2)}
+
+    def hash60(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    mh = [min(hash60(f"{j}|{s}") for s in grams) for j in range(8)]
+    want = {(f"{b}|{mh[2 * b]}|{mh[2 * b + 1]}", 7) for b in range(4)}
+    bands = spark.read.parquet(f"{path}/bands")
+    assert bands.columns == ["__band", "__id"]
+    assert {(r["__band"], r["__id"]) for r in bands.collect()} == want
+    shingles = spark.read.parquet(f"{path}/shingles").collect()
+    assert [(r["__id"], sorted(r["__sh"])) for r in shingles] == [(7, sorted(grams))]
+    counts = spark.read.parquet(f"{path}/band_counts")
+    assert {(r["__band"], r["__n"]) for r in counts.collect()} == {(k, 1) for k, _ in want}
+
+
 def test_wav_roundtrip_and_malformed():
     """The RIFF parser is a real decoder: round-trips the builder,
     skips unknown chunks (word-aligned), rejects malformed input."""

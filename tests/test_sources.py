@@ -140,12 +140,14 @@ def _arrow_fixture(tmp_path, name, arr, **write_kw):
 def test_footer_schema_equals_spark_inference(spark, tmp_path):
     """The declared schema the footer cache serves equals Spark's own
     inference for the star tables and every foreign type the mapping
-    covers; ns columns are declared bigint before the floor; types the
-    mapping would get wrong fall back to inference."""
+    covers, unsigned, null and duration columns included, alone or next
+    to an ns column; ns columns are declared bigint before the floor;
+    INT96, which the mapping would get wrong, falls back to inference."""
     import datetime
     import decimal
 
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from cs_tutorial_reporting_spark.sources.readers import _declared, read_parquet_table
 
@@ -159,6 +161,13 @@ def test_footer_schema_equals_spark_inference(spark, tmp_path):
         "date": pa.array([datetime.date(2024, 1, 2), None], pa.date32()),
         "dec": pa.array([decimal.Decimal("1.25"), None], pa.decimal128(10, 2)),
         "lf": pa.array([[1.0, None], None], pa.list_(pa.float32())),
+        # Arrow maps these to no Spark type, or to another one
+        "u8": pa.array([255, None], pa.uint8()),
+        "u16": pa.array([65535, None], pa.uint16()),
+        "u32": pa.array([4294967295, None], pa.uint32()),
+        "u64": pa.array([18446744073709551615, None], pa.uint64()),
+        "null": pa.array([None, None], pa.null()),
+        "dur": pa.array([1, None], pa.duration("us")),
     }
     for unit in ("ms", "us"):
         for tz in (None, "UTC"):
@@ -178,17 +187,30 @@ def test_footer_schema_equals_spark_inference(spark, tmp_path):
         (row,) = read_parquet_table(spark, ns).collect()
         assert row.c == datetime.datetime(2023, 11, 14, 22, 13, 20, 123456)
 
-    unmapped = [
-        _arrow_fixture(tmp_path, "u8", pa.array([1], pa.uint8())),
-        _arrow_fixture(tmp_path, "null", pa.array([None], pa.null())),
-        _arrow_fixture(tmp_path, "dur", pa.array([1], pa.duration("us"))),
-        _arrow_fixture(
-            tmp_path, "i96", pa.array([1], pa.timestamp("ns")), use_deprecated_int96_timestamps=True
-        ),
-    ]
-    for p in unmapped:
-        assert _declared(p) is None, p
-        assert read_parquet_table(spark, p).schema == spark.read.parquet(p).schema, p
+    # next to an ns column, which plain inference cannot read, each of
+    # those types is declared as inference reads it alone, and the ns
+    # column is floored
+    ns_ts = pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns"))
+    for name in ("u8", "u16", "u32", "u64", "null", "dur"):
+        alone = read_parquet_table(spark, foreign[list(arrays).index(name)])
+        p = str(tmp_path / f"ns_{name}.parquet")
+        pq.write_table(pa.table({"ts": ns_ts, "c": arrays[name]}), p)
+        ft = _declared(p)
+        assert ft is not None and ft.ns_cols == ("ts",), name
+        got = read_parquet_table(spark, p)
+        assert got.schema["c"] == alone.schema["c"], name
+        assert got.schema["ts"].dataType == T.TimestampType(), name
+        rows = got.collect()
+        assert [r.ts for r in rows] == [
+            datetime.datetime(2023, 11, 14, 22, 13, 20, 123456), None
+        ], name
+        assert [r.c for r in rows] == [r.c for r in alone.collect()], name
+
+    i96 = _arrow_fixture(
+        tmp_path, "i96", pa.array([1], pa.timestamp("ns")), use_deprecated_int96_timestamps=True
+    )
+    assert _declared(i96) is None
+    assert read_parquet_table(spark, i96).schema == spark.read.parquet(i96).schema
 
 
 def test_declared_reads_start_no_jobs_and_leave_conf_alone(spark, tmp_path, jobs_started):
