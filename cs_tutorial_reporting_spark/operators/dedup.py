@@ -35,6 +35,7 @@ from concurrent.futures import ThreadPoolExecutor
 import numpy as np
 import pandas as pd
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1412,9 +1413,12 @@ def _write_index(
 
     # the three tables are independent (bands is checkpointed above),
     # so overlap the jobs: each alone underfills the executor at index
-    # scale, and the scheduler interleaves their tasks
+    # scale, and the scheduler interleaves their tasks. The pool threads
+    # each start from a copy of the caller's local properties (its job
+    # group among them); a shared copy would share execution ids.
+    spark = df.sparkSession
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(_write, *w) for w in writes]:
+        for fut in [pool.submit(inheritable_thread_target(spark)(_write), *w) for w in writes]:
             fut.result()
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.readers import footer_max
+from .project import quote, sql_type
 
 
 def watermark(existing: DataFrame, col: str) -> Any | None:
@@ -112,25 +113,25 @@ def dedup_within(
     first and loses every incoming row: ``dedup_against`` semantics in the
     one shuffle. Existing keys with a NULL component are dropped first
     (a left-anti join never matches NULL), and are cast to the incoming
-    key types.
+    key types. The tag, casts and window are SQL strings, so the plan is
+    built in a few JVM calls whatever the column count.
     """
-    from pyspark.sql.window import Window
-
     order_cols = [c for c in incoming.columns if c not in pk_cols] or pk_cols
-    rows = incoming.withColumn("__old", F.lit(False))
+    rows = incoming.selectExpr("*", "false AS __old")
     if existing is not None:
         schema = incoming.schema
-        keys = existing.select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in pk_cols]
-        ).dropna()
+        keys = existing.selectExpr(
+            *[f"CAST({quote(c)} AS {sql_type(schema[c].dataType)}) AS {quote(c)}" for c in pk_cols]
+        ).dropna(subset=[quote(c) for c in pk_cols])
         rows = rows.unionByName(
-            keys.withColumn("__old", F.lit(True)), allowMissingColumns=True
+            keys.selectExpr("*", "true AS __old"), allowMissingColumns=True
         )
-    w = Window.partitionBy(*pk_cols).orderBy(
-        F.col("__old").desc(), *[F.col(c).asc_nulls_last() for c in order_cols]
+    over = (
+        f"PARTITION BY {', '.join(map(quote, pk_cols))} ORDER BY __old DESC, "
+        + ", ".join(f"{quote(c)} ASC NULLS LAST" for c in order_cols)
     )
     return (
-        rows.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & ~F.col("__old"))
+        rows.selectExpr("*", f"row_number() OVER ({over}) AS __rn")
+        .where("__rn = 1 AND NOT __old")
         .drop("__rn", "__old")
     )

@@ -8,15 +8,17 @@ Reference shape (per TaskGroup, reporting_dag.py:50-180):
 
 Engine shape (every ``>>`` process boundary deleted):
 
-    read(source) → project_cast → incremental_filter(> watermark)
+    read(source) [→ write_json_landing → read_json_array]
+    → project_cast → incremental_filter(> watermark)
     → dedup_within(batch + existing PKs) → write append
 
 XCom disappears (the watermark is a plain Python scalar from
 ``watermark()``, read from parquet footers when the target came from
-``read_parquet_table``); the landing zone is an optional
-``write_json_landing`` tap; the CSV hop is gone. Catalyst does
-parse→analyze→optimize→physical; the only process boundaries left are
-Spark's own task dispatch/shuffle.
+``read_parquet_table``). The landing zone is optional; a frame that was
+landed is loaded from its landing files, as the reference loads what it
+extracted, so the source runs once per cycle. The CSV hop is gone.
+Catalyst does parse→analyze→optimize→physical; the only process
+boundaries left are Spark's own task dispatch/shuffle.
 
 Jobs per incremental load of a parquet target: reading it and its
 watermark start none (footer-served schema and statistics); the within-
@@ -34,6 +36,8 @@ from pyspark.sql import types as T
 
 from ..operators.incremental import dedup_within, incremental_filter, watermark
 from ..operators.project import project_cast
+from ..sources.readers import read_json_array
+from ..sources.sinks import landed_path
 
 
 @dataclass
@@ -61,9 +65,16 @@ def incremental_load(
     - EP3 (``task_instances``): no PK (append-only) +
       ``watermark_col='start_date'`` (reporting_dag.py:124-176).
 
+    An ``incoming`` frame ``sinks.write_json_landing`` landed is read
+    from its landing files (``sinks.landed_path``), so its source is
+    extracted once per cycle.
+
     Returns the deduped delta ready for ``sinks.write_table_append`` —
     the caller owns the write so tests/driver can inspect the plan.
     """
+    landing = landed_path(incoming)
+    if landing is not None:
+        incoming = read_json_array(incoming.sparkSession, landing, incoming.schema)
     df = project_cast(incoming, schema, strict=True)
     wm = None
     if watermark_col is not None and existing is not None:

@@ -3769,6 +3769,8 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from .operators.dedup import (
         minhash_lsh_pairs_multiband,
         minhash_sign,
@@ -3785,8 +3787,10 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.setJobDescription("lsh_recall_audit: sign leg")
         return minhash_sign(docs, "text", "doc_id", num_hashes=8, shingle_n=3)
 
+    # the legs' jobs join the caller's job group
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_gt, f_signed = pool.submit(_gt_leg), pool.submit(_sign_leg)
+        f_gt = pool.submit(inheritable_thread_target(spark)(_gt_leg))
+        f_signed = pool.submit(inheritable_thread_target(spark)(_sign_leg))
         gt, signed = f_gt.result(), f_signed.result()
     spark.sparkContext.setJobDescription(None)
     tagged = minhash_lsh_pairs_multiband(

@@ -33,3 +33,27 @@ def jobs_started(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def py4j_commands(spark):
+    """``py4j_commands(fn)`` → (fn(), number of Py4J commands the driver
+    sent to the JVM while fn ran), counted on the gateway client."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def run(fn):
+        send, sent = client.send_command, 0
+
+        def counting(*args, **kwargs):
+            nonlocal sent
+            sent += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = fn()
+        finally:
+            del client.send_command
+        return out, sent
+
+    return run

@@ -62,8 +62,9 @@ def test_minhash_presigned_bitwise_equals_inline(spark):
     """minhash_sign + presigned banding must be BIT-IDENTICAL — ids
     AND rounded jaccard — to the inline minhash_lsh_pairs path, for
     BOTH bandings of the same signature (the lsh_recall_audit shape:
-    sign once, band twice). Pins the textually-parallel
-    _lsh_pairs_from_signed against drift from the inline path."""
+    sign once, band twice). Both paths run one shared body, which
+    signs inline or takes the presigned frame; this pins that the two
+    inputs give the same pairs."""
     from cs_tutorial_reporting_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_sign,
@@ -95,8 +96,9 @@ def test_minhash_multiband_equals_per_leg_presigned(spark):
     BIT-IDENTICAL — ids AND rounded jaccard — to the per-leg
     presigned path for EVERY banding in the spec (the r14
     lsh_recall_audit fusion: one leg-tagged banding pipeline instead
-    of K). Pins the textually-parallel multiband implementation
-    against drift from _lsh_pairs_from_signed."""
+    of K). Both paths band one signed frame through the same
+    ``_band_rows``/``_buckets``/``_bucket_pairs``/``_jaccard`` helpers;
+    this pins that every tag's slice equals its own leg."""
     from cs_tutorial_reporting_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_lsh_pairs_multiband,
@@ -546,10 +548,11 @@ def test_minhash_max_bucket_guard(spark):
     assert full.count() == 50 * 49 // 2
 
 
-#: build jobs (started while the DataFrame is constructed, on the calling
-#: thread) per MinHash entry point on the sf0.001 documents. Each is an
-#: eager localCheckpoint, or a bounded collect of the pruned probe; the
-#: index tables' writes run on a pool of their own and are not counted.
+#: build jobs (started while the DataFrame is constructed, in the
+#: caller's job group) per MinHash entry point on the sf0.001 documents.
+#: Each is an eager localCheckpoint, or a bounded collect of the pruned
+#: probe, or, for the index builds, one of the index tables' writes: their
+#: pool threads inherit the caller's job group, so the writes count.
 MINHASH_BUILD_JOBS = {
     "inline": 2,
     "sign": 5,
@@ -557,8 +560,8 @@ MINHASH_BUILD_JOBS = {
     "multiband": 0,
     "funnel": 1,
     "incremental": 1,
-    "write_index": 3,
-    "append_index": 3,
+    "write_index": 7,
+    "append_index": 7,
     "probe_index": 6,
     "probe_pruned_index": 20,
 }

@@ -204,6 +204,53 @@ def test_null_if_empty(spark):
     assert out_all[1].b is None  # no-args → all string cols
 
 
+def test_null_if_empty_two_targets_one_quoted(spark):
+    df = spark.createDataFrame(
+        [("", "", ""), ("x", "y", "z")], "`a b` string, c string, d string"
+    )
+    out = null_if_empty(df, "a b", "c")
+    assert out.columns == ["a b", "c", "d"]
+    assert [tuple(r) for r in out.collect()] == [(None, None, ""), ("x", "y", "z")]
+    with pytest.raises(ValueError, match="no such"):
+        null_if_empty(df, "nope")
+
+
+#: column names SQL must quote: a space, a dot, a backtick
+ODD_NAMES = {"k": "k k", "d": "d.o", "v": "v`t", "flag": "is `paused`.x"}
+
+
+def _odd(df):
+    return df.select([df[c].alias(ODD_NAMES.get(c, c)) for c in df.columns])
+
+
+def test_project_cast_and_dedup_within_quote_column_names(spark):
+    """Renaming every column to one that needs quoting changes nothing
+    but the names: project_cast and dedup_within (alone and against
+    existing keys) give the same rows."""
+    df = spark.createDataFrame(
+        [("a", "1", "x", "True"), ("a", "1", "w", "false"), ("b", "2", None, None),
+         ("c", "3", "z", "t"), ("c", None, "z", "False")],
+        "k string, d string, v string, flag string",
+    )
+    existing = spark.createDataFrame([("c", 3, "old")], "k string, d int, v string")
+    catalog = T.StructType.fromDDL("k string, d int, v string, flag boolean, extra date")
+    odd = T.StructType([T.StructField(ODD_NAMES.get(f.name, f.name), f.dataType) for f in catalog])
+
+    def rows(out):
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    plain = project_cast(df, catalog, strict=False)
+    quoted = project_cast(_odd(df), odd, strict=False)
+    assert quoted.columns == odd.names and quoted.schema == odd
+    assert rows(quoted) == rows(plain)
+    for pk in (["k"], ["k", "d"]):
+        odd_pk = [ODD_NAMES[c] for c in pk]
+        assert rows(dedup_within(_odd(plain), odd_pk)) == rows(dedup_within(plain, pk))
+        assert rows(dedup_within(_odd(plain), odd_pk, _odd(existing))) == rows(
+            dedup_within(plain, pk, existing)
+        )
+
+
 def test_grouped_exact_percentiles_matches_percentile_buffer(spark):
     """The two-pass rank operator is EXACT: bit-identical to Spark's
     single-pass F.percentile on tie-heavy, odd/even-sized, and

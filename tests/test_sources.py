@@ -85,6 +85,38 @@ def test_json_landing_run_partitioned_roundtrip(spark, tmp_path):
     assert len(direct) == 50 and sorted(via_landing) == sorted(direct)
 
 
+def test_json_landing_reads_back_every_exact_type(spark, tmp_path):
+    """Every type the landing substitutes for its frame reads back equal
+    through ``read_json_array``: timestamps at µs, NaN, ±inf, a
+    subnormal double, '' and NULLs, binary, decimals, dates, escaped and
+    non-BMP strings, arrays and structs with names that need quoting."""
+    import datetime as dt
+    import decimal
+
+    from cs_tutorial_reporting_spark.sources.sinks import landed_path
+
+    schema = T.StructType.fromDDL(
+        "s string, b boolean, i tinyint, l bigint, f float, d double, m decimal(12,8), "
+        "day date, ts timestamp, bin binary, arr array<double>, "
+        "st struct<`x y`: string, `z.w`: timestamp>"
+    )
+    us = dt.datetime(2024, 1, 1, 10, 0, 0, 123456)
+    rows = [
+        ("", True, -128, 2**63 - 1, float("nan"), float("inf"), decimal.Decimal("0.00000001"),
+         dt.date(2024, 2, 29), us, b"\x00\xff\n", [float("-inf"), None, 1e-310],
+         ('a"b\\c\né\U0001F600', us)),
+        ('{"x": 1}', None, None, None, float("-inf"), 1e-310, decimal.Decimal("-1234.5"),
+         None, None, b"", [], None),
+        (None, False, 127, -(2**63), 1.1754944e-38, -0.0, None, dt.date(1970, 1, 1),
+         dt.datetime(1969, 12, 31, 23, 59, 59, 999999), None, None, (None, None)),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    path = write_json_landing(df, str(tmp_path / "landing"), "c00000", n_files=2)
+    assert landed_path(df) == path
+    back = read_json_array(spark, path, df.schema)
+    assert sorted(map(repr, back.collect())) == sorted(map(repr, df.collect()))
+
+
 def test_append_sink_accumulates(spark, tmp_path):
     df = spark.createDataFrame([(1,)], "x int")
     target = str(tmp_path / "warehouse")
