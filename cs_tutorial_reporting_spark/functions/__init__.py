@@ -1,4 +1,4 @@
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -14,3 +14,17 @@ def bind_once(col: Column, fn) -> Column:
     once per binding.
     """
     return F.transform(F.array(col), fn).getItem(0)
+
+
+def widen(df: DataFrame, *keys: str, per_core: int = 2) -> DataFrame:
+    """The fan-out guard: repartition ``df`` (by ``keys``, else
+    round-robin) to ``per_core`` × the session parallelism when it has
+    fewer partitions. Small-file inputs arrive as 1-2 partitions and the
+    stage that follows is compute-bound; at real scale the input is
+    already wide and this is a no-op. The default ×2 keeps the count ≠
+    ``spark.sql.shuffle.partitions``, so CollapseRepartition cannot
+    silently remove a keyed fan-out."""
+    target = df.sparkSession.sparkContext.defaultParallelism * per_core
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, *keys)
+    return df

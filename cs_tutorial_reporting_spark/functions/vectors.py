@@ -17,7 +17,11 @@ from pyspark.sql import functions as F
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ with double accumulation (sequential left fold — same
-    association order as DuckDB's list accumulation)."""
+    association order as DuckDB's list accumulation). With :func:`norm`
+    and :func:`cosine` this is the reference the flat folds are pinned
+    bit-identical to; operators score through the flat folds, since a
+    ``zip_with`` nested in ``aggregate`` mis-evaluates in long sessions
+    (:func:`dot_flat`)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

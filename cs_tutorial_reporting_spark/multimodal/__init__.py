@@ -1,19 +1,9 @@
-from .columns import (
-    MEDIA_SCHEMA,
-    attach_media,
-    decode_image_stub,
-    extract_features,
-    frame_sample_stub,
-)
-from .wav import decode_wav, synth_and_decode_wav, wav_bytes
+from .columns import attach_media, decode_pass
+from .wav import decode_wav, wav_bytes
 
 __all__ = [
-    "MEDIA_SCHEMA",
     "attach_media",
-    "decode_image_stub",
+    "decode_pass",
     "decode_wav",
-    "extract_features",
-    "frame_sample_stub",
-    "synth_and_decode_wav",
     "wav_bytes",
 ]

@@ -1,82 +1,58 @@
-"""[EXT] Real (non-stub) video decode + frame sampling for the
-multimodal column path: a pure-Python uncompressed AVI (RIFF 'AVI ',
-'vids'/'DIB ' stream, 24-bit BI_RGB frames) builder + parser — the
-video member of the RIFF family alongside ``wav.py`` (RIFF/WAVE) and
-``bmp.py`` (the same DIB pixel layout, file-header-framed). This
-replaces the former ``frame_sample_stub``: the parser walks real RIFF
-chunks (hdrl → avih/strh/strf, movi → '00db' frame chunks), validates
-magics and sizes, honors the DIB bottom-up row order and 4-byte stride,
-and samples frames on an every-N-milliseconds grid — exactly what an
+"""[EXT] Real video decode + frame sampling for the multimodal column
+path: a pure-Python uncompressed AVI (RIFF 'AVI ', 'vids'/'DIB '
+stream, 24-bit BI_RGB frames) builder + parser — the video member of
+the RIFF family alongside ``wav.py`` (RIFF/WAVE) and ``bmp.py`` (the
+same DIB pixel layout, file-header-framed). The container writer
+(:func:`avi_container`) and the RIFF walk (:func:`parse_avi`) are
+shared with the Motion-JPEG codec in ``mjpeg.py``, which differs only
+in its frame codec and chunk id. The parser walks real RIFF chunks
+(hdrl → avih/strh/strf, movi → '00db' frame chunks), validates magics
+and sizes, honors the DIB bottom-up row order and 4-byte stride, and
+samples frames on an every-N-milliseconds grid — what an
 ffmpeg-backed sampler would do, minus compressed codecs.
 
-Both directions run inside Arrow-batched ``mapInPandas``; swapping the
-DIB frame parser for a real codec is a one-function change. At 100 TB
-the videos ride in parquet binary columns and decode parallelism is
-row-group parallelism (bound pandas batch memory with
-``spark.sql.execution.arrow.maxRecordsPerBatch`` for large blobs).
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from .bmp import dib_pixels
 
 _AVIH_SIZE = 56
 _STRH_SIZE = 56
 _BMIH_SIZE = 40
 
 
-def _dib_frame(payload: bytes, width: int, height: int) -> bytes:
-    """One uncompressed 24-bit DIB frame: grayscale pixels from the
-    payload bytes (r=g=b=byte, top-down logical order), zero-padded,
-    stored bottom-up with 4-byte row stride — the BMP pixel array
-    without the file header (that's what an AVI '00db' chunk carries)."""
-    stride = (width * 3 + 3) & ~3
-    rows = []
-    for r in range(height - 1, -1, -1):  # bottom-up storage
-        row = bytearray(stride)
-        for c in range(width):
-            i = r * width + c
-            v = payload[i] if i < len(payload) else 0
-            row[c * 3 : c * 3 + 3] = bytes((v, v, v))
-        rows.append(bytes(row))
-    return b"".join(rows)
-
-
-def avi_bytes(
-    payload: bytes, width: int = 8, height: int = 8, fps: int = 10
+def avi_container(
+    frames: list[bytes], width: int, height: int, fps: int,
+    codec: bytes | None = None,
 ) -> bytes:
-    """Build an uncompressed AVI whose frames carry the payload bytes as
-    grayscale DIBs, ``width*height`` payload bytes per frame (empty
-    payloads become one all-black frame). Container layout per the
-    public AVI RIFF spec: RIFF('AVI ' LIST('hdrl' avih LIST('strl'
-    strh strf)) LIST('movi' '00db'*n))."""
-    frame_sz = width * height
-    n_frames = max(-(-len(payload) // frame_sz), 1)
-    usec_per_frame = 1_000_000 // fps
-    stride = (width * 3 + 3) & ~3
-    dib_sz = stride * height
-
-    frames = [
-        _dib_frame(payload[i * frame_sz : (i + 1) * frame_sz], width, height)
-        for i in range(n_frames)
-    ]
-
+    """Wrap encoded frames in an AVI RIFF container, per the public AVI
+    spec: RIFF('AVI ' LIST('hdrl' avih LIST('strl' strh strf))
+    LIST('movi' chunk*n)). ``codec`` None means uncompressed 24-bit
+    DIB frames (stream handler 'DIB ', BI_RGB, '00db' chunks); otherwise
+    it is the fourcc of a compressed codec, used as both the stream
+    handler and ``biCompression``, with '00dc' chunks. Odd-sized chunks
+    get one pad byte (RIFF chunks are word-aligned)."""
+    if codec is None:
+        handler, compression, chunk_id = b"DIB ", 0, b"00db"
+    else:
+        handler, compression, chunk_id = codec, struct.unpack("<I", codec)[0], b"00dc"
+    n_frames = len(frames)
+    bufsz = max(len(f) for f in frames)
     avih = b"avih" + struct.pack(
         "<I14I",
         _AVIH_SIZE,
-        usec_per_frame,     # dwMicroSecPerFrame
-        dib_sz * fps,       # dwMaxBytesPerSec
+        1_000_000 // fps,   # dwMicroSecPerFrame
+        bufsz * fps,        # dwMaxBytesPerSec
         0,                  # dwPaddingGranularity
         0,                  # dwFlags
         n_frames,           # dwTotalFrames
         0,                  # dwInitialFrames
         1,                  # dwStreams
-        dib_sz,             # dwSuggestedBufferSize
+        bufsz,              # dwSuggestedBufferSize
         width,
         height,
         0, 0, 0, 0,         # dwReserved[4]
@@ -84,37 +60,58 @@ def avi_bytes(
     strh = b"strh" + struct.pack(
         "<I4s4sIHHIIIIIIiI4H",
         _STRH_SIZE,
-        b"vids", b"DIB ",
+        b"vids", handler,
         0, 0, 0, 0,          # flags, priority+language, initial frames
         1, fps,              # scale, rate → fps frames/sec
         0, n_frames,         # start, length (in frames)
-        dib_sz, -1, 0,       # bufsize, quality (-1 = default), samplesize
+        bufsz, -1, 0,        # bufsize, quality (-1 = default), samplesize
         0, 0, width, height,  # rcFrame
     )
     strf = b"strf" + struct.pack(
-        "<I" + "IiiHHIIiiII",
+        "<IIiiHHIIiiII",
         _BMIH_SIZE,
-        _BMIH_SIZE, width, height, 1, 24, 0, dib_sz, 2835, 2835, 0, 0,
+        _BMIH_SIZE, width, height, 1, 24, compression,
+        ((width * 3 + 3) & ~3) * height,  # biSizeImage of a 24-bit DIB
+        2835, 2835, 0, 0,
     )
-    strl = b"LIST" + struct.pack("<I", 4 + len(strh) + len(strf)) + b"strl" + strh + strf
-    hdrl = b"LIST" + struct.pack("<I", 4 + len(avih) + len(strl)) + b"hdrl" + avih + strl
 
-    movi_body = b"".join(
-        b"00db" + struct.pack("<I", len(f)) + f for f in frames
-    )  # stride is 4-byte aligned ⇒ chunks are even, no pad bytes needed
-    movi = b"LIST" + struct.pack("<I", 4 + len(movi_body)) + b"movi" + movi_body
+    def riff_list(kind: bytes, body: bytes) -> bytes:
+        return b"LIST" + struct.pack("<I", 4 + len(body)) + kind + body
 
+    movi = riff_list(b"movi", b"".join(
+        chunk_id + struct.pack("<I", len(f)) + f + b"\x00" * (len(f) & 1)
+        for f in frames
+    ))
+    hdrl = riff_list(b"hdrl", avih + riff_list(b"strl", strh + strf))
     riff_body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
 
 
-def decode_avi(content: bytes, every_ms: int = 200) -> dict:
-    """Parse an uncompressed AVI and sample one frame every ``every_ms``
-    of media time (frame 0 always sampled). Real chunk walk: validates
-    RIFF/'AVI ' magic, reads avih for timing/dimensions, walks the movi
-    LIST collecting '00db' frames, verifies the frame count, and
-    computes stride-aware pixel statistics over the sampled frames.
-    Raises on malformed input like any conformant reader."""
+def avi_bytes(
+    payload: bytes, width: int = 8, height: int = 8, fps: int = 10
+) -> bytes:
+    """Build an uncompressed AVI whose frames carry the payload bytes as
+    grayscale DIBs, ``width*height`` payload bytes per frame (empty
+    payloads become one all-black frame)."""
+    frame_sz = width * height
+    n_frames = max(-(-len(payload) // frame_sz), 1)
+    frames = [
+        dib_pixels(payload[i * frame_sz : (i + 1) * frame_sz], width, height)
+        for i in range(n_frames)
+    ]
+    return avi_container(frames, width, height, fps)
+
+
+def parse_avi(
+    content: bytes, suffix: bytes
+) -> tuple[int, int, int, int, list[tuple[int, int]]]:
+    """The RIFF walk every AVI consumer shares: validates the RIFF/'AVI '
+    magic and every chunk size, reads avih for timing/dimensions, and
+    collects the movi frame chunks whose id ends in ``suffix`` (b"db"
+    uncompressed, b"dc" compressed), checking their count against avih.
+    Returns (usec_per_frame, width, height, n_frames,
+    [(frame_offset, frame_size)]); raises ValueError on malformed
+    input like any conformant reader."""
     if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"AVI ":
         raise ValueError("not an AVI file")
     riff_size = struct.unpack_from("<I", content, 4)[0]
@@ -122,7 +119,7 @@ def decode_avi(content: bytes, every_ms: int = 200) -> dict:
         raise ValueError("truncated RIFF")
 
     usec_per_frame = width = height = n_frames = None
-    frames: list[tuple[int, int]] = []  # (offset, size) of each 00db chunk
+    frames: list[tuple[int, int]] = []
 
     def walk(pos: int, end: int) -> None:
         nonlocal usec_per_frame, width, height, n_frames
@@ -140,15 +137,25 @@ def decode_avi(content: bytes, every_ms: int = 200) -> dict:
                 (usec_per_frame, _, _, _, n_frames, _, _, _, width, height) = (
                     struct.unpack_from("<10I", content, body)
                 )
-            elif fourcc[2:] == b"db":  # '00db': uncompressed video frame
+            elif fourcc[2:] == suffix:
                 frames.append((body, size))
             pos = nxt
 
     walk(12, 8 + riff_size)
-    if usec_per_frame is None or not usec_per_frame:
+    if not usec_per_frame:
         raise ValueError("missing avih header")
     if len(frames) != n_frames:
         raise ValueError(f"frame count mismatch: avih={n_frames} movi={len(frames)}")
+    return usec_per_frame, width, height, n_frames, frames
+
+
+def decode_avi(content: bytes, every_ms: int = 200) -> dict:
+    """Parse an uncompressed AVI and sample one frame every ``every_ms``
+    of media time (frame 0 always sampled): the :func:`parse_avi` walk
+    over '00db' frames, then stride-aware pixel statistics over the
+    sampled frames. Raises on malformed input like any conformant
+    reader."""
+    usec_per_frame, width, height, n_frames, frames = parse_avi(content, b"db")
 
     stride = (width * 3 + 3) & ~3
     step = max(every_ms * 1000 // usec_per_frame, 1)
@@ -180,49 +187,3 @@ AVI_FEATURE_SCHEMA = (
     "doc_id bigint, width int, height int, n_frames int, duration_ms bigint, "
     "n_sampled int, sum_rgb_sampled bigint, head_px int"
 )
-
-
-def synth_and_decode_avi(
-    df: DataFrame,
-    payload_col: str = "content",
-    id_col: str = "doc_id",
-    width: int = 8,
-    height: int = 8,
-    fps: int = 10,
-    every_ms: int = 200,
-) -> DataFrame:
-    """Wrap each binary payload into a real AVI container, then run the
-    real parser + frame sampler over it — one Arrow batch pass (build +
-    parse fused so container bytes never hit the shuffle). The decoded
-    features are pure functions of the payload (frame k holds payload
-    bytes [k*w*h, (k+1)*w*h); sampling takes every 2nd frame at the
-    defaults; sum_rgb_sampled = 3 × the byte sum of sampled frames'
-    slices), so a SQL oracle can check the decode without parsing AVI."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_avi(
-                    avi_bytes(bytes(b), width=width, height=height, fps=fps),
-                    every_ms=every_ms,
-                )
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_frames": "int32",
-                    "duration_ms": "int64",
-                    "n_sampled": "int32",
-                    "sum_rgb_sampled": "int64",
-                    "head_px": "int32",
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, AVI_FEATURE_SCHEMA
-    )

@@ -1,38 +1,28 @@
-"""[EXT] Real (non-stub) image decode for the multimodal column path:
-a pure-Python uncompressed 24-bit BMP (BITMAPFILEHEADER +
+"""[EXT] Real image decode for the multimodal column path: a
+pure-Python uncompressed 24-bit BMP (BITMAPFILEHEADER +
 BITMAPINFOHEADER, BI_RGB) builder + parser — the image twin of
-``wav.py``'s RIFF/WAVE pair, closing the image half of the multimodal
-story without a codec library. The parser is a real decoder: it
+``wav.py``'s RIFF/WAVE pair. The parser is a real decoder: it
 validates the magic/offsets/bpp, honors the 4-byte row stride padding
 and bottom-up row order, and reconstructs the logical top-down pixel
-stream.
+stream. :func:`dhash_bands` fingerprints the decoded image for
+near-duplicate detection.
 
-Both directions run inside Arrow-batched ``mapInPandas`` — the exact
-plumbing a PIL/libjpeg decoder would use; swapping the parser for a
-real codec is a one-function change. At 100 TB the blobs ride in
-parquet binary columns and decode parallelism is row-group parallelism.
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _FILE_HEADER = 14
 _INFO_HEADER = 40
 
 
-def bmp_bytes(payload: bytes, width: int = 16) -> bytes:
-    """Build a 24-bit BI_RGB BMP whose grayscale pixels are the payload
-    bytes (r=g=b=byte), ``width`` pixels per logical row (top-down),
-    zero-padded to fill the last row; empty payloads become one all-black
-    row. Rows are stored bottom-up with 4-byte stride padding, per the
-    public BMP layout."""
-    height = max(-(-len(payload) // width), 1)
+def dib_pixels(payload: bytes, width: int, height: int) -> bytes:
+    """A 24-bit DIB pixel array: grayscale pixels from the payload bytes
+    (r=g=b=byte, ``width`` per logical top-down row), zero-padded,
+    stored bottom-up with 4-byte row stride — the BMP pixel array, and
+    what an uncompressed AVI '00db' chunk carries."""
     stride = (width * 3 + 3) & ~3
     rows = []
     for r in range(height - 1, -1, -1):  # bottom-up storage
@@ -42,7 +32,15 @@ def bmp_bytes(payload: bytes, width: int = 16) -> bytes:
             v = payload[i] if i < len(payload) else 0
             row[c * 3 : c * 3 + 3] = bytes((v, v, v))  # BGR (equal channels)
         rows.append(bytes(row))
-    pixels = b"".join(rows)
+    return b"".join(rows)
+
+
+def bmp_bytes(payload: bytes, width: int = 16) -> bytes:
+    """Build a 24-bit BI_RGB BMP whose grayscale pixels are the payload
+    bytes, ``width`` pixels per row, zero-padded to fill the last row;
+    empty payloads become one all-black row (:func:`dib_pixels`)."""
+    height = max(-(-len(payload) // width), 1)
+    pixels = dib_pixels(payload, width, height)
     off = _FILE_HEADER + _INFO_HEADER
     file_header = b"BM" + struct.pack("<IHHI", off + len(pixels), 0, 0, off)
     info_header = struct.pack(
@@ -90,47 +88,6 @@ def decode_bmp(content: bytes) -> dict:
     }
 
 
-BMP_FEATURE_SCHEMA = (
-    "doc_id bigint, width int, height int, n_pixels bigint, "
-    "sum_rgb bigint, head_px int"
-)
-
-
-def synth_and_decode_bmp(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    width: int = 16,
-) -> DataFrame:
-    """Wrap each binary payload into a real BMP container, then run the
-    real parser over it — one Arrow batch pass (build+parse fused so the
-    container bytes never hit the shuffle). The decoded features are
-    pure functions of the payload (sum_rgb = 3 × byte sum; head_px =
-    first byte, 0 for the padded empty image), so a SQL oracle can check
-    the decode without itself parsing BMP."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_bmp(bmp_bytes(bytes(b), width=width))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_pixels": "int64",
-                    "sum_rgb": "int64",
-                    "head_px": "int32",
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, BMP_FEATURE_SCHEMA
-    )
-
-
 def dhash_bands(content: bytes) -> tuple[int, int, int, int]:
     """64-bit difference hash (dHash — the classic perceptual image
     fingerprint) of a decoded BMP, returned as FOUR 16-bit band
@@ -169,28 +126,3 @@ def dhash_bands(content: bytes) -> tuple[int, int, int, int]:
 
 
 DHASH_SCHEMA = "doc_id bigint, b0 int, b1 int, b2 int, b3 int"
-
-
-def synth_and_dhash_bmp(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    width: int = 16,
-) -> DataFrame:
-    """Build the BMP container and compute its dHash bands in one Arrow
-    pass (same fused build+parse shape as synth_and_decode_bmp)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                dhash_bands(bmp_bytes(bytes(b), width=width))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(rows, columns=["b0", "b1", "b2", "b3"])
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {"doc_id": "int64", "b0": "int32", "b1": "int32",
-                 "b2": "int32", "b3": "int32"}
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, DHASH_SCHEMA
-    )

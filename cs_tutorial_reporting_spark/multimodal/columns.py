@@ -1,11 +1,13 @@
 """[EXT] Multimodal columns: image/audio/video as opaque ``binary``
-columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
+columns, decoded by pure per-row codecs inside ONE Arrow-batched
+``mapInPandas`` pass (:func:`decode_pass`).
 
-The container has no image/audio codecs, so the *decode* step is a
-clearly-marked stub (deterministic fake features / NotImplementedError
-for real codecs). Everything Spark-side — schema, partition-preserving
-mapInPandas plumbing, batch shapes, metadata struct — is real and
-tested; swapping the stub body for PIL/ffmpeg is a one-function change.
+Every codec module (bmp/png/gif/jpeg/tiff/wav/avi/mjpeg/sniff) is pure
+Python over bytes — a builder ``payload → container bytes`` and a
+decoder ``container bytes → dict`` — with no Spark in it. The Spark
+side is this one pass: select ``(doc_id, content)``, optionally fan a
+narrow input out, run the row function per blob, declare the schema.
+Swapping a pure-Python decoder for PIL/ffmpeg is a one-function change.
 
 Scale notes: media bytes ride in the same rows as metadata (parquet
 binary columns chunk fine at 100 TB); decode parallelism is row-group
@@ -15,41 +17,51 @@ pandas batch memory (set it low for large blobs).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: metadata struct carried alongside every media blob
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("format", T.StringType(), True),       # png|wav|mp4|...
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
+from ..functions import widen
 
 
-def fan_out_compute(df: DataFrame, key_col: str) -> DataFrame:
-    """Fan a compute-bound Arrow pass out of the small-file trap:
-    harness-scale parquet arrives as 1-2 partitions, and mapInPandas
-    inherits input partitioning — the whole Python decode would run
-    on 1-2 cores regardless of cluster width (the round-8 single-task
-    class; measured 8.5 s single-core for the MJPEG scene pass at
-    sf0.1). Keyed repartition to 2× the session parallelism when the
-    input is narrower; at real scale the input is already wide and
-    this is a no-op (same guard, same rationale as
-    operators/dedup.py::minhash_lsh_pairs). The ×2 keeps the count ≠
-    spark.sql.shuffle.partitions so CollapseRepartition cannot
-    silently remove it (round-8 lesson)."""
-    target = df.sparkSession.sparkContext.defaultParallelism * 2
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, key_col)
-    return df
+def decode_pass(
+    df: DataFrame,
+    per_row: Callable[[int, bytes], dict | tuple],
+    schema: str,
+    fan_out: bool = False,
+) -> DataFrame:
+    """Run ``per_row(doc_id, content)`` over every row of ``df``'s
+    ``(doc_id, content)`` columns in one Arrow batch pass, returning
+    ``schema`` (a DDL string with a ``doc_id bigint`` field).
+
+    ``per_row`` returns a dict keyed by the other schema fields (extra
+    keys are dropped) or a tuple in their order. Spark matches the
+    result columns to ``schema`` by name and Arrow casts them to its
+    types, so no per-codec ``astype`` is needed. ``fan_out`` spreads a
+    1-2 partition input to 2× the session parallelism first
+    (``functions.widen``): worth it for the compute-bound decodes
+    (jpeg, mjpeg, gif, scene detection, sniff), not for the cheap ones
+    whose payload shuffle costs more than the decode."""
+    names = [n for n in T.StructType.fromDDL(schema).names if n != "doc_id"]
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"].to_numpy()
+            out = pd.DataFrame(
+                [per_row(i, bytes(b)) for i, b in zip(ids, pdf["content"])],
+                columns=names,
+            )
+            out["doc_id"] = ids
+            yield out
+
+    src = df.select("doc_id", "content")
+    if fan_out:
+        src = widen(src, "doc_id")
+    return src.mapInPandas(op, schema)
 
 
 def attach_media(df: DataFrame, payload_col, media_type: str, fmt: str) -> DataFrame:
@@ -67,63 +79,21 @@ def attach_media(df: DataFrame, payload_col, media_type: str, fmt: str) -> DataF
     )
 
 
-def decode_image_stub(content: bytes) -> dict:
-    """Formerly the compressed-image stub — every image format in the
-    family now decodes for REAL: baseline JPEG (multimodal/jpeg.py —
-    full DCT + Annex-K Huffman entropy decode), PNG (multimodal/png.py
-    — stdlib-zlib DEFLATE + all five scanline filters), GIF
-    (multimodal/gif.py — full variable-width LZW), and the uncompressed
-    BMP/WAV/AVI containers. This entry point survives only for callers
-    wanting deterministic fakes via ``extract_features``; real decodes
-    should call the per-format modules."""
-    raise NotImplementedError(
-        "use the real per-format decoders: multimodal/jpeg.py (baseline "
-        "DCT+Huffman), multimodal/png.py, multimodal/gif.py, bmp/wav/avi; "
-        "extract_features remains the deterministic fake path"
-    )
-
-
-def frame_sample_stub(content: bytes, every_ms: int) -> list[bytes]:
-    """STUB only for INTER-FRAME video codecs (h264/mp4 need motion
-    compensation — genuinely out of pure-Python scope). Compressed
-    intra-frame video IS decoded for real: Motion-JPEG via
-    ``multimodal.mjpeg.decode_mjpeg`` (full per-frame DCT+Huffman
-    decode inside the RIFF walk), and uncompressed AVI via
-    ``multimodal.avi.decode_avi`` — same mapInPandas plumbing."""
-    raise NotImplementedError(
-        "inter-frame codecs (h264) require motion compensation; see "
-        "multimodal/mjpeg.py for real compressed (MJPEG) video sampling "
-        "and multimodal/avi.py for the uncompressed path"
-    )
-
+#: the decode schema the grayscale image codecs share (bmp/png/gif)
+IMAGE_FEATURE_SCHEMA = (
+    "doc_id bigint, width int, height int, n_pixels bigint, "
+    "sum_rgb bigint, head_px int"
+)
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, content_md5 string, head_byte int"
 )
 
 
-def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic feature extraction over the binary content column
-    via mapInPandas (Arrow batches — the exact plumbing a real decoder
-    uses): byte length, md5 checksum, first byte (-1 when empty). Pure
-    function of the bytes ⇒ oracle-checkable in SQL (octet_length / md5 /
-    hex-prefix of the encoded blob)."""
-    import hashlib
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = pdf["content"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": content.map(len).astype("int64"),
-                    "content_md5": content.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "head_byte": content.map(lambda b: b[0] if len(b) else -1).astype(
-                        "int32"
-                    ),
-                }
-            )
-
-    return df.select(F.col(id_col), "content").mapInPandas(op, FEATURE_SCHEMA)
+def byte_features(content: bytes) -> tuple[int, str, int]:
+    """Deterministic stand-in decode: byte length, md5 checksum, first
+    byte (-1 when empty). Pure function of the bytes ⇒ oracle-checkable
+    in SQL (octet_length / md5 / hex-prefix of the encoded blob)."""
+    return len(content), hashlib.md5(content).hexdigest(), (
+        content[0] if content else -1
+    )

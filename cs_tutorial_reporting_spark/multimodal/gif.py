@@ -1,9 +1,7 @@
 """[EXT] Real COMPRESSED image decode for the multimodal column path: a
 pure-Python GIF87a builder + parser with a full variable-width LZW
-codec — the first *compressed* format in the multimodal family
-(BMP/WAV/AVI are real but uncompressed containers; png/jpeg remain
-stubbed because inflate/DCT libraries are absent, but GIF's LZW is a
-pure algorithm, so nothing stops a real implementation).
+codec (BMP/WAV/AVI are real but uncompressed containers; PNG-DEFLATE,
+TIFF-PackBits and baseline JPEG are the other compressed codecs).
 
 The decoder is a conformant reader of the subset it targets: it
 validates the signature and logical-screen descriptor, reads the global
@@ -16,9 +14,7 @@ size, 256-entry grayscale table) and the pair round-trips losslessly
 (property-tested, including payloads long enough to overflow the
 12-bit code table and force mid-stream Clear resets).
 
-Both directions run inside Arrow-batched ``mapInPandas`` — identical
-plumbing to ``bmp.py``; at 100 TB blobs ride in parquet binary columns
-and decode parallelism is row-group parallelism.
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``.
 
 Layout references: the public GIF87a specification (CompuServe, 1987)
 — signature, logical screen descriptor, color table, image descriptor,
@@ -28,11 +24,6 @@ LZW minimum code size, data sub-blocks, trailer.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _MAX_CODE_WIDTH = 12
 _TABLE_LIMIT = 1 << _MAX_CODE_WIDTH  # 4096
@@ -246,51 +237,3 @@ def decode_gif(content: bytes) -> dict:
         "sum_rgb": sum_rgb,
         "head_px": gct[indices[0] * 3] if indices else -1,
     }
-
-
-GIF_FEATURE_SCHEMA = (
-    "doc_id bigint, width int, height int, n_pixels bigint, "
-    "sum_rgb bigint, head_px int"
-)
-
-
-def synth_and_decode_gif(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    width: int = 16,
-) -> DataFrame:
-    """Wrap each binary payload into a real LZW-compressed GIF, then
-    run the real decompressor over it — one Arrow batch pass. Decoded
-    features are pure functions of the payload (grayscale table makes
-    sum_rgb = 3 × byte sum; head_px = first byte), so a SQL oracle
-    checks a genuinely compressed decode without implementing LZW.
-
-    LZW decode is expensive enough to earn the single-partition
-    fan-out (columns.py::fan_out_compute — no-op on already-wide
-    inputs): measured 3.04 → 1.06 s at sf0.1, unlike the cheap
-    png/tiff/wav decodes whose payload shuffle costs more than the
-    decode (r9/r11 measurements)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_gif(gif_bytes(bytes(b), width=width))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_pixels": "int64",
-                    "sum_rgb": "int64",
-                    "head_px": "int32",
-                }
-            )
-
-    from .columns import fan_out_compute
-
-    return fan_out_compute(
-        df.select(F.col(id_col), F.col(payload_col)), id_col
-    ).mapInPandas(op, GIF_FEATURE_SCHEMA)

@@ -36,21 +36,15 @@ symbol desynchronizes the bitstream and corrupts every later DC.
 Pixel-level IDCT correctness is property-tested in pytest instead
 (round-trip error bounds; exact DCT/IDCT inversion pre-quantization).
 
-Reference codec shape: the reference repo has no media path at all —
-this extends SURVEY.md §2.8's multimodal family; plumbing mirrors
-multimodal/gif.py (Arrow mapInPandas, blobs in parquet binary columns,
-decode parallelism = row-group parallelism at 100 TB).
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``
+(fanned out: the decode is compute-bound pure Python, ~ms per blob).
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------- DCT
 
@@ -469,48 +463,3 @@ JPEG_FEATURE_SCHEMA = (
     "doc_id bigint, width int, height int, n_pixels bigint, "
     "n_blocks int, dc_sum bigint, dc_head int"
 )
-
-
-def synth_and_decode_jpeg(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    width: int = 16,
-) -> DataFrame:
-    """Wrap each binary payload into a real baseline JPEG, then run the
-    real decoder over it — one Arrow batch pass. The returned DC-level
-    stats are EXACT payload functions (module docstring), so a SQL
-    oracle value-checks a genuine DCT+Huffman decode without
-    implementing either; pixel-level fidelity is property-tested in
-    pytest (lossy, hence not oracle-checkable).
-
-    The decode is compute-bound pure Python (~ms per blob), so the
-    input is fanned out of the single-partition small-file trap first
-    (columns.py::fan_out_compute — no-op on already-wide inputs;
-    measured 8.00 → 1.19 s at sf0.1, rows bit-identical). The CHEAP
-    decodes (png/tiff/wav) deliberately do NOT fan out: their payload
-    shuffle costs more than the decode (r9 measured regression)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_jpeg(jpeg_bytes(bytes(b), width=width))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_pixels": "int64",
-                    "n_blocks": "int32",
-                    "dc_sum": "int64",
-                    "dc_head": "int32",
-                }
-            )
-
-    from .columns import fan_out_compute
-
-    return fan_out_compute(
-        df.select(F.col(id_col), F.col(payload_col)), id_col
-    ).mapInPandas(op, JPEG_FEATURE_SCHEMA)

@@ -5,16 +5,16 @@ container walker (``avi.py``) yields a genuinely real compressed-video
 path: an MJPEG AVI is a standard AVI whose ``00dc`` chunks each carry a
 complete standalone baseline JPEG (stream handler ``MJPG``,
 ``biCompression = 'MJPG'``) — exactly the format security cameras and
-capture cards emit. This narrows the former "compressed video needs
-ffmpeg" stub to inter-frame codecs only (h264 stays out of scope:
-motion compensation).
+capture cards emit. Inter-frame codecs (h264) stay out of scope: they
+need motion compensation.
 
 Builder: frames of ``width×height`` grayscale pixels from the payload
 bytes (zero-padded per frame), each encoded through the real DCT +
-Huffman encoder; proper avih/strh/strf headers with MJPG fourccs.
+Huffman encoder, in the AVI container writer ``avi.avi_container``
+with MJPG fourccs.
 
-Decoder: the same conformant RIFF walk as ``decode_avi`` (magics,
-sizes, header/movi frame-count cross-check), then every SAMPLED frame
+Decoder: the conformant RIFF walk ``avi.parse_avi`` (magics, sizes,
+header/movi frame-count cross-check), then every SAMPLED frame
 is run through the full baseline JPEG decoder — marker walk, per-frame
 DHT table build (MJPEG frames are self-contained by spec), entropy
 decode. Per-frame DC statistics are EXACT payload functions (the
@@ -23,25 +23,14 @@ SQL-oracle-checkable even though the codec is lossy: a single
 mis-decoded AC symbol in any sampled frame corrupts that frame's later
 DCs and fails the hash gate.
 
-Same Arrow ``mapInPandas`` plumbing as every multimodal op; at 100 TB
-videos ride in parquet binary columns and decode parallelism is
-row-group parallelism.
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``
+(fanned out: per-frame DCT+Huffman decode is compute-bound).
 """
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
+from .avi import avi_container, parse_avi
 from .jpeg import decode_jpeg, jpeg_bytes
-
-_AVIH_SIZE = 56
-_STRH_SIZE = 56
-_BMIH_SIZE = 40
 
 
 def mjpeg_bytes(
@@ -53,99 +42,23 @@ def mjpeg_bytes(
     baseline JPEG in a ``00dc`` chunk."""
     frame_sz = width * height
     n_frames = max(-(-len(payload) // frame_sz), 1)
-    usec_per_frame = 1_000_000 // fps
-
-    jpegs = []
-    for i in range(n_frames):
-        chunk = payload[i * frame_sz : (i + 1) * frame_sz]
-        chunk = chunk + b"\x00" * (frame_sz - len(chunk))  # fixed dims
-        jpegs.append(jpeg_bytes(chunk, width=width))
-    bufsz = max(len(j) for j in jpegs)
-
-    avih = b"avih" + struct.pack(
-        "<I14I",
-        _AVIH_SIZE, usec_per_frame, bufsz * fps, 0, 0,
-        n_frames, 0, 1, bufsz, width, height, 0, 0, 0, 0,
-    )
-    strh = b"strh" + struct.pack(
-        "<I4s4sIHHIIIIIIiI4H",
-        _STRH_SIZE, b"vids", b"MJPG",
-        0, 0, 0, 0, 1, fps, 0, n_frames, bufsz, -1, 0,
-        0, 0, width, height,
-    )
-    strf = b"strf" + struct.pack(
-        "<I" + "IiiHHIIiiII",
-        _BMIH_SIZE, _BMIH_SIZE, width, height, 1, 24,
-        struct.unpack("<I", b"MJPG")[0],  # biCompression
-        width * height * 3, 2835, 2835, 0, 0,
-    )
-    strl = (
-        b"LIST" + struct.pack("<I", 4 + len(strh) + len(strf))
-        + b"strl" + strh + strf
-    )
-    hdrl = (
-        b"LIST" + struct.pack("<I", 4 + len(avih) + len(strl))
-        + b"hdrl" + avih + strl
-    )
-    movi_body = b"".join(
-        b"00dc" + struct.pack("<I", len(j)) + j + (b"\x00" if len(j) & 1 else b"")
-        for j in jpegs
-    )
-    movi = b"LIST" + struct.pack("<I", 4 + len(movi_body)) + b"movi" + movi_body
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-def _parse_avi(content: bytes) -> tuple[int, int, int, int, list[tuple[int, int]]]:
-    """Shared RIFF walk: (usec_per_frame, width, height, n_frames,
-    [(frame_offset, frame_size)]). Raises ValueError on malformed
-    containers — identical checks for every MJPEG consumer."""
-    if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"AVI ":
-        raise ValueError("not an AVI file")
-    riff_size = struct.unpack_from("<I", content, 4)[0]
-    if 8 + riff_size > len(content):
-        raise ValueError("truncated RIFF")
-
-    usec_per_frame = width = height = n_frames = None
-    frames: list[tuple[int, int]] = []
-
-    def walk(pos: int, end: int) -> None:
-        nonlocal usec_per_frame, width, height, n_frames
-        while pos + 8 <= end:
-            fourcc = content[pos : pos + 4]
-            size = struct.unpack_from("<I", content, pos + 4)[0]
-            body, nxt = pos + 8, pos + 8 + size + (size & 1)
-            if body + size > end:
-                raise ValueError(f"chunk {fourcc!r} overruns its parent")
-            if fourcc == b"LIST":
-                walk(body + 4, body + size)
-            elif fourcc == b"avih":
-                if size < _AVIH_SIZE:
-                    raise ValueError("short avih")
-                (usec_per_frame, _, _, _, n_frames, _, _, _, width, height) = (
-                    struct.unpack_from("<10I", content, body)
-                )
-            elif fourcc[2:] == b"dc":  # compressed frame chunk
-                frames.append((body, size))
-            pos = nxt
-
-    walk(12, 8 + riff_size)
-    if usec_per_frame is None or not usec_per_frame:
-        raise ValueError("missing avih header")
-    if len(frames) != n_frames:
-        raise ValueError(
-            f"frame count mismatch: avih={n_frames} movi={len(frames)}"
+    jpegs = [
+        jpeg_bytes(
+            payload[i * frame_sz : (i + 1) * frame_sz].ljust(frame_sz, b"\x00"),
+            width=width,
         )
-    return usec_per_frame, width, height, n_frames, frames
+        for i in range(n_frames)
+    ]
+    return avi_container(jpegs, width, height, fps, codec=b"MJPG")
 
 
 def decode_mjpeg(content: bytes, every_ms: int = 200) -> dict:
     """Parse an MJPEG AVI and fully JPEG-decode one frame every
     ``every_ms`` of media time (frame 0 always sampled). The RIFF walk
-    mirrors ``decode_avi``; each sampled ``00dc`` chunk goes through
+    is ``avi.parse_avi``; each sampled ``00dc`` chunk goes through
     the complete baseline decoder and contributes its dequantized-DC
     stats. Raises ValueError on malformed containers or frames."""
-    usec_per_frame, width, height, n_frames, frames = _parse_avi(content)
+    usec_per_frame, width, height, n_frames, frames = parse_avi(content, b"dc")
 
     step = max(every_ms * 1000 // usec_per_frame, 1)
     sampled = range(0, n_frames, step)
@@ -176,59 +89,6 @@ MJPEG_FEATURE_SCHEMA = (
 )
 
 
-def synth_and_decode_mjpeg(
-    df: DataFrame,
-    payload_col: str = "content",
-    id_col: str = "doc_id",
-    width: int = 16,
-    height: int = 8,
-    fps: int = 10,
-    every_ms: int = 200,
-) -> DataFrame:
-    """Wrap each binary payload into a real MJPEG AVI, then run the
-    real container walk + per-sampled-frame JPEG decode — one Arrow
-    batch pass. Sampled-DC sums are exact payload functions (module
-    docstring), so the SQL oracle value-checks compressed VIDEO decode
-    + frame sampling without implementing either codec.
-
-    Fanned out of the single-partition small-file trap like the scene
-    pass below (columns.py::fan_out_compute — no-op on already-wide
-    inputs): the per-frame DCT+Huffman decode is compute-bound pure
-    Python, the same class measured 8.5 → 1.4 s for scene detection."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_mjpeg(
-                    mjpeg_bytes(
-                        bytes(b), width=width, height=height, fps=fps
-                    ),
-                    every_ms=every_ms,
-                )
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_frames": "int32",
-                    "duration_ms": "int64",
-                    "n_sampled": "int32",
-                    "dc_sum_sampled": "int64",
-                    "dc_head": "int32",
-                }
-            )
-
-    from .columns import fan_out_compute
-
-    return fan_out_compute(
-        df.select(F.col(id_col), F.col(payload_col)), id_col
-    ).mapInPandas(op, MJPEG_FEATURE_SCHEMA)
-
-
 def decode_mjpeg_scenes(content: bytes, threshold: int = 200) -> dict:
     """Shot-boundary (scene-change) detection over an MJPEG AVI: decode
     EVERY frame through the full baseline-JPEG path, take each frame's
@@ -243,7 +103,7 @@ def decode_mjpeg_scenes(content: bytes, threshold: int = 200) -> dict:
     ordered); the corpus scales across videos via the Arrow batch
     axis, not within one.
     """
-    _, width, height, n_frames, frames = _parse_avi(content)
+    _, width, height, n_frames, frames = parse_avi(content, b"dc")
     dcs: list[int] = []
     for off, size in frames:
         f = decode_jpeg(content[off : off + size])
@@ -267,39 +127,3 @@ def decode_mjpeg_scenes(content: bytes, threshold: int = 200) -> dict:
 SCENES_SCHEMA = (
     "doc_id bigint, n_frames int, n_scene_changes int, max_jump bigint"
 )
-
-
-def synth_and_scene_detect(
-    df: DataFrame,
-    payload_col: str = "content",
-    id_col: str = "doc_id",
-    threshold: int = 200,
-) -> DataFrame:
-    """Build the MJPEG AVI and run shot detection in one Arrow pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_mjpeg_scenes(
-                    mjpeg_bytes(bytes(b)), threshold=threshold
-                )
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "n_frames": "int32",
-                    "n_scene_changes": "int32",
-                    "max_jump": "int64",
-                }
-            )
-
-    from .columns import fan_out_compute
-
-    # compute-bound decode: escape the 1-2-partition small-file trap
-    # (columns.py::fan_out_compute — no-op on already-wide inputs)
-    return fan_out_compute(
-        df.select(F.col(id_col), F.col(payload_col)), id_col
-    ).mapInPandas(op, SCENES_SCHEMA)

@@ -2,8 +2,7 @@
 plus the stdlib ``zlib`` (always present; no external codec library).
 
 PNG's compression is DEFLATE, which Python ships in the standard
-library, so — unlike jpeg (DCT+Huffman tables) or h264 — nothing stops
-a real implementation: the builder emits a spec-conformant 8-bit
+library: the builder emits a spec-conformant 8-bit
 grayscale PNG (signature, IHDR, one IDAT with zlib-compressed
 filtered scanlines, IEND, CRCs via ``zlib.crc32``), and the parser is
 a conformant reader of that subset: it validates the signature, walks
@@ -12,21 +11,16 @@ reverses per-scanline filtering — all five standard filter types
 (None/Sub/Up/Average/Paeth), not just the one the builder emits, so a
 foreign grayscale-8 PNG decodes too.
 
-Both directions run inside Arrow-batched ``mapInPandas`` — identical
-plumbing to ``bmp.py``/``gif.py``. Layout reference: the public PNG
-specification (RFC 2083 / ISO 15948): signature, chunk layout + CRC,
-IHDR fields, filter type bytes, DEFLATE datastream.
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``.
+Layout reference: the public PNG specification (RFC 2083 / ISO 15948):
+signature, chunk layout + CRC, IHDR fields, filter type bytes, DEFLATE
+datastream.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -158,42 +152,3 @@ def decode_png(content: bytes) -> dict:
         "sum_rgb": 3 * sum(pixels),  # grayscale: r=g=b
         "head_px": pixels[0] if pixels else -1,
     }
-
-
-PNG_FEATURE_SCHEMA = (
-    "doc_id bigint, width int, height int, n_pixels bigint, "
-    "sum_rgb bigint, head_px int"
-)
-
-
-def synth_and_decode_png(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    width: int = 16,
-) -> DataFrame:
-    """Wrap each binary payload into a real DEFLATE-compressed PNG,
-    then run the real parser over it — one Arrow batch pass. Decoded
-    features are pure functions of the payload, so a SQL oracle checks
-    a genuinely compressed decode without implementing DEFLATE."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_png(png_bytes(bytes(b), width=width))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_pixels": "int64",
-                    "sum_rgb": "int64",
-                    "head_px": "int32",
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, PNG_FEATURE_SCHEMA
-    )

@@ -2,23 +2,20 @@
 ingest: a crawl dump column holds SOME binary per row; the engine must
 identify the container from its magic bytes and route it to the right
 decoder (never trust an extension or an upstream content-type). One
-Arrow pass: sniff → dispatch → REAL decode (every branch is one of the
-engine's full codec implementations) → normalized (format, units)
-features, where units = pixels for images, samples for audio,
+row function per blob: sniff → dispatch → REAL decode (every branch is
+one of the engine's full codec implementations) → normalized (format,
+units) features, where units = pixels for images, samples for audio,
 frame-pixels for video.
 
 Unknown magic raises — a mixed-ingest front door that silently guesses
 is how corrupt shards poison a corpus (the DLQ pattern in
 sources/evolution.py is the quarantine half of this story).
+
+Pure bytes in, tuple out; the Spark side is ``columns.decode_pass``
+(fanned out: every row runs a full decode).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .avi import avi_bytes, decode_avi
 from .bmp import bmp_bytes, decode_bmp
@@ -73,29 +70,12 @@ def sniff_and_units(content: bytes) -> tuple[str, int]:
     return fmt, d["n_frames"] * d["width"] * d["height"]
 
 
+def synth_mixed_and_sniff(doc_id: int, payload: bytes) -> tuple[str, int]:
+    """Build the container ``doc_id % 6`` picks (the synthetic MIXED
+    corpus), then sniff-and-dispatch it WITHOUT using the branch that
+    built it — the round-trip proves sniffing, not bookkeeping."""
+    _, synth = SYNTHS[int(doc_id) % len(SYNTHS)]
+    return sniff_and_units(synth(payload))
+
+
 SNIFF_SCHEMA = "doc_id bigint, fmt string, units bigint"
-
-
-def synth_mixed_and_sniff(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
-    """Build a MIXED corpus (container chosen by doc_id % 6), then
-    sniff-and-dispatch WITHOUT using the branch that built each row —
-    the round-trip proves sniffing, not bookkeeping."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                _, synth = SYNTHS[int(doc_id) % len(SYNTHS)]
-                fmt, units = sniff_and_units(synth(bytes(payload)))
-                rows.append((int(doc_id), fmt, int(units)))
-            yield pd.DataFrame(rows, columns=["doc_id", "fmt", "units"])
-
-    from .columns import fan_out_compute
-
-    # compute-bound decode: escape the 1-2-partition small-file trap
-    # (columns.py::fan_out_compute — no-op on already-wide inputs)
-    return fan_out_compute(
-        df.select(F.col(id_col), F.col(payload_col)), id_col
-    ).mapInPandas(op, SNIFF_SCHEMA)

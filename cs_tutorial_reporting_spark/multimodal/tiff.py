@@ -11,20 +11,15 @@ and reassembles the logical pixel stream. Foreign little-endian
 grayscale-8 PackBits TIFFs decode too (pytest-pinned); anything else
 raises ValueError like a conformant reader.
 
-Both directions run inside Arrow-batched ``mapInPandas`` — identical
-plumbing to wav/bmp/gif/png/jpeg. Multi-strip layout (RowsPerStrip=4)
-is deliberate: strips are TIFF's parallelism unit, the analog of
-parquet row groups at 100 TB.
+Multi-strip layout (RowsPerStrip=4) is deliberate: strips are TIFF's
+parallelism unit, the analog of parquet row groups at 100 TB.
+
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _ROWS_PER_STRIP = 4
 _PACKBITS = 32773
@@ -237,49 +232,3 @@ TIFF_FEATURE_SCHEMA = (
     "doc_id bigint, width int, height int, n_pixels bigint, "
     "n_strips int, sum_gray bigint, head_px int"
 )
-
-
-def synth_and_decode_tiff(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    width: int = 16,
-) -> DataFrame:
-    """Wrap each payload into a real PackBits TIFF, decode it back —
-    one fused Arrow batch pass (container bytes never hit a shuffle).
-    Decoded stats are pure payload functions (sum_gray = byte sum,
-    head_px = first byte or 0 for the padded empty image, n_strips =
-    ceil(height/4)), so the SQL oracle checks the decode without
-    parsing TIFF."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_tiff(tiff_bytes(bytes(b), width=width))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int32",
-                    "height": "int32",
-                    "n_pixels": "int64",
-                    "n_strips": "int32",
-                    "sum_gray": "int64",
-                    "head_px": "int32",
-                }
-            )[
-                [
-                    "doc_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "n_strips",
-                    "sum_gray",
-                    "head_px",
-                ]
-            ]
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, schema=TIFF_FEATURE_SCHEMA
-    )

@@ -1,24 +1,17 @@
-"""[EXT] Real (non-stub) audio decode for the multimodal column path:
-a pure-Python RIFF/WAVE container builder + parser — no codec library
-needed, so the *decode* step of the multimodal pipeline is genuinely
-exercised in this container (the image/video stubs in ``columns.py``
-remain stubs; WAV is the honest uncompressed format we can do for real).
+"""[EXT] Real audio decode for the multimodal column path: a
+pure-Python RIFF/WAVE container builder + parser (no codec library
+needed), plus the integer-exact DSP features and voice-activity
+segmentation computed over the decoded PCM.
 
-Both functions run inside Arrow-batched ``mapInPandas`` — the exact
-plumbing a libsndfile/ffmpeg decoder would use; swapping the parser for
-a real codec is a one-function change. At 100 TB the blobs ride in
-parquet binary columns and decode parallelism is row-group parallelism.
+Pure bytes in, dict out; the Spark side is ``columns.decode_pass``.
+Swapping the parser for libsndfile/ffmpeg is a one-function change.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def wav_bytes(
@@ -135,85 +128,10 @@ WAV_FEATURE_SCHEMA = (
 )
 
 
-def synth_and_decode_wav(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    sample_rate: int = 8000,
-) -> DataFrame:
-    """Wrap each binary payload into a real WAV container, then run the
-    real decoder over it — one Arrow batch pass (build+parse fused so
-    the container bytes never hit the shuffle). The output features are
-    pure functions of payload length + first byte, so a SQL oracle can
-    check the decode without itself parsing RIFF."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                decode_wav(wav_bytes(bytes(b), sample_rate=sample_rate))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "sample_rate": "int32",
-                    "n_channels": "int32",
-                    "bits": "int32",
-                    "n_samples": "int64",
-                    "duration_ms": "int64",
-                    "first_sample": "int32",
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, WAV_FEATURE_SCHEMA
-    )
-
-
 WAV_DSP_SCHEMA = (
     "doc_id bigint, n_samples bigint, n_frames int, sum_energy bigint, "
     "n_zero_cross bigint, peak_abs int, max_frame_energy bigint"
 )
-
-
-def synth_and_dsp_wav(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id",
-    sample_rate: int = 8000, frame_len: int = 160,
-) -> DataFrame:
-    """Wrap each binary payload into a real 16-bit mono WAV, decode it,
-    and extract the integer-exact DSP features (:func:`wav_dsp_features`)
-    — one Arrow batch pass. Samples are the payload's little-endian
-    16-bit pairs, so every feature is a closed-form function of the raw
-    bytes and the SQL oracle replicates decode + DSP end-to-end."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                wav_dsp_features(
-                    wav_bytes(
-                        bytes(b), sample_rate=sample_rate, sampwidth=2
-                    ),
-                    frame_len=frame_len,
-                )
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "n_samples": "int64",
-                    "n_frames": "int32",
-                    "sum_energy": "int64",
-                    "n_zero_cross": "int64",
-                    "peak_abs": "int32",
-                    "max_frame_energy": "int64",
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, WAV_DSP_SCHEMA
-    )
 
 
 def wav_vad_segments(content: bytes, frame_len: int = 160) -> dict:
@@ -265,32 +183,3 @@ VAD_SCHEMA = (
     "doc_id bigint, n_frames int, n_active int, n_segments int, "
     "longest_run int"
 )
-
-
-def synth_and_vad_wav(
-    df: DataFrame, payload_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
-    """Build the WAV container and run VAD segmentation in one Arrow
-    pass (same fused shape as synth_and_dsp_wav)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                wav_vad_segments(wav_bytes(bytes(b), sampwidth=2))
-                for b in pdf[payload_col]
-            ]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf[id_col].to_numpy())
-            yield out.astype(
-                {
-                    "doc_id": "int64",
-                    "n_frames": "int32",
-                    "n_active": "int32",
-                    "n_segments": "int32",
-                    "longest_run": "int32",
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        op, VAD_SCHEMA
-    )

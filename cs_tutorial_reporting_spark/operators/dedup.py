@@ -39,6 +39,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import widen
 from ..functions.text import hash60, normalize_text  # noqa: F401  (re-export)
 
 
@@ -94,18 +95,6 @@ def shingles(col, n: int = 3):
     return bind_once(words, _sh)
 
 
-def _fan_out(df: DataFrame, *keys: str, per_core: int = 2) -> DataFrame:
-    """Repartition ``df`` (by ``keys``, else round-robin) to ``per_core``
-    × the session parallelism when it has fewer partitions. Small-file
-    inputs arrive as 1-2 partitions and the stage that follows is
-    compute-bound; at real scale the input is already wide and this is
-    a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism * per_core
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, *keys)
-    return df
-
-
 def _sign(
     df: DataFrame,
     text_col: str,
@@ -122,7 +111,7 @@ def _sign(
     ``hash60("{j}|" + s)``. ``carry`` maps an alias to a source column
     that rides along; each must be a function of the id, so it leaves
     the signature grouping unchanged. ``fan_out`` spreads a narrow input
-    (:func:`_fan_out`) before the shingle stage.
+    (``functions.widen``) before the shingle stage.
 
     ``sh`` is localCheckpointed eagerly. It feeds the signature and both
     verify joins, and a shingle set costs ~10 ms/doc to build.
@@ -144,7 +133,7 @@ def _sign(
         F.col(text_col).alias("__txt"),
     )
     if fan_out:
-        src = _fan_out(src, "__id")
+        src = widen(src, "__id")
     sh = src.select(
         "__id", *carry, shingles(F.col("__txt"), shingle_n).alias("__sh")
     ).localCheckpoint(eager=True)
@@ -550,7 +539,7 @@ def bucket_corpus(
     corpus size), so every later probe pays zero per-call counting."""
     from .similarity import hyperplane_bucket
 
-    bucketed = _fan_out(emb).select(
+    bucketed = widen(emb).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
         hyperplane_bucket(vec_col, n_planes, dim).alias("__bkt"),
@@ -618,7 +607,7 @@ def embedding_near_dup_pairs(
         b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
         # a cross join of 1×1 partitions would run the whole O(n²)
         # scoring on one core: fan the probe side out
-        pairs = _fan_out(a).crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+        pairs = widen(a).crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn(
             # single-level flat fold — no nested lambda binding
@@ -784,7 +773,7 @@ def winnow_containment_pairs(
     """
     from ..functions.text import winnow_fingerprints
 
-    src = _fan_out(
+    src = widen(
         df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt")),
         "__id",
         per_core=1,

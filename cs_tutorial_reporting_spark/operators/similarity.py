@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.vectors import cosine, cosine_flat, dot, dot_flat
+from ..functions.vectors import cosine_flat, dot_flat
 
 #: per-chunk score-grid budget for the Arrow all-pairs scorers:
 #: rows × n_q doubles ≤ 8M (≈64 MB transient per Python worker).
@@ -177,27 +177,17 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    assume_normalized: bool = False,
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Exact top-k neighbors per query vector.
 
     Returns (query_id, vec_id, cos, rank), rank 1..k, deterministic
-    tie-break on vec_id. ``assume_normalized`` switches cosine → dot
-    (the driver embeddings are L2-normalized; saves two norms per pair).
-    Pass ``dim`` to score via the single-level flat folds
-    (``vectors.dot_flat``/``cosine_flat`` — no nested lambda binding;
-    see the BASELINE.md round-4 and round-5 notes) — every fixed-dim
-    caller should; omitting it keeps the dimension-agnostic nested
-    JVM fold.
+    tie-break on vec_id. Scores through the single-level flat fold
+    ``vectors.cosine_flat`` over ``dim`` components — no nested lambda
+    binding (see the BASELINE.md round-4 and round-5 notes).
     """
-    if dim is not None:
-        sim = (dot_flat if assume_normalized else cosine_flat)(
-            vec_col, query_vec_col, dim
-        )
-    else:
-        sim_fn = dot if assume_normalized else cosine
-        sim = sim_fn(F.col(vec_col), F.col(query_vec_col))
+    sim = cosine_flat(vec_col, query_vec_col, dim)
     scored = emb.crossJoin(F.broadcast(queries)).select(
         F.col(query_id_col),
         F.col(id_col),

@@ -179,14 +179,12 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (doc_id, fp) row per selected fingerprint — the plagiarism/
     near-dup fingerprinting primitive; shared fingerprints ⇒ shared
     ≥11-char runs (functions/text.py)."""
+    from .functions import widen
     from .functions.text import winnow_fingerprints
 
-    d = t(spark, sf_dir, "documents")
     # per-char md5 stream is compute-bound: fan small single-file inputs
-    # out before the map (no-op on already-wide inputs)
-    target = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < target:
-        d = d.repartition(target)
+    # out before the map
+    d = widen(t(spark, sf_dir, "documents"), per_core=1)
     return d.select(
         "doc_id",
         F.explode(
@@ -1378,11 +1376,16 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     extractor (multimodal/columns.py). The 'decode' here is the
     deterministic fake (byte stats + md5); real codecs slot into the
     same batch signature."""
-    from .multimodal import attach_media, extract_features
+    from .multimodal.columns import (
+        FEATURE_SCHEMA,
+        attach_media,
+        byte_features,
+        decode_pass,
+    )
 
     d = t(spark, sf_dir, "documents")
     media = attach_media(d, F.encode(F.col("text"), "utf-8"), "image", "raw")
-    return extract_features(media, id_col="doc_id")
+    return decode_pass(media, lambda _, b: byte_features(b), FEATURE_SCHEMA)
 
 
 @register(
@@ -1409,12 +1412,15 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow mapInPandas pass. The decoded header fields (rate/channels/
     bits/samples/duration) are pure functions of the payload, so the
     oracle checks the decode without parsing RIFF itself."""
-    from .multimodal.wav import synth_and_decode_wav
+    from .multimodal.columns import decode_pass
+    from .multimodal.wav import WAV_FEATURE_SCHEMA, decode_wav, wav_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_wav(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: decode_wav(wav_bytes(b)), WAV_FEATURE_SCHEMA
+    )
 
 
 @register(
@@ -1446,12 +1452,15 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dims / pixel count / channel sum / top-left pixel) are pure
     functions of the payload, so the oracle checks the decode without
     parsing BMP itself."""
-    from .multimodal.bmp import synth_and_decode_bmp
+    from .multimodal.bmp import bmp_bytes, decode_bmp
+    from .multimodal.columns import IMAGE_FEATURE_SCHEMA, decode_pass
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_bmp(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: decode_bmp(bmp_bytes(b)), IMAGE_FEATURE_SCHEMA
+    )
 
 
 @register(
@@ -1484,12 +1493,15 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a foreign grayscale-8 PNG decodes too; pytest-pinned). One Arrow
     mapInPandas pass; the oracle value-checks the decode as pure
     payload functions without implementing DEFLATE."""
-    from .multimodal.png import synth_and_decode_png
+    from .multimodal.columns import IMAGE_FEATURE_SCHEMA, decode_pass
+    from .multimodal.png import decode_png, png_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_png(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: decode_png(png_bytes(b)), IMAGE_FEATURE_SCHEMA
+    )
 
 
 @register(
@@ -1523,12 +1535,17 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     LZW decode without implementing LZW; the codec round-trip
     (including mid-stream Clear resets past the 4096-entry table) is
     property-pinned in pytest."""
-    from .multimodal.gif import synth_and_decode_gif
+    from .multimodal.columns import IMAGE_FEATURE_SCHEMA, decode_pass
+    from .multimodal.gif import decode_gif, gif_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_gif(d, payload_col="content", id_col="doc_id")
+    # LZW decode is compute-bound: measured 3.04 → 1.06 s at sf0.1 fanned
+    return decode_pass(
+        d, lambda _, b: decode_gif(gif_bytes(b)), IMAGE_FEATURE_SCHEMA,
+        fan_out=True,
+    )
 
 
 @register(
@@ -1588,12 +1605,17 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     every later DC — so dc_sum/dc_head value-check the whole entropy
     layer. Pixel-level IDCT fidelity (max error ≤ 2 at this quant
     table) is property-pinned in pytest."""
-    from .multimodal.jpeg import synth_and_decode_jpeg
+    from .multimodal.columns import decode_pass
+    from .multimodal.jpeg import JPEG_FEATURE_SCHEMA, decode_jpeg, jpeg_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_jpeg(d, payload_col="content", id_col="doc_id")
+    # compute-bound decode: measured 8.00 → 1.19 s at sf0.1 fanned
+    return decode_pass(
+        d, lambda _, b: decode_jpeg(jpeg_bytes(b)), JPEG_FEATURE_SCHEMA,
+        fan_out=True,
+    )
 
 
 @register(
@@ -1650,12 +1672,16 @@ def multimodal_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload functions, so the oracle value-checks compressed-video
     decode + sampling end-to-end; h264 remains the only stubbed codec
     (inter-frame motion compensation)."""
-    from .multimodal.mjpeg import synth_and_decode_mjpeg
+    from .multimodal.columns import decode_pass
+    from .multimodal.mjpeg import MJPEG_FEATURE_SCHEMA, decode_mjpeg, mjpeg_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_mjpeg(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: decode_mjpeg(mjpeg_bytes(b)), MJPEG_FEATURE_SCHEMA,
+        fan_out=True,
+    )
 
 
 @register(
@@ -1719,12 +1745,15 @@ def multimodal_wav_dsp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replicates decode + DSP bit-for-bit from raw bytes
     (little-endian sign convention included). The feature family VAD /
     silence-trimming / clipping-detection pipelines start from."""
-    from .multimodal.wav import synth_and_dsp_wav
+    from .multimodal.columns import decode_pass
+    from .multimodal.wav import WAV_DSP_SCHEMA, wav_bytes, wav_dsp_features
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_dsp_wav(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: wav_dsp_features(wav_bytes(b, sampwidth=2)), WAV_DSP_SCHEMA
+    )
 
 
 @register(
@@ -1766,12 +1795,15 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled-pixel sum / first sampled pixel) are pure functions of the
     payload, so the oracle checks decode + sampling without parsing AVI
     itself."""
-    from .multimodal.avi import synth_and_decode_avi
+    from .multimodal.avi import AVI_FEATURE_SCHEMA, avi_bytes, decode_avi
+    from .multimodal.columns import decode_pass
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_avi(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: decode_avi(avi_bytes(b)), AVI_FEATURE_SCHEMA
+    )
 
 
 @register(
@@ -4027,12 +4059,15 @@ def multimodal_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     image); candidates come from four band equi-joins, never an image
     cross join; the verify touches 8-byte hashes, never pixels.
     """
-    from .multimodal.bmp import synth_and_dhash_bmp
+    from .multimodal.bmp import DHASH_SCHEMA, bmp_bytes, dhash_bands
+    from .multimodal.columns import decode_pass
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    hashes = synth_and_dhash_bmp(d).localCheckpoint()
+    hashes = decode_pass(
+        d, lambda _, b: dhash_bands(bmp_bytes(b)), DHASH_SCHEMA
+    ).localCheckpoint()
     bands = hashes.select(
         "doc_id",
         F.explode(
@@ -4131,12 +4166,17 @@ def multimodal_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     DESIGN (a video is one unit of parallelism); the corpus scales
     across the Arrow batch axis.
     """
-    from .multimodal.mjpeg import synth_and_scene_detect
+    from .multimodal.columns import decode_pass
+    from .multimodal.mjpeg import SCENES_SCHEMA, decode_mjpeg_scenes, mjpeg_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_scene_detect(d, threshold=200)
+    # compute-bound decode: measured 8.5 → 1.4 s at sf0.1 fanned
+    return decode_pass(
+        d, lambda _, b: decode_mjpeg_scenes(mjpeg_bytes(b), threshold=200),
+        SCENES_SCHEMA, fan_out=True,
+    )
 
 
 @register(
@@ -4173,13 +4213,14 @@ def multimodal_container_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end. Unknown magic raises rather than guessing (the DLQ
     quarantines, not the decoder).
     """
-    from .multimodal.sniff import synth_mixed_and_sniff
+    from .multimodal.columns import decode_pass
+    from .multimodal.sniff import SNIFF_SCHEMA, synth_mixed_and_sniff
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
     return (
-        synth_mixed_and_sniff(d)
+        decode_pass(d, synth_mixed_and_sniff, SNIFF_SCHEMA, fan_out=True)
         .groupBy("fmt")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -4247,12 +4288,15 @@ def multimodal_wav_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands segmentation in SQL. The audio analog of the
     MJPEG shot detector (one clip = one unit of parallelism).
     """
-    from .multimodal.wav import synth_and_vad_wav
+    from .multimodal.columns import decode_pass
+    from .multimodal.wav import VAD_SCHEMA, wav_bytes, wav_vad_segments
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_vad_wav(d)
+    return decode_pass(
+        d, lambda _, b: wav_vad_segments(wav_bytes(b, sampwidth=2)), VAD_SCHEMA
+    )
 
 
 def knn_agreement_from_candidates(e: DataFrame, nn: DataFrame) -> DataFrame:

@@ -1930,12 +1930,15 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parallelism unit; the Arrow pass fuses build+parse so
     container bytes never shuffle.
     """
-    from .multimodal.tiff import synth_and_decode_tiff
+    from .multimodal.columns import decode_pass
+    from .multimodal.tiff import TIFF_FEATURE_SCHEMA, decode_tiff, tiff_bytes
 
     d = t(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
     )
-    return synth_and_decode_tiff(d, payload_col="content", id_col="doc_id")
+    return decode_pass(
+        d, lambda _, b: decode_tiff(tiff_bytes(b)), TIFF_FEATURE_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -293,8 +293,20 @@ def read_json_array(
     contract. Schema is explicit; extra JSON fields are dropped
     (projection P2), missing declared fields surface as NULLs at read and
     are caught by ``operators.project.project_cast(strict=True)``.
+
+    The reader's corrupt-record column gets a name no declared field
+    has, so a declared ``_corrupt_record`` reads as data; a malformed
+    line reads as an all-NULL row.
     """
-    return spark.read.schema(schema).option("encoding", encoding).json(path)
+    corrupt = "_corrupt_record"
+    while corrupt in schema.fieldNames():
+        corrupt = "_" + corrupt
+    return (
+        spark.read.schema(schema)
+        .option("encoding", encoding)
+        .option("columnNameOfCorruptRecord", corrupt)
+        .json(path)
+    )
 
 
 def read_csv_staging(

@@ -98,9 +98,6 @@ def landed_path(df: DataFrame) -> str | None:
     hit = _LANDED.get(df)
     if hit is None or not _json_exact(df.schema):
         return None
-    # the JSON reader fills a column of this name only with malformed lines
-    if df.sparkSession.conf.get("spark.sql.columnNameOfCorruptRecord") in df.columns:
-        return None
     path, files = hit
     try:
         return path if _landing_files(path) == files else None

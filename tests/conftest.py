@@ -37,16 +37,20 @@ def jobs_started(spark):
 
 @pytest.fixture()
 def py4j_commands(spark):
-    """``py4j_commands(fn)`` → (fn(), number of Py4J commands the driver
-    sent to the JVM while fn ran), counted on the gateway client."""
+    """``py4j_commands(fn)`` → (fn(), number of Py4J commands fn's thread
+    sent to the JVM while fn ran), counted on the gateway client. Other
+    threads are not counted: Py4J's finalizer thread releases JVM objects
+    of earlier garbage at its own pace through the same client."""
+    import threading
+
     client = spark.sparkContext._gateway._gateway_client
 
     def run(fn):
-        send, sent = client.send_command, 0
+        send, sent, caller = client.send_command, 0, threading.get_ident()
 
         def counting(*args, **kwargs):
             nonlocal sent
-            sent += 1
+            sent += threading.get_ident() == caller
             return send(*args, **kwargs)
 
         client.send_command = counting

@@ -219,7 +219,7 @@ def test_lsh_topk_recall_against_bruteforce(spark, emb):
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    exact = brute_force_topk(emb, q, k=5)
+    exact = brute_force_topk(emb, q, k=5, dim=64)
     approx = lsh_topk(emb, q, k=5, n_planes=4)
     e = {(r.query_id, r.vec_id) for r in exact.collect()}
     a = {(r.query_id, r.vec_id) for r in approx.collect()}
@@ -239,7 +239,7 @@ def test_ivf_topk_recall_against_bruteforce(spark, emb):
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    exact = brute_force_topk(emb, q, k=5)
+    exact = brute_force_topk(emb, q, k=5, dim=64)
     approx = ivf_topk(emb, q, k=5, n_centroids=8, n_probes=3)
     e = {(r.query_id, r.vec_id) for r in exact.collect()}
     a = {(r.query_id, r.vec_id) for r in approx.collect()}
@@ -373,24 +373,22 @@ def test_streaming_session_window_runs(spark):
     assert all(r.session_end > r.session_start for r in got)
 
 
-def test_multimodal_stubs_and_features(spark, docs):
+def test_multimodal_media_pair_and_byte_features(spark, docs):
     import hashlib
 
-    from cs_tutorial_reporting_spark.multimodal import (
+    from cs_tutorial_reporting_spark.multimodal.columns import (
+        FEATURE_SCHEMA,
         attach_media,
-        decode_image_stub,
-        extract_features,
-        frame_sample_stub,
+        byte_features,
+        decode_pass,
     )
-
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        frame_sample_stub(b"...", 1000)
 
     media = attach_media(docs.limit(5), F.encode("text", "utf-8"), "image", "raw")
     assert media.schema["meta"].dataType["media_type"].dataType.simpleString() == "string"
-    feats = {r.doc_id: r for r in extract_features(media).collect()}
+    feats = {
+        r.doc_id: r
+        for r in decode_pass(media, lambda _, b: byte_features(b), FEATURE_SCHEMA).collect()
+    }
     src = {r.doc_id: r.text for r in docs.limit(5).collect()}
     for doc_id, text in src.items():
         raw = text.encode("utf-8")
@@ -760,13 +758,19 @@ def test_wav_roundtrip_and_malformed():
 
 
 def test_wav_decode_via_mapinpandas(spark):
-    from cs_tutorial_reporting_spark.multimodal.wav import synth_and_decode_wav
+    from cs_tutorial_reporting_spark.multimodal.columns import decode_pass
+    from cs_tutorial_reporting_spark.multimodal.wav import (
+        WAV_FEATURE_SCHEMA,
+        decode_wav,
+        wav_bytes,
+    )
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [(1, "hello"), (2, "")], "doc_id bigint, text string"
     ).select("doc_id", F.encode("text", "utf-8").alias("content"))
-    rows = {r.doc_id: r for r in synth_and_decode_wav(df).collect()}
+    out = decode_pass(df, lambda _, b: decode_wav(wav_bytes(b)), WAV_FEATURE_SCHEMA)
+    rows = {r.doc_id: r for r in out.collect()}
     assert rows[1].n_samples == 5 and rows[1].first_sample == ord("h")
     assert rows[2].n_samples == 0 and rows[2].first_sample == -1
 
@@ -883,10 +887,10 @@ def test_bmp_malformed_and_spark_path(spark, docs):
 
     import pytest as _pytest
 
-    from cs_tutorial_reporting_spark.multimodal.bmp import (
-        bmp_bytes,
-        decode_bmp,
-        synth_and_decode_bmp,
+    from cs_tutorial_reporting_spark.multimodal.bmp import bmp_bytes, decode_bmp
+    from cs_tutorial_reporting_spark.multimodal.columns import (
+        IMAGE_FEATURE_SCHEMA,
+        decode_pass,
     )
 
     good = bmp_bytes(b"hello world", width=4)
@@ -900,7 +904,8 @@ def test_bmp_malformed_and_spark_path(spark, docs):
         decode_bmp(good[:-4])                    # truncated pixels
 
     d = docs.select("doc_id", F.encode(F.col("text"), "utf-8").alias("content"))
-    got = {r.doc_id: r.asDict() for r in synth_and_decode_bmp(d).collect()}
+    out = decode_pass(d, lambda _, b: decode_bmp(bmp_bytes(b)), IMAGE_FEATURE_SCHEMA)
+    got = {r.doc_id: r.asDict() for r in out.collect()}
     for row in d.limit(5).collect():
         payload = bytes(row.content)
         f = decode_bmp(bmp_bytes(payload))
@@ -1197,10 +1202,11 @@ def test_avi_malformed_and_spark_path(spark, docs):
     import pytest as _pytest
 
     from cs_tutorial_reporting_spark.multimodal.avi import (
+        AVI_FEATURE_SCHEMA,
         avi_bytes,
         decode_avi,
-        synth_and_decode_avi,
     )
+    from cs_tutorial_reporting_spark.multimodal.columns import decode_pass
 
     good = avi_bytes(b"hello world, this is more than one frame" * 4)
     with _pytest.raises(ValueError):
@@ -1217,7 +1223,8 @@ def test_avi_malformed_and_spark_path(spark, docs):
         decode_avi(bytes(lying))                     # frame-count mismatch
 
     d = docs.select("doc_id", F.encode(F.col("text"), "utf-8").alias("content"))
-    got = {r.doc_id: r.asDict() for r in synth_and_decode_avi(d).collect()}
+    out = decode_pass(d, lambda _, b: decode_avi(avi_bytes(b)), AVI_FEATURE_SCHEMA)
+    got = {r.doc_id: r.asDict() for r in out.collect()}
     for row in d.limit(5).collect():
         payload = bytes(row.content)
         f = decode_avi(avi_bytes(payload))
@@ -1292,7 +1299,7 @@ def test_pq_encode_compression_and_recall(spark, emb):
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    exact = {(r.query_id, r.vec_id) for r in brute_force_topk(emb, q, k=5).collect()}
+    exact = {(r.query_id, r.vec_id) for r in brute_force_topk(emb, q, k=5, dim=64).collect()}
 
     def recall(codebooks):
         got = pq_topk(emb, q, k=5, codebooks=codebooks).collect()
@@ -3384,24 +3391,25 @@ def test_allpairs_threshold_arrow_bitwise_equals_crossjoin_path(spark):
 
 
 def test_fan_out_guards_parallelism_properties(spark):
-    """Pins the round-9 single-partition-trap fixes as PROPERTIES, not
-    just values: (1) fan_out_compute widens a 1-partition frame to 2×
-    session parallelism and is identity on an already-wide frame;
-    (2) the Arrow scorers' work-proportional guard stays single-
-    partition for small grids (the measured tiny-task-overhead
-    regression) and fans for large ones; (3) the MJPEG scene pass —
-    the 8.5 s→1.4 s fix — actually inherits the fan-out (its
-    mapInPandas input is wider than the raw scan)."""
-    from cs_tutorial_reporting_spark.multimodal.columns import fan_out_compute
+    """Pins the single-partition-trap fixes as PROPERTIES, not just
+    values: (1) ``functions.widen`` spreads a 1-partition frame to
+    ``per_core`` × session parallelism and is identity on an
+    already-wide frame; (2) the Arrow scorers' work-proportional guard
+    stays single-partition for small grids (the measured tiny-task-
+    overhead regression) and fans for large ones. Which multimodal
+    passes fan out is pinned per query in
+    test_multimodal_decode_pass_per_query."""
+    from cs_tutorial_reporting_spark.functions import widen
     from cs_tutorial_reporting_spark.operators import similarity as sim
 
     par = spark.sparkContext.defaultParallelism
     narrow = spark.createDataFrame(
         [(i, f"t{i}") for i in range(100)], "doc_id long, text string"
     ).coalesce(1)
-    assert fan_out_compute(narrow, "doc_id").rdd.getNumPartitions() == 2 * par
+    assert widen(narrow, "doc_id").rdd.getNumPartitions() == 2 * par
+    assert widen(narrow, per_core=1).rdd.getNumPartitions() == par
     wide = narrow.repartition(2 * par + 3, "doc_id")
-    assert fan_out_compute(wide, "doc_id").rdd.getNumPartitions() == 2 * par + 3
+    assert widen(wide, "doc_id").rdd.getNumPartitions() == 2 * par + 3
     # scorer guard: small grid → untouched; large grid → proportional
     emb1 = spark.createDataFrame(
         [(i, [float(i)] * 4) for i in range(10)],
@@ -3415,31 +3423,106 @@ def test_fan_out_guards_parallelism_properties(spark):
         sim._fan_out_corpus(emb1, "vec_id", 50_000).rdd.getNumPartitions()
         == expected > 1
     )
-    # scene pass: the mapInPandas input must be wider than one task
-    from cs_tutorial_reporting_spark.multimodal.mjpeg import (
-        synth_and_scene_detect,
-    )
 
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", F.encode(F.col("text"), "utf-8").alias("content")
-    )
-    out = synth_and_scene_detect(d.coalesce(1), threshold=200)
-    assert out.rdd.getNumPartitions() == 2 * par
-    # r11: the expensive-codec trio (jpeg/mjpeg/gif) now shares the
-    # fan-out (7.1→1.6 / 6.4→1.3 / 3.0→1.1 s at sf0.1, rows
-    # bit-identical across geometries); the cheap decodes
-    # (png/tiff/wav) deliberately stay single-pass — their payload
-    # shuffle costs more than the decode (re-measured r11:
-    # wav 0.26→0.73 s fanned).
-    from cs_tutorial_reporting_spark.multimodal.gif import synth_and_decode_gif
-    from cs_tutorial_reporting_spark.multimodal.jpeg import synth_and_decode_jpeg
-    from cs_tutorial_reporting_spark.multimodal.mjpeg import synth_and_decode_mjpeg
-    from cs_tutorial_reporting_spark.multimodal.png import synth_and_decode_png
 
-    for fanned in (synth_and_decode_jpeg, synth_and_decode_mjpeg,
-                   synth_and_decode_gif):
-        assert fanned(d.coalesce(1)).rdd.getNumPartitions() == 2 * par
-    assert synth_and_decode_png(d.coalesce(1)).rdd.getNumPartitions() == 1
+#: registered multimodal query → whether its decode pass fans a narrow
+#: input out: the compute-bound decodes do (measured at sf0.1: jpeg
+#: 8.0 → 1.2 s, scene detection 8.5 → 1.4 s, gif 3.0 → 1.1 s); the cheap
+#: ones do not, since their payload shuffle costs more than the decode
+MULTIMODAL_FANS_OUT = {
+    "multimodal_feature_extract": False,
+    "multimodal_wav_decode": False,
+    "multimodal_bmp_decode": False,
+    "multimodal_png_decode": False,
+    "multimodal_gif_decode": True,
+    "multimodal_jpeg_decode": True,
+    "multimodal_mjpeg_frames": True,
+    "multimodal_wav_dsp": False,
+    "multimodal_avi_frames": False,
+    "multimodal_image_dhash_dedup": False,
+    "multimodal_scene_changes": True,
+    "multimodal_container_sniff": True,
+    "multimodal_wav_vad_segments": False,
+    "multimodal_tiff_decode": False,
+}
+
+
+@pytest.fixture(scope="module")
+def empty_docs_dir(tmp_path_factory):
+    """An sf dir whose documents.parquet has the real schema and 0 rows."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("empty_docs")
+    pq.write_table(
+        pq.read_table(f"{SF_SMOKE}/documents.parquet").slice(0, 0),
+        d / "documents.parquet",
+    )
+    return str(d)
+
+
+@pytest.mark.parametrize("name", sorted(MULTIMODAL_FANS_OUT))
+def test_multimodal_decode_pass_per_query(spark, monkeypatch, empty_docs_dir, name):
+    """Every registered multimodal query runs exactly one
+    ``columns.decode_pass``. A zero-row input gives 0 rows with the
+    pass's declared schema; from a 1-partition input the pass fans out
+    to 2× the session parallelism, or stays on 1 partition, as
+    MULTIMODAL_FANS_OUT says."""
+    from cs_tutorial_reporting_spark.multimodal import columns
+    from cs_tutorial_reporting_spark.queries import QUERIES
+
+    passes = []
+    real = columns.decode_pass
+
+    def recording(df, per_row, schema, fan_out=False):
+        out = real(df, per_row, schema, fan_out)
+        passes.append((out, schema))
+        return out
+
+    monkeypatch.setattr(columns, "decode_pass", recording)
+    assert QUERIES[name].fn(spark, empty_docs_dir).count() == 0
+    ((out, schema),) = passes
+    assert out.schema == spark.createDataFrame([], schema).schema
+    assert out.count() == 0
+
+    passes.clear()
+    assert load_table(spark, SF_SMOKE, "documents").rdd.getNumPartitions() == 1
+    QUERIES[name].fn(spark, SF_SMOKE)
+    ((out, _),) = passes
+    par = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() == (2 * par if MULTIMODAL_FANS_OUT[name] else 1)
+
+
+def test_avi_and_mjpeg_container_bytes_pinned():
+    """The AVI container writer shared by the DIB and MJPEG builders
+    emits the exact bytes the two separate builders did (sha256 per
+    fixed payload, default and odd geometries: 5-pixel rows pad the
+    DIB stride)."""
+    import hashlib
+
+    from cs_tutorial_reporting_spark.multimodal.avi import avi_bytes
+    from cs_tutorial_reporting_spark.multimodal.mjpeg import mjpeg_bytes
+
+    def sha(b: bytes) -> str:
+        return hashlib.sha256(b).hexdigest()
+
+    payloads = [b"", bytes(range(256)) * 3 + b"\x07", "Grüße — multimodal ✓".encode() * 5]
+    assert [(sha(avi_bytes(p)), sha(mjpeg_bytes(p))) for p in payloads] == [
+        ("a0b84275cd2781d9f9a4e8089f0f0562550f34736e92acf41c235ce83e571c01",
+         "285afadc0ca9e5fa085c2857b2d7fde1cea07b856654adb10040a4e2722a5a61"),
+        ("3b99bbafcaca455edd36e271280f6d6fa03bec2762407db01724321bce13c86f",
+         "2d6cd2d5a57b887bdc9fb19c78418af5379d3ae7a2af37bef53cdc35ae4a28b7"),
+        ("f0815682e44146df35d56d311516a1fff6478c8293da2083f86ca2c2ecdd3498",
+         "5802de17a1be6736742eaee3ea3d4af437439618d97d70675035d760d6d9f20c"),
+    ]
+    # a black first frame: the largest frame, which sets the buffer
+    # size fields, comes later
+    p = bytes(384) + payloads[1]
+    assert sha(avi_bytes(p, width=5, height=3, fps=25)) == (
+        "a77a3b4107c26c60526304b629ff95a013b00da0d7d815df9726e37c288540de"
+    )
+    assert sha(mjpeg_bytes(p, width=24, height=16, fps=30)) == (
+        "ae0432b12a48ab56f2b08750d93fdb4312b2d9488df4f685ceb1e3b62735b8f3"
+    )
 
 
 def test_semdedup_pairs_arrow_bitwise_equals_jvm(spark):

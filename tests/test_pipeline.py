@@ -176,6 +176,7 @@ def _runs_source(spark, tmp_path, n: int = 30, extra: str = ""):
             "logical_date": f"2024-02-{i % 27 + 1:02d}T00:00:00+00:00",
             "start_date": f"2024-02-{i % 27 + 1:02d}T06:00:00.{i:06d}+00:00",
             "state": "" if i % 5 else "success",
+            "_corrupt_record": f"c{i}",  # read only by schemas that declare it
         }
         for i in range(n)
     ]))
@@ -236,8 +237,11 @@ def test_load_reads_the_frame_itself_unless_its_landing_is_intact(spark, tmp_pat
     """The load falls back to the frame's own plan when a landed file
     was rewritten or deleted, for a frame derived from a landed one, for
     a frame never landed, for a frame holding a type JSON does not
-    round-trip (a map) or a column the JSON reader keeps for malformed
-    lines, and for a landing written through a URI."""
+    round-trip (a map), and for a landing written through a URI. A
+    declared ``_corrupt_record`` column (the JSON reader's default name
+    for malformed lines) is data: that frame loads from its landing with
+    the column's values kept."""
+    from cs_tutorial_reporting_spark.sources.readers import read_json_array
     from cs_tutorial_reporting_spark.sources.sinks import landed_path, write_json_landing
 
     extra = {"map_column": ", labels map<string,string>", "corrupt_record": ", _corrupt_record string"}
@@ -254,9 +258,13 @@ def test_load_reads_the_frame_itself_unless_its_landing_is_intact(spark, tmp_pat
         os.remove(_first_part(path))
     elif case == "derived":
         incoming = incoming.filter("dag_id IS NOT NULL")
-    assert landed_path(incoming) is None
+    if case == "corrupt_record":
+        assert landed_path(incoming) == path
+        assert _rows(read_json_array(spark, path, incoming.schema)) == _rows(incoming)
+    else:
+        assert landed_path(incoming) is None
     loaded = load_report_table(incoming, None, "rpt_dag_run").loaded
-    assert "FileScan json" not in _plan(loaded)
+    assert ("FileScan json" in _plan(loaded)) == (case == "corrupt_record")
     direct = load_report_table(_runs_source(spark, tmp_path), None, "rpt_dag_run").loaded
     assert _rows(loaded) == _rows(direct)
 

@@ -42,6 +42,16 @@ def test_read_json_array_file(spark, tmp_path):
     assert "extra_field" not in df.columns
 
 
+def test_read_json_array_keeps_a_declared_corrupt_record_column(spark, tmp_path):
+    """A declared field with the JSON reader's default corrupt-record
+    name reads as data, and a malformed line reads as an all-NULL row."""
+    p = tmp_path / "lines.json"
+    p.write_text('{"a": "x", "_corrupt_record": "y"}\n{"a": \n')
+    schema = T.StructType.fromDDL("a string, _corrupt_record string")
+    got = sorted(map(tuple, read_json_array(spark, str(p), schema).collect()), key=repr)
+    assert got == [("x", "y"), (None, None)]
+
+
 def test_csv_staging_empty_string_is_null(spark, tmp_path):
     p = tmp_path / "stage.csv"
     p.write_text("dag_id,description\nd1,\nd2,hello\n")
