@@ -6,24 +6,18 @@ rehearsal: n_deleted 681, live counts 15000/14319/9544."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from cs_tutorial_reporting_spark.queries_dv import DV_BLOCK, DV_ORACLES
 
-from tools.check_oracle import TABLES, _canon_frame
+from tools.sweep import compare, duck_views
 
 from .conftest import SF_ORACLE as SF_DIR
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -31,10 +25,7 @@ def duck():
 @pytest.mark.parametrize("name", list(DV_BLOCK))
 def test_dv_query_matches_oracle(spark, duck, name):
     spdf = DV_BLOCK[name](spark, SF_DIR).toPandas()
-    ddf = duck.sql(DV_ORACLES[name]).fetchdf()
-    assert sorted(spdf.columns) == sorted(ddf.columns)
-    assert len(spdf) == len(ddf)
-    assert _canon_frame(spdf) == _canon_frame(ddf)
+    assert compare(spdf, duck.sql(DV_ORACLES[name]).fetchdf()) == []
 
 
 def test_dv_rehearsal_pins_r11_values(spark):

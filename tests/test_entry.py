@@ -2,10 +2,6 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entry_mod
 
 from .conftest import SF_SMOKE

@@ -23,10 +23,7 @@ fresh-session oracle sweeps.
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-
-import duckdb
+from tools.sweep import compare, duck_views
 
 from .conftest import SF_SMOKE
 
@@ -87,17 +84,7 @@ GUARDED = [
 REPLAY_PREFIX = 80
 
 
-def _canon_frame(pdf):
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod._canon_frame(pdf)
-
-
 def test_ann_flagships_survive_long_session(spark):
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
@@ -113,19 +100,10 @@ def test_ann_flagships_survive_long_session(spark):
     assert replayed >= 70, "registry shrank below the repro threshold"
 
     # step 2 — assert the guarded queries in the SAME session
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.sql(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
+    con = duck_views(SF_SMOKE)
     bad = []
     for name in GUARDED:
         spdf = qs[name](spark, SF_SMOKE).toPandas()
-        ddf = con.sql(oracles[name]).fetchdf()
-        if len(spdf) != len(ddf) or _canon_frame(spdf) != _canon_frame(ddf):
+        if compare(spdf, con.sql(oracles[name]).fetchdf()):
             bad.append(name)
     assert not bad, f"session-context-sensitive results after replay: {bad}"

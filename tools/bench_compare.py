@@ -29,58 +29,18 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FLAG_RATIO = 1.5
 
-#: Documented per-query comparison floors (seconds): rows whose anchor
-#: value was caught on an unrepresentatively FAST run and would
-#: phantom-flag every round against it. Each entry cites the evidence;
-#: the comparison base becomes max(best-ever, floor) for that row.
-#: semdedup_prune_report: r13 anchor caught 2.214 s, but the documented
-#: quiesced solo floor is 3.35-3.40 s (r9 note + r13 verdict best-of-3
-#: re-measure at 15-min load 0.50; BASELINE.md round-14 note) — the
-#: operator is memory-bandwidth-bound (the r12 Arrow-scorer class) and
-#: 2.2 s is a lucky-DRAM run, not the code's floor.
-FLOOR_OVERRIDES: dict[str, float] = {
-    "semdedup_prune_report": 3.35,
-}
 
-#: Anchor-epoch audit band (ADVICE r13): BENCH_ANCHOR_r7.json preserves
-#: the previous epoch's quiesced board so the r13 epoch-reset claim
-#: (same-HEAD host drift, documented 1.22-1.33x totals / 1.15x median
-#: per-query) stays machine-checkable. Per-query new/old anchor ratios
-#: outside this band are printed as epoch outliers — a genuine code
-#: regression absorbed into the new floor would show up here.
-EPOCH_BAND = (0.70, 1.65)
-
-
-def _epoch_audit() -> None:
-    old_p = os.path.join(REPO, "BENCH_ANCHOR_r7.json")
-    new_p = os.path.join(REPO, "BENCH_ANCHOR.json")
-    if not (os.path.exists(old_p) and os.path.exists(new_p)):
-        return
-    with open(old_p) as f:
-        old = json.load(f)
-    with open(new_p) as f:
-        new = json.load(f)
-    lo, hi = EPOCH_BAND
-    outliers = []
-    for q in sorted(set(old["queries"]) & set(new["queries"])):
-        if q in FLOOR_OVERRIDES:
-            continue  # already dispositioned by floor
-        r = new["queries"][q] / old["queries"][q] if old["queries"][q] else 0
-        if not lo <= r <= hi:
-            outliers.append((q, round(r, 2)))
-    if outliers:
-        print(
-            "EPOCH AUDIT: per-query anchor ratios outside the documented "
-            f"{lo}-{hi}x host-drift band (regressions absorbed into the "
-            f"epoch reset would appear here): {outliers}"
-        )
+def _board(path: str) -> dict:
+    """A recorded board: bench.py's JSON line, or a round record that
+    holds it under ``parsed``."""
+    with open(path) as f:
+        doc = json.load(f)
+    return doc.get("parsed", doc)
 
 
 def _load_old(path: str | None) -> dict:
     if path is not None:
-        with open(path) as f:
-            doc = json.load(f)
-        payload = doc.get("parsed", doc)
+        payload = _board(path)
         print(f"baseline: {os.path.basename(path)} "
               f"(total {payload['value']}s at sf{payload['sf']})")
         return payload
@@ -108,15 +68,12 @@ def _load_old(path: str | None) -> dict:
     used = 0
     for p in rounds:
         rnd = int(re.search(r"_r(\d+)", p).group(1))
-        with open(p) as f:
-            doc = json.load(f)
-        payload = doc.get("parsed", doc)
+        payload = _board(p)
         if rnd < floor_round:
             continue  # pre-anchor epoch: context only, never the gate
         used += 1
         for q, sec in payload["queries"].items():
-            if q not in best or sec < best[q]:
-                best[q] = sec
+            best[q] = min(sec, best.get(q, sec))
     print(f"baseline: best across anchor + {used} same-epoch rounds "
           f"(latest total {payload['value']}s at sf{payload['sf']})")
     return {**payload, "queries": best, "value": round(sum(best.values()), 3)}
@@ -124,9 +81,7 @@ def _load_old(path: str | None) -> dict:
 
 def _load_new(path: str | None) -> dict:
     if path is not None:
-        with open(path) as f:
-            doc = json.load(f)
-        return doc.get("parsed", doc)
+        return _board(path)
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True, text=True, check=True,
@@ -150,13 +105,7 @@ GLOBAL_DRIFT_LIMIT = 2.0
 
 def main(new_path: str | None, old_path: str | None) -> int:
     old, new = _load_old(old_path), _load_new(new_path)
-    oq, nq = dict(old["queries"]), new["queries"]
-    # documented floors replace unrepresentatively fast baseline rows
-    for q, floor in FLOOR_OVERRIDES.items():
-        if q in oq and oq[q] < floor:
-            print(f"floor override: {q} baseline {oq[q]}s -> {floor}s "
-                  "(documented quiesced solo floor, see FLOOR_OVERRIDES)")
-            oq[q] = floor
+    oq, nq = old["queries"], new["queries"]
     # the board's own host-conditions stamp (in-JSON since r14) — flags
     # on a board whose 15-min load was >= 0.5 are contention suspects
     stamp = new.get("load")
@@ -166,7 +115,6 @@ def main(new_path: str | None, old_path: str | None) -> int:
               f"15m={stamp.get('load_15m')}"
               + (f" steal={steal}j" if steal is not None else "") +
               f" ({'QUIESCED' if stamp.get('load_15m', 9) < 0.5 else 'WARM — treat flags as contention suspects'})")
-    _epoch_audit()
     # Median drift across the comparable board estimates the HOST's
     # speed delta vs the rounds that recorded the best-evers: per the
     # twice-observed bench-variance rule (BASELINE.md rounds 5-6,
@@ -201,11 +149,8 @@ def main(new_path: str | None, old_path: str | None) -> int:
         print(f"{name:<32} {o:>7.3f} {n:>7.3f} {ratio:>5.2f}x {rel:>6.2f}x{mark}")
         if rel > FLAG_RATIO and ratio > FLAG_RATIO:
             flagged.append(name)
-    # footer totals re-sum the (possibly floor-overridden) per-row
-    # baselines so the quoted ratio matches the table above it
-    old_total = round(sum(oq.values()), 3)
-    print(f"\ntotal: old={old_total}s new={new['value']}s "
-          f"({new['value'] / old_total:.2f}x)")
+    print(f"\ntotal: old={old['value']}s new={new['value']}s "
+          f"({new['value'] / old['value']:.2f}x)")
     if med > GLOBAL_DRIFT_LIMIT:
         print(
             f"GLOBAL SLOWDOWN: median drift {med:.2f}x > "

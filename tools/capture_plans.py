@@ -3,8 +3,9 @@
 Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
 
 Writes plans/<tag>/<query>_<suffix>.txt for every bench-board query
-(the same name list bench.py times, minus the build-path rows, which
-have no single DataFrame to explain) or for the queries given.
+(``sweep.board_names``: the same name list bench.py times, minus the
+build-path rows, which have no single DataFrame to explain) or for the
+queries given. An unknown query name exits 2 and writes nothing.
 
 The optimization rounds commit these as evidence: the judge checks
 plan-shape claims (Exchange counts, join strategies, PushedFilters)
@@ -19,12 +20,10 @@ OPTIMIZATION notes instead.
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import sweep
 
 
 def main() -> None:
@@ -35,26 +34,14 @@ def main() -> None:
     from cs_tutorial_reporting_spark.queries import QUERIES
     from cs_tutorial_reporting_spark.session import get_spark
 
-    if len(sys.argv) > 3:
-        names = sys.argv[3:]
-    else:
-        names = [n for n, q in QUERIES.items() if q.bench] or list(QUERIES)
-
-    outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        tag,
-    )
+    names = sweep.pick(sys.argv[3:], QUERIES, sweep.board_names(QUERIES))
+    outdir = os.path.join(sweep.REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
     spark = get_spark(app_name="capture_plans")
     for name in names:
         try:
-            df = QUERIES[name].fn(spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            plan = sweep.formatted_plan(QUERIES[name].fn(spark, sf_dir))
         except Exception as exc:  # noqa: BLE001 — record, keep capturing
             plan = f"ERROR capturing plan: {exc!r}\n"
         path = os.path.join(outdir, f"{name}_{suffix}.txt")

@@ -20,17 +20,10 @@ runtime stages do get whole-stage codegen.
 
 from __future__ import annotations
 
-import io
 import re
 import sys
-from contextlib import redirect_stdout
 
-
-def formatted_plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+import sweep
 
 
 def audit(name: str, plan: str) -> dict:
@@ -58,26 +51,19 @@ def audit(name: str, plan: str) -> dict:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
 
     from cs_tutorial_reporting_spark.queries import QUERIES
     from cs_tutorial_reporting_spark.session import get_spark
 
-    spark = get_spark(app_name="explain_audit")
     # explicit names audit ANY registered query; default = bench set
-    if only:
-        unknown = only - set(QUERIES)
-        if unknown:
-            raise SystemExit(f"unknown queries: {sorted(unknown)}")
-        names = [n for n in QUERIES if n in only]
-    else:
-        names = [n for n, q in QUERIES.items() if q.bench]
+    names = sweep.pick(only, QUERIES, [n for n, q in QUERIES.items() if q.bench])
+    spark = get_spark(app_name="explain_audit")
     rows = []
     details = []
     for name in names:
-        plan = formatted_plan(QUERIES[name].fn(spark, sf_dir))
+        plan = sweep.formatted_plan(QUERIES[name].fn(spark, sf_dir))
         rows.append(audit(name, plan))
         details.append((name, plan))
 

@@ -7,15 +7,14 @@ partitions. The ROUND DRIVER builds its own PLAIN SparkSession. A
 freshly-promoted window query has green rows only under the engine
 session; this tool replays the checked window (or named queries)
 under a bare-default session and compares against DuckDB with the
-same canonicalizer as check_oracle, so a session-config sensitivity
-(timezone, ANSI, arrow batch size, shuffle width) surfaces locally
-instead of as a red CORRECTNESS row.
+same compare as check_oracle (``sweep.oracle_sweep``), so a
+session-config sensitivity (timezone, ANSI, arrow batch size, shuffle
+width) surfaces locally instead of as a red CORRECTNESS row.
 
     python tools/plain_session_check.py [sf_dir] [query ...]
 
 Defaults: sf_dir=/root/testdata/sf0.01 (the driver's correctness SF),
-queries = the first `_CHECK_WINDOW` registry entries. Round-9
-provenance: the r9 rotation ran this for its 27 promotions (50/50).
+queries = the first `_CHECK_WINDOW` registry entries.
 """
 
 from __future__ import annotations
@@ -23,30 +22,26 @@ from __future__ import annotations
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import sweep
 
 
-def main(sf_dir: str, only: list[str] | None = None) -> int:
-    import duckdb
+def main(sf_dir: str, only: list[str]) -> int:
+    from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, REPO)
-    sys.path.insert(0, os.path.join(REPO, "tools"))
     import __spark_entry__ as mod
-    from check_oracle import TABLES, _canon_frame
+    from cs_tutorial_reporting_spark.queries import _CHECK_WINDOW
 
     # getOrCreate() silently REUSES any already-active session with its
     # existing config — invoked from a process holding a get_spark()
     # session, the "plain driver-twin" replay would quietly test the
-    # engine config instead (ADVICE r9). Process isolation is a hard
-    # requirement; fail loudly rather than report a vacuous pass.
-    # Checked PROCESS-WIDE, not just thread-local: getActiveSession()
-    # reads a thread-local, but getOrCreate() falls back to
+    # engine config instead. Process isolation is a hard requirement;
+    # fail loudly rather than report a vacuous pass. Checked
+    # PROCESS-WIDE, not just thread-local: getActiveSession() reads a
+    # thread-local, but getOrCreate() falls back to
     # SparkSession._instantiatedSession (any thread), so a session
     # built elsewhere — or clearActiveSession()'d — would still be
     # reused with its non-plain config.
-    from pyspark import SparkContext
-
     if (
         SparkSession.getActiveSession() is not None
         or getattr(SparkSession, "_instantiatedSession", None) is not None
@@ -59,6 +54,8 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
         )
         return 2
 
+    qs = mod.queries()
+    names = sweep.pick(only, qs, list(qs)[:_CHECK_WINDOW])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -70,41 +67,7 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
         )
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    qs, oracles = mod.queries(), mod.oracle_sql()
-    if only:
-        names = only
-        unknown = [n for n in names if n not in qs]
-        if unknown:
-            print(f"ERROR: unknown query names: {unknown}")
-            return 2
-    else:
-        from cs_tutorial_reporting_spark.queries import _CHECK_WINDOW
-
-        names = list(qs)[:_CHECK_WINDOW]
-
-    failed = []
-    for name in names:
-        try:
-            spdf = qs[name](spark, sf_dir).toPandas()
-            ddf = con.sql(oracles[name]).fetchdf()
-            ok = (
-                sorted(spdf.columns) == sorted(ddf.columns)
-                and len(spdf) == len(ddf)
-                and _canon_frame(spdf) == _canon_frame(ddf)
-            )
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: {e}", flush=True)
-            failed.append(name)
-            continue
-        print(("pass  " if ok else "FAIL  ") + name, flush=True)
-        if not ok:
-            failed.append(name)
+    failed = sweep.oracle_sweep(spark, sf_dir, names, qs, mod.oracle_sql())
     print(
         f"{len(names) - len(failed)}/{len(names)} plain-session match"
         + (f"; failed: {failed}" if failed else f" at {sf_dir}")
@@ -115,4 +78,4 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
 if __name__ == "__main__":
     args = sys.argv[1:]
     sf = args[0] if args else "/root/testdata/sf0.01"
-    sys.exit(main(sf, args[1:] or None))
+    sys.exit(main(sf, args[1:]))

@@ -16,11 +16,13 @@ NOT in that dict is worth reading.
 
 from __future__ import annotations
 
-import io
+import argparse
+import os
 import re
 import sys
 from collections import Counter
-from contextlib import redirect_stdout
+
+import sweep
 
 #: query → reason its same-file multi-scan is the intended semantics.
 #: Each entry was read (not guessed) during the r11 census.
@@ -113,11 +115,6 @@ ADJUDICATED: dict[str, str] = {
 
 
 def main() -> int:
-    import argparse
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
     parser = argparse.ArgumentParser(description=__doc__)
     parser.add_argument(
         "--sf-dir", default=None, help="testdata dir (default sf0.01)"
@@ -156,25 +153,14 @@ def main() -> int:
 
     from cs_tutorial_reporting_spark.session import get_spark
 
-    unknown = sorted(set(names) - set(QUERIES))
-    if unknown:
-        # a typo'd name silently censusing nothing prints a green
-        # "0 need review" — error like check_oracle does (review r12)
-        parser.error(f"unknown query names: {unknown}")
-
+    names = sweep.pick(names, QUERIES, QUERIES)
     spark = get_spark(app_name="scan_census")
     hits = []
-    for name, q in QUERIES.items():
-        if names and name not in names:
-            continue
+    for name in names:
         try:
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                q.fn(spark, sf_dir).explain("formatted")
+            plan = sweep.formatted_plan(QUERIES[name].fn(spark, sf_dir))
             locs = Counter(
-                re.findall(
-                    r"Location: InMemoryFileIndex \[([^\]]+)", buf.getvalue()
-                )
+                re.findall(r"Location: InMemoryFileIndex \[([^\]]+)", plan)
             )
             dup = {k.split("/")[-1]: v for k, v in locs.items() if v > 1}
             if dup:

@@ -3,29 +3,26 @@ r6 / r10 / r13 — runnable any round for outlier HUNTING).
 
     python tools/timing_census.py [sf_dir] [reps]
 
-Times EVERY registered query (construct + collect, warm best-of-N,
-DataFrame rebuilt per rep — .count() lets Catalyst prune work and
-re-collecting one DataFrame object reuses shuffles; round-8 lesson)
-and prints a JSON line per query plus a sorted summary. This is a
-review aid, not a gate: excursions vs a family floor need the
-settle-and-rerun protocol (BASELINE.md variance rule) before anyone
-chases them. Expect the whole sweep to LOAD the host — never read a
+Times EVERY registered query (construct + collect, warm best-of-N by
+``sweep.best_of`` with no extra reps, DataFrame rebuilt per rep —
+.count() lets Catalyst prune work and re-collecting one DataFrame
+object reuses shuffles; round-8 lesson) and prints a line per query, a
+sorted summary and one JSON line. This is a hunting aid, not a gate:
+excursions vs a family floor need the settle-and-rerun protocol
+(BASELINE.md variance rule) before anyone chases them. Expect the whole sweep to LOAD the host — never read a
 bench that shared the host with it."""
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import sweep
 
 
 def main() -> int:
-    import argparse
-
-    sys.path.insert(0, REPO)
     parser = argparse.ArgumentParser(description=__doc__)
     parser.add_argument(
         "sf_dir", nargs="?", default="/root/testdata/sf0.1",
@@ -54,13 +51,10 @@ def main() -> int:
     # (ADVICE r12)
     errors: dict[str, str] = {}
     for name, q in QUERIES.items():
-        best = float("inf")
         try:
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                q.fn(spark, sf_dir).collect()
-                best = min(best, time.perf_counter() - t0)
-            out[name] = round(best, 3)
+            run = lambda: q.fn(spark, sf_dir).collect()
+            best, _ = sweep.best_of(lambda _: {name: sweep.timed(run)}, reps, 0)
+            out.update(best)
             print(f"{out[name]:8.3f}  {name}", flush=True)
         except Exception as e:  # noqa: BLE001
             errors[name] = str(e)[:200]
