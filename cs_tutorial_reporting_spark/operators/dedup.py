@@ -530,7 +530,7 @@ def bucket_corpus(
     hyperplane bucket id. Like an ANN index, this is computed once per
     corpus at ingest and queried many times — callers that probe
     repeatedly should persist the result (one bounded artifact per
-    dataset; see queries_ext._NEARDUP_INDEX) or write it partitioned by
+    dataset; see queries_ext._built_once) or write it partitioned by
     ``__bkt`` like similarity.write_ivf_partitioned. Fans small
     single-file inputs out so the projection parallelizes.
 

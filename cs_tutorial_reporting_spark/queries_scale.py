@@ -36,6 +36,7 @@ def _minhash_sig_fragment() -> str:
 def _band_keys_fragment() -> str:
     return _band_keys_sql(8, 2)
 
+from .operators.graph import hits_ppm_sql, lpa_communities_sql, pagerank_ppm_sql
 from .operators.sketches import (
     BLOOM_K,
     bloom_build_words,
@@ -641,9 +642,27 @@ _TRANSITION_EDGES_SQL = """
 """
 
 
+def _transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, w): first-order event-type transitions per user and
+    their counts — the Spark twin of _TRANSITION_EDGES_SQL."""
+    from pyspark.sql import Window
+
+    ev = t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        ev.select(
+            F.col("event_type").alias("src"),
+            F.lead("event_type").over(w).alias("dst"),
+        )
+        .filter(F.col("dst").isNotNull())
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("w"))
+    )
+
+
 @register(
     "pagerank_event_graph",
-    oracle=None,  # assigned right below from the single-sourced generator
+    oracle=pagerank_ppm_sql(_TRANSITION_EDGES_SQL, "src", "dst", "w", iters=5),
 )
 def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (5 iterations, ppm fixed point) over the first-order
@@ -656,34 +675,9 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, both keyed on node ids, never on raw events. See
     operators/graph.py for the checkpoint-per-k-iterations note.
     """
-    from pyspark.sql import Window
-
     from .operators.graph import pagerank_ppm
 
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        ev.select(
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-    )
-    return pagerank_ppm(edges, "src", "dst", "w", iters=5)
-
-
-def _install_pagerank_oracle() -> None:
-    from .operators.graph import pagerank_ppm_sql
-    from .queries import QUERIES
-
-    QUERIES["pagerank_event_graph"].oracle = pagerank_ppm_sql(
-        _TRANSITION_EDGES_SQL, "src", "dst", "w", iters=5
-    )
-
-
-_install_pagerank_oracle()
+    return pagerank_ppm(_transition_edges(spark, sf_dir), "src", "dst", "w", iters=5)
 
 
 # ---------------------------------------------------------------------------
@@ -2395,7 +2389,10 @@ def period_over_period_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("hits_event_graph", oracle=None)  # installed below (generator)
+@register(
+    "hits_event_graph",
+    oracle=hits_ppm_sql(_TRANSITION_EDGES_SQL, "src", "dst", "w", iters=4),
+)
 def hits_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hub/authority scores (4 iterations, ppm fixed point) over
     the event-transition graph — which event types FEED high-traffic
@@ -2403,34 +2400,9 @@ def hits_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative algorithm sharing PageRank's join+agg dataflow and its
     unrolled-CTE oracle generator (operators/graph.py).
     """
-    from pyspark.sql import Window
-
     from .operators.graph import hits_ppm
 
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        ev.select(
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-    )
-    return hits_ppm(edges, "src", "dst", "w", iters=4)
-
-
-def _install_hits_oracle() -> None:
-    from .operators.graph import hits_ppm_sql
-    from .queries import QUERIES
-
-    QUERIES["hits_event_graph"].oracle = hits_ppm_sql(
-        _TRANSITION_EDGES_SQL, "src", "dst", "w", iters=4
-    )
-
-
-_install_hits_oracle()
+    return hits_ppm(_transition_edges(spark, sf_dir), "src", "dst", "w", iters=4)
 
 
 # ---------------------------------------------------------------------------
@@ -4332,32 +4304,24 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _copurchase_pair_counts(li).filter(F.col("c") >= 2).drop("c")
 
 
-@register("lpa_communities_copurchase", oracle=None)
+@register(
+    "lpa_communities_copurchase",
+    oracle=lpa_communities_sql(_COPURCHASE_EDGES_SQL, "pa", "pb", rounds=3),
+)
 def lpa_communities_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synchronous label-propagation communities over the
     co-purchase graph (operators/graph.py::lpa_communities, 3 rounds,
     min-tie): frequency-weighted neighborhoods — the community lens CC
     cannot give (one stray edge merges CC components but not LPA
-    communities). Oracle installed below from the single-sourced
-    unrolled-CTE generator (the PageRank pattern: one Python function
-    emits both engines' recipes)."""
+    communities). The oracle comes from the single-sourced unrolled-CTE
+    generator (the PageRank pattern: one Python function emits both
+    engines' recipes)."""
     from .operators.graph import lpa_communities
 
     return lpa_communities(
         _copurchase_edges(spark, sf_dir), "pa", "pb", rounds=3
     )
 
-
-def _install_lpa_oracle() -> None:
-    from .operators.graph import lpa_communities_sql
-    from .queries import QUERIES
-
-    QUERIES["lpa_communities_copurchase"].oracle = lpa_communities_sql(
-        _COPURCHASE_EDGES_SQL, "pa", "pb", rounds=3
-    )
-
-
-_install_lpa_oracle()
 
 
 @register(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import __spark_entry__ as entry_mod
 
 from .conftest import SF_SMOKE
@@ -34,3 +36,15 @@ def test_every_query_carries_a_value_hash_oracle():
     q, o = entry_mod.queries(), entry_mod.oracle_sql()
     missing = sorted(set(q) - set(o))
     assert not missing, f"queries without oracles: {missing}"
+
+
+def test_registry_order_is_pinned():
+    """The driver checks queries() in registration order and only the
+    first 50 entries, so the order itself is part of the contract: a
+    moved, renamed, added or dropped registration changes the digest."""
+    from cs_tutorial_reporting_spark.queries import QUERIES
+
+    assert len(QUERIES) == 232
+    assert hashlib.sha256("\n".join(QUERIES).encode()).hexdigest() == (
+        "260e8abba8dec5195585ce93c50aa903b8f8565c3ed71248ee5a4485e817aef3"
+    )

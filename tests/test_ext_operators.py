@@ -3768,7 +3768,7 @@ def test_dbscan_census_identical_on_lsh_candidates(spark):
     exact_pairs = embedding_near_dup_pairs(
         e, threshold=0.8, n_planes=0, dim=64
     )
-    # materialized index, like the registered LSH query's _NEARDUP_INDEX
+    # materialized index, like the registered LSH query's neardup_index
     # (the self-join of a lazily-derived pandas-UDF bucket frame trips
     # Catalyst attribute binding — persisting the index is the
     # documented probe pattern anyway)
@@ -3867,3 +3867,78 @@ def test_streaming_neardup_ingest_indexed_matches_recompute(spark, tmp_path):
         ).collect()
     }
     assert got_pruned == got_rec
+
+
+def test_ann_artifact_cache_is_one_entry_per_kind_and_dataset(monkeypatch, tmp_path):
+    """queries_ext._built_once: a hit needs the same session, another
+    session rebuilds and releases the old artifact (a frame is
+    unpersisted, a layout directory deleted), and entries never pile
+    up per session. Sentinel sessions and fake artifacts — no Spark."""
+    import os
+    import tempfile
+
+    from pyspark.sql import DataFrame
+
+    import cs_tutorial_reporting_spark.queries  # noqa: F401  (registry init first)
+    from cs_tutorial_reporting_spark import queries_ext as qx
+
+    class Frame(DataFrame):
+        def __new__(cls):
+            return object.__new__(cls)
+
+        def __init__(self):
+            self.unpersisted = False
+
+        def unpersist(self, blocking=False):
+            self.unpersisted = True
+            return self
+
+    monkeypatch.setattr(qx, "_ARTIFACTS", {})
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    s1, s2, s3 = object(), object(), object()
+    builds = []
+
+    def build():
+        builds.append(Frame())
+        return builds[-1]
+
+    f1 = qx._built_once("index", s1, "ds", build)
+    assert qx._built_once("index", s1, "ds", build) is f1 and len(builds) == 1
+    f2 = qx._built_once("index", s2, "ds", build)
+    assert f2 is not f1 and len(builds) == 2
+    assert f1.unpersisted and not f2.unpersisted
+    # another dataset or kind is its own entry, and releases nothing
+    qx._built_once("index", s2, "other", build)
+    qx._built_once("codebook", s2, "ds", lambda: [[0.0]])
+    assert not f2.unpersisted
+
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        open(os.path.join(path, "part.parquet"), "w").close()
+
+    p1 = qx._layout("ivf_layout", s1, "ds", write)
+    assert qx._layout("ivf_layout", s1, "ds", write) == p1 and writes == [p1]
+    p2 = qx._layout("ivf_layout", s2, "ds", write)
+    assert p2 != p1 and writes == [p1, p2]
+    assert not os.path.exists(p1) and os.path.exists(os.path.join(p2, "part.parquet"))
+
+    for s in (s3, object(), object(), s1):
+        qx._built_once("index", s, "ds", build)
+        qx._layout("ivf_layout", s, "ds", write)
+    assert sorted(qx._ARTIFACTS) == [
+        ("codebook", "ds"), ("index", "ds"), ("index", "other"), ("ivf_layout", "ds"),
+    ]
+    kept = (qx._ARTIFACTS[("index", "ds")][1], qx._ARTIFACTS[("index", "other")][1])
+    assert [f.unpersisted for f in builds] == [f not in kept for f in builds]
+    live = qx._ARTIFACTS[("ivf_layout", "ds")][1]
+    assert os.listdir(tmp_path) == [os.path.basename(live)]
+
+    # a frame of a stopped session cannot unpersist: still replaced
+    class StoppedFrame(Frame):
+        def unpersist(self, blocking=False):
+            raise RuntimeError("Cannot call methods on a stopped SparkContext")
+
+    qx._built_once("stopped", s1, "ds", StoppedFrame)
+    assert qx._built_once("stopped", s2, "ds", build) is builds[-1]

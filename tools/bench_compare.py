@@ -4,8 +4,10 @@
 
 ``new`` defaults to running ``bench.py`` fresh; ``old`` defaults to the
 per-query BEST across every ``BENCH_r*.json`` in the repo root (latest
-round's total is still shown for context). Comparing against best-ever
-— not just the previous round — stops slow drift from compounding:
+round's total is still shown for context). Only boards at the new
+board's scale factor count: a baseline at another ``sf`` exits 2, and
+so does a default baseline with no board left at it. Comparing against
+best-ever — not just the previous round — stops slow drift from compounding:
 three rounds of +30% each stay under a 1.5× per-round gate but trip a
 best-ever gate at round two. Flags any query >1.5× slower BOTH in raw
 ratio AND relative to the board's median drift (exit 1) so a perf
@@ -25,6 +27,7 @@ import os
 import re
 import subprocess
 import sys
+from typing import NoReturn
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FLAG_RATIO = 1.5
@@ -38,15 +41,25 @@ def _board(path: str) -> dict:
     return doc.get("parsed", doc)
 
 
-def _load_old(path: str | None) -> dict:
+def _refuse(msg: str) -> NoReturn:
+    print(f"bench_compare: {msg}", file=sys.stderr)
+    raise SystemExit(2)
+
+
+def _load_old(path: str | None, sf) -> dict:
+    """The baseline board at scale factor ``sf`` (the new board's)."""
     if path is not None:
         payload = _board(path)
+        if payload.get("sf") != sf:
+            _refuse(
+                f"baseline {os.path.basename(path)} is at sf{payload.get('sf')}, "
+                f"the new board at sf{sf}: times at different scale factors "
+                "do not compare"
+            )
         print(f"baseline: {os.path.basename(path)} "
               f"(total {payload['value']}s at sf{payload['sf']})")
         return payload
     rounds = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")))
-    if not rounds:
-        raise SystemExit("no BENCH_r*.json baseline found")
     # Same-epoch baseline anchor (round 7, BASELINE.md escalation path):
     # best-evers recorded in a FASTER HOST EPOCH make every later round
     # flag spuriously (three r6 rows moved 1.43-1.60x with untouched
@@ -55,28 +68,32 @@ def _load_old(path: str | None) -> dict:
     # comparison base is the per-query best over {anchor} union {rounds
     # >= anchor round} — older epochs' numbers stop being the gate.
     best: dict[str, float] = {}
-    floor_round = 0
+    floor_round, from_anchor = 0, ""
     anchor_path = os.path.join(REPO, "BENCH_ANCHOR.json")
     if os.path.exists(anchor_path):
         with open(anchor_path) as f:
             anchor = json.load(f)
         floor_round = int(anchor.get("round", 0))
-        best.update(anchor["queries"])
-        print(f"baseline anchor: BENCH_ANCHOR.json (epoch r{floor_round}, "
-              f"quiesced total {anchor.get('value')}s)")
+        if anchor.get("sf") == sf:
+            best.update(anchor["queries"])
+            from_anchor = "anchor + "
+            print(f"baseline anchor: BENCH_ANCHOR.json (epoch r{floor_round}, "
+                  f"quiesced total {anchor.get('value')}s)")
     payload = None
     used = 0
     for p in rounds:
         rnd = int(re.search(r"_r(\d+)", p).group(1))
-        payload = _board(p)
-        if rnd < floor_round:
-            continue  # pre-anchor epoch: context only, never the gate
-        used += 1
+        board = _board(p)
+        if rnd < floor_round or board.get("sf") != sf:
+            continue  # pre-anchor epoch or another sf: never the gate
+        payload, used = board, used + 1
         for q, sec in payload["queries"].items():
             best[q] = min(sec, best.get(q, sec))
-    print(f"baseline: best across anchor + {used} same-epoch rounds "
-          f"(latest total {payload['value']}s at sf{payload['sf']})")
-    return {**payload, "queries": best, "value": round(sum(best.values()), 3)}
+    if not best:
+        _refuse(f"no BENCH_ANCHOR.json or BENCH_r*.json board at sf{sf}")
+    print(f"baseline: best across {from_anchor}{used} same-epoch rounds at sf{sf}"
+          + (f" (latest total {payload['value']}s)" if payload else ""))
+    return {"queries": best, "value": round(sum(best.values()), 3)}
 
 
 def _load_new(path: str | None) -> dict:
@@ -104,7 +121,8 @@ GLOBAL_DRIFT_LIMIT = 2.0
 
 
 def main(new_path: str | None, old_path: str | None) -> int:
-    old, new = _load_old(old_path), _load_new(new_path)
+    new = _load_new(new_path)
+    old = _load_old(old_path, new.get("sf"))
     oq, nq = old["queries"], new["queries"]
     # the board's own host-conditions stamp (in-JSON since r14) — flags
     # on a board whose 15-min load was >= 0.5 are contention suspects
