@@ -584,14 +584,25 @@ def _release(artifact: object) -> None:
             pass
 
 
-def _layout(kind: str, spark: SparkSession, sf_dir: str, write) -> str:
-    """Path of a corpus layout written once per dataset by ``write(path)``
-    into a fresh temp directory — every probe is then partition pruning
-    over it."""
+def _process_temp_dir(prefix: str) -> str:
+    """A fresh temp directory deleted when the interpreter exits: a
+    returned frame may read it lazily, so it cannot go sooner."""
+    import atexit
+    import shutil
     import tempfile
 
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def _layout(kind: str, spark: SparkSession, sf_dir: str, write) -> str:
+    """Path of a corpus layout written once per dataset by ``write(path)``
+    into a fresh temp directory (deleted when another session replaces
+    it, else at exit) — every probe is then partition pruning over it."""
+
     def build() -> str:
-        path = tempfile.mkdtemp(prefix=f"{kind}_")
+        path = _process_temp_dir(f"{kind}_")
         write(path)
         return path
 
@@ -3668,12 +3679,11 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/incremental.py::run_neardup_ingest_stream.
     """
     import os
-    import tempfile
 
     from .streaming.incremental import run_neardup_ingest_stream
 
     d = t(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="neardup_ingest_")
+    root = _process_temp_dir("neardup_ingest_")
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
     new = d.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text")

@@ -23,17 +23,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sinks import TARGET_FILE_BYTES, WAREHOUSE_CODEC, file_count
+
 
 def compact(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> int:
     """Rewrite a FLAT parquet directory to ~``target_file_bytes`` files.
 
     Returns the new file count. Uses total on-disk size to choose the
-    count (cheap driver-side listing), then one shuffle-free coalesce
-    when shrinking.
+    count (cheap driver-side listing) by ``sinks.file_count``, the rule
+    warehouse appends follow, then one shuffle-free coalesce when
+    shrinking; pages are ``sinks.WAREHOUSE_CODEC``, as appends write them.
 
     Crash-safety: the new files are written to a temp sibling, the
     original directory is renamed ASIDE (not deleted), the temp is
@@ -47,7 +50,7 @@ def compact(
     discarded, a stale aside copy is restored or cleaned depending on
     whether the swap completed.
 
-    Partitioned layouts (``write_partitioned`` output) are rejected:
+    Partitioned layouts (``partitionBy`` output) are rejected:
     a flat rewrite would silently destroy the partition directories —
     use :func:`compact_partitioned`.
     """
@@ -80,11 +83,11 @@ def compact(
         )
     files = glob.glob(os.path.join(path, "*.parquet"))
     total = sum(os.path.getsize(f) for f in files)
-    n = max(1, round(total / target_file_bytes))
+    n = file_count(total, target_file_bytes)
     df = spark.read.parquet(path)
     (df.coalesce(n) if n < len(files) else df.repartition(n)).write.mode(
         "overwrite"
-    ).parquet(tmp)
+    ).option("compression", WAREHOUSE_CODEC).parquet(tmp)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
@@ -94,7 +97,7 @@ def compact(
 def compact_partitioned(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> dict[str, int]:
     """Compact every LEAF partition of a ``partitionBy`` layout — each
     leaf is rewritten independently with :func:`compact`'s rename-aside

@@ -269,16 +269,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver star-schema table from ``{sf_dir}/{name}.parquet``
     through ``read_parquet_table`` (footer schema, no inference job; ns
     timestamps such as events.ts floored to µs), cast to the catalog
-    schema in ``STAR_TABLES``.
+    schema in ``STAR_TABLES``: one SQL-string projection casts the
+    columns whose type differs (TIMESTAMP_NTZ dates and times), and a
+    table whose types all match gets no projection.
     """
+    from ..operators.project import quote, sql_type  # operators import this module
+
     df = read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
     want = STAR_TABLES.get(name)
-    if want is not None and [f.name for f in want.fields] == df.columns:
-        # Cast only where physical type differs (int32 vs int64 etc.).
-        df = df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in want.fields]
-        )
-    return df
+    if want is None or [f.name for f in want.fields] != df.columns:
+        return df
+    differ = {f.name for f, g in zip(want.fields, df.schema.fields) if f.dataType != g.dataType}
+    if not differ:
+        return df
+    # one SQL-string projection, casting only the columns whose type differs
+    return df.selectExpr(*[
+        f"CAST({quote(f.name)} AS {sql_type(f.dataType)}) AS {quote(f.name)}"
+        if f.name in differ else quote(f.name)
+        for f in want.fields
+    ])
 
 
 def read_json_array(

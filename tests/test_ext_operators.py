@@ -3869,6 +3869,39 @@ def test_streaming_neardup_ingest_indexed_matches_recompute(spark, tmp_path):
     assert got_pruned == got_rec
 
 
+def test_query_temp_dirs_are_deleted_at_exit(tmp_path):
+    """The temp directories queries write for lazily read frames (the
+    IVF layout, the streaming ingest's stage and sink) are gone once the
+    process that ran the queries exits."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    code = (
+        "import json, os\n"
+        "from cs_tutorial_reporting_spark.session import get_spark\n"
+        "from cs_tutorial_reporting_spark.queries import QUERIES\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=2)\n"
+        "for q in ('similarity_topk_ivf_pruned', 'streaming_neardup_ingest'):\n"
+        f"    QUERIES[q].fn(spark, {SF_SMOKE!r}).collect()\n"
+        "print(json.dumps(sorted(os.listdir(os.environ['TMPDIR']))))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd=repo,
+        env={**os.environ, "TMPDIR": str(temp)},
+    )
+    assert out.returncode == 0, out.stderr
+    made = json.loads(out.stdout.strip().splitlines()[-1])
+    for prefix in ("ivf_layout_", "neardup_ingest_"):
+        assert any(d.startswith(prefix) for d in made), made
+    left = [d for d in os.listdir(temp) if d.startswith(("ivf_layout_", "neardup_ingest_"))]
+    assert left == []
+
+
 def test_ann_artifact_cache_is_one_entry_per_kind_and_dataset(monkeypatch, tmp_path):
     """queries_ext._built_once: a hit needs the same session, another
     session rebuilds and releases the old artifact (a frame is

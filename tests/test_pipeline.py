@@ -107,14 +107,20 @@ def test_incremental_parquet_load_runs_only_data_jobs(spark, tmp_path, jobs_star
     """One incremental load into a parquet target: reading the target and
     its watermark start no Spark job (footer schema and statistics), and
     the load plus its append start at most two (the one dedup shuffle's
-    map stage, then the write)."""
+    map stage, then the write). Each append writes one file (sized by
+    its input bytes) with zstd pages, also where the load has no shuffle
+    and reads a landing of several files."""
+    import pyarrow.parquet as pq
+
     from cs_tutorial_reporting_spark.operators.incremental import watermark
     from cs_tutorial_reporting_spark.sources.readers import read_parquet_table
-    from cs_tutorial_reporting_spark.sources.sinks import write_table_append
+    from cs_tutorial_reporting_spark.sources.sinks import write_json_landing, write_table_append
 
     target = str(tmp_path / "rpt_dag_run")
     initial, increment = fx.dag_run_batches(spark)
     write_table_append(load_report_table(initial, None, "rpt_dag_run").loaded, target)
+    landing = write_json_landing(increment, str(tmp_path / "landing"), "c00001", n_files=3)
+    before = set(os.listdir(target))
 
     existing, read_jobs = jobs_started(lambda: read_parquet_table(spark, target))
     wm, wm_jobs = jobs_started(lambda: watermark(existing, "start_date"))
@@ -126,10 +132,23 @@ def test_incremental_parquet_load_runs_only_data_jobs(spark, tmp_path, jobs_star
     assert (read_jobs, wm_jobs) == (0, 0)
     assert load_jobs <= 2
     assert wm == fx.ts(2)
+    new = [f for f in set(os.listdir(target)) - before if f.startswith("part-")]
+    assert len(new) == 1, new
+    md = pq.ParquetFile(os.path.join(target, new[0])).metadata
+    assert {md.row_group(0).column(i).compression for i in range(md.num_columns)} == {"ZSTD"}
     got = read_parquet_table(spark, target).collect()
     assert sorted((r.dag_id, r.dag_run_id) for r in got) == [
         ("etl_a", "run1"), ("etl_a", "run2"), ("etl_a", "run3"), ("etl_b", "run1"),
     ]
+
+    # rpt_task_instance has no PK, so its load has no shuffle and the
+    # append's tasks are the landing's files
+    ti = str(tmp_path / "rpt_task_instance")
+    batch, _ = fx.task_instance_batches(spark)
+    ti_landing = write_json_landing(batch, str(tmp_path / "ti_landing"), "c00001")
+    assert len([f for f in os.listdir(ti_landing) if f.startswith("part-")]) >= 2
+    write_table_append(load_report_table(batch, None, "rpt_task_instance").loaded, ti)
+    assert len([f for f in os.listdir(ti) if f.startswith("part-")]) == 1
 
 
 #: Py4J commands that building one incremental ``load_report_table`` may

@@ -128,11 +128,26 @@ def test_json_landing_reads_back_every_exact_type(spark, tmp_path):
 
 
 def test_append_sink_accumulates(spark, tmp_path):
+    """Appends accumulate. A frame whose size the plan does not know (an
+    in-memory frame, a range, or either unioned with a file read) keeps
+    its partitioning: one file per non-empty partition."""
+    import glob
+
     df = spark.createDataFrame([(1,)], "x int")
     target = str(tmp_path / "warehouse")
     write_table_append(df, target)
     write_table_append(df, target)
     assert spark.read.parquet(target).count() == 2
+
+    wide = spark.range(0, 8, 1, 4)  # four partitions of two rows each
+    write_table_append(wide, f"{tmp_path}/wide")
+    mixed = wide.unionByName(spark.read.parquet(f"{tmp_path}/wide"))
+    write_table_append(mixed, f"{tmp_path}/mixed")
+    counts = {
+        name: (len(glob.glob(f"{tmp_path}/{name}/part-*.parquet")), frame.rdd.getNumPartitions())
+        for name, frame in [("wide", wide), ("mixed", mixed)]
+    }
+    assert counts["wide"] == (4, 4) and counts["mixed"][0] == counts["mixed"][1] > 4, counts
 
 
 def test_rewritten_parquet_file_gets_a_fresh_footer(spark, tmp_path):
@@ -253,6 +268,29 @@ def test_footer_schema_equals_spark_inference(spark, tmp_path):
     )
     assert _declared(i96) is None
     assert read_parquet_table(spark, i96).schema == spark.read.parquet(i96).schema
+
+
+#: Py4J commands one ``load_table`` may send once its footers are cached;
+#: like the job budgets, only lowered
+LOAD_TABLE_PY4J_BUDGET = 40
+
+
+def test_load_table_casts_only_differing_columns(spark, py4j_commands):
+    """``load_table`` gives the catalog schema and sends at most
+    LOAD_TABLE_PY4J_BUDGET Py4J commands per table: a table whose footer
+    types match the catalog gets no projection, and the rest get one
+    SQL-string projection casting only the columns that differ."""
+    from cs_tutorial_reporting_spark.schemas import STAR_TABLES
+    from cs_tutorial_reporting_spark.sources.readers import load_table, read_parquet_table
+
+    sent = {}
+    for name in STAR:
+        load_table(spark, SF_SMOKE, name)  # the footer cache, filled
+        df, sent[name] = py4j_commands(lambda: load_table(spark, SF_SMOKE, name))
+        assert df.schema.simpleString() == STAR_TABLES[name].simpleString(), name
+        if read_parquet_table(spark, f"{SF_SMOKE}/{name}.parquet").schema == STAR_TABLES[name]:
+            assert df._jdf.queryExecution().analyzed().nodeName() == "LogicalRelation", name
+    assert max(sent.values()) <= LOAD_TABLE_PY4J_BUDGET, sent
 
 
 def test_declared_reads_start_no_jobs_and_leave_conf_alone(spark, tmp_path, jobs_started):

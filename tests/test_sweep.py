@@ -121,6 +121,41 @@ def test_compare_lists_every_mismatch():
     assert sweep.compare(unsortable, unsortable)[0].startswith("canonicalizer crash")
 
 
+def test_formatted_plan_masks_process_counters():
+    """Expression, plan and RDD ids are renumbered in order of first
+    appearance, an RDD's call site is dropped and a temp directory's
+    random suffix is masked, so plans built at different counter states
+    print the same."""
+    import tempfile
+
+    class Plan:
+        def __init__(self, text):
+            self.text = text
+
+        def explain(self, mode):
+            print(self.text)
+
+    tmp = tempfile.gettempdir()
+    a = (f"[a#7L, b#9, a#7L] plan_id=12 MapPartitionsRDD[30] at localCheckpoint at "
+         f"NativeMethodAccessorImpl.java:0, ExistingRDD [file:{tmp}/ivf_layout_zo1hmt79]")
+    b = (f"[a#41L, b#40, a#41L] plan_id=3 MapPartitionsRDD[2] at localCheckpoint at "
+         f"<unknown>:0, ExistingRDD [file:{tmp}/ivf_layout_k_2qx0ab]")
+    want = (f"[a#0L, b#1, a#0L] plan_id=0 MapPartitionsRDD[0] at localCheckpoint, "
+            f"ExistingRDD [file:{tmp}/ivf_layout_*]\n")
+    assert sweep.formatted_plan(Plan(a)) == sweep.formatted_plan(Plan(b)) == want
+
+
+def test_formatted_plan_of_one_ann_query_captures_identically(spark):
+    """Building an ANN query runs jobs (the centroid collect, the layout
+    write) that advance the id counters, yet two captures are equal."""
+    from cs_tutorial_reporting_spark.queries import QUERIES
+
+    fn = QUERIES["similarity_topk_ivf_pruned"].fn
+    first, second = (sweep.formatted_plan(fn(spark, SF_SMOKE)) for _ in range(2))
+    assert first == second
+    assert "ivf_layout_*" in first
+
+
 def test_board_names_are_the_registered_board_rows():
     from cs_tutorial_reporting_spark.queries import QUERIES
 

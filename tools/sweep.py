@@ -21,7 +21,9 @@ import datetime as dt
 import io
 import math
 import os
+import re
 import sys
+import tempfile
 import time
 from contextlib import redirect_stdout
 
@@ -122,12 +124,29 @@ def best_of(rep, reps: int, extra: int) -> tuple[dict[str, float], int]:
     return {row: round(sec, 3) for row, sec in best.items()}, i - reps
 
 
+#: process-global counters a plan prints (expression ids, exchange plan
+#: ids, RDD ids); jobs run while a query is built advance them
+_COUNTERS = (r"(?<=#)\d+", r"(?<=plan_id=)\d+", r"(?<=RDD\[)\d+(?=\])")
+
+
 def formatted_plan(df) -> str:
-    """``df.explain("formatted")`` as a string."""
+    """``df.explain("formatted")`` as a string that two captures of the
+    same plan tree share byte for byte: each of ``_COUNTERS`` is
+    renumbered from 0 in order of first appearance, an RDD's call site is
+    dropped, and the random suffix of a ``tempfile.mkdtemp`` directory is
+    masked as ``*``."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    text = buf.getvalue()
+    for pattern in _COUNTERS:
+        ids: dict[str, int] = {}
+        text = re.sub(pattern, lambda m: str(ids.setdefault(m[0], len(ids))), text)
+    # the JVM frame an RDD was made at reads differently once reflection
+    # inflates the Py4J accessor
+    text = re.sub(r"(RDD\[\d+\] at \w+) at [^,\n]+", r"\1", text)
+    temp = re.escape(tempfile.gettempdir())
+    return re.sub(rf"(?<={temp}/)(\w+_)\w{{8}}(?!\w)", r"\1*", text)
 
 
 TABLES = (
